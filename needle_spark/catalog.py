@@ -37,10 +37,18 @@ CDC log is an ordinary table Structured Streaming can tail.
 Insert validation mirrors the reference's contract
 (tests/edge_cases.rs:173-215): dimension mismatch, NaN/Inf, and
 duplicate ids are rejected.
+
+Spark jobs per insert: df() starts none (each object's schema comes
+from its Parquet footer), the batch is checked and counted in ONE action
+under the commit lock (dimension, NaN/Inf, duplicate-in-batch and
+existing-id counts together), then the segment write, the CDC
+sequencing and the CDC append.  The existing-id check still joins the
+batch against the whole live view, so an insert is O(collection).
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
@@ -53,6 +61,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from needle_spark.filters import compile_filter
 from needle_spark.functions.sequence import (
@@ -68,6 +77,25 @@ CDC_SCHEMA = (
 
 class CollectionError(ValueError):
     pass
+
+
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """Spark's schema of a Parquet directory, read on the driver from
+    one part file's footer (Spark writes it there, already nullable,
+    which is what inference returns).  None when there is no part file
+    or the footer has no Spark schema (e.g. written by pyarrow)."""
+    import pyarrow.parquet as pq
+
+    parts = sorted(glob.glob(os.path.join(path, "part-*.parquet")))
+    if not parts:
+        return None
+    raw = (pq.read_schema(parts[0]).metadata or {}).get(_SPARK_ROW_METADATA)
+    if raw is None:
+        return None
+    return StructType.fromJson(json.loads(raw))
 
 
 def _utcnow_ms() -> int:
@@ -209,19 +237,23 @@ class Collection:
         self,
         ops: list[tuple[str, DataFrame]],
         events: list[DataFrame],
-        n_events: int,
+        n_events: int | None,
         now_ms: int | None,
         new_entry: dict | None = None,
         event_counts: list[int] | None = None,
         precommit=None,
-    ) -> None:
-        """Apply staged ops as one new version.
+    ) -> int:
+        """Apply staged ops as one new version; returns n_events.
 
         ops: ordered ("add", rows) / ("del", id_df) — adds become
         segments, dels become tombstones masking every EARLIER segment.
         events: per-op CDC event DataFrames, sequenced in op order.
         event_counts: per-event-DF row counts (defaults to [n_events]
         for the single-event common case).
+        precommit: optional check run under the lock against the
+        refreshed manifest; when n_events is None its return value is
+        the event count (insert counts its batch in the same action
+        that validates it).
         new_entry: manifest-only commits (restore/clear/compact) pass
         the full {"segments", "tombstones"} entry instead of ops.
 
@@ -255,14 +287,17 @@ class Collection:
             self._manifest = fresh
             if precommit is not None:
                 # state-dependent validation (e.g. insert's existing-id
-                # check) re-runs HERE against the refreshed view — the
+                # check) runs HERE against the refreshed view — a
                 # pre-lock check alone is a TOCTOU against concurrent
                 # writers from other instances
-                precommit()
+                counted = precommit()
+                if n_events is None:
+                    n_events = counted
             entry = self._commit_locked(ops, events, n_events, now_ms,
                                         new_entry, event_counts)
         # outside the lock: auto-compaction re-enters it via compact()
         self._maybe_auto_compact(entry, manifest_only=new_entry is not None)
+        return n_events
 
     def _commit_lock(self):
         """Cross-instance commit serialization: an exclusive flock on
@@ -427,12 +462,9 @@ class Collection:
         segs, tombs = entry["segments"], entry["tombstones"]
         ic = self.id_col
         parts = []
-        tomb_dfs = [
-            (self.spark.read.parquet(os.path.join(self.path, t)), pos)
-            for t, pos in tombs
-        ]
+        tomb_dfs = [(self._read_object(t), pos) for t, pos in tombs]
         for i, s in enumerate(segs):
-            d = self.spark.read.parquet(os.path.join(self.path, s))
+            d = self._read_object(s)
             cover = [t for t, pos in tomb_dfs if pos > i]
             if cover:
                 mask = reduce(lambda a, b: a.unionByName(b), cover).distinct()
@@ -448,6 +480,18 @@ class Collection:
                 now = int(time.time())
             out = ttl_filter(out, now)
         return out
+
+    def _read_object(self, name: str) -> DataFrame:
+        """Read one seg-/del- object with the schema Spark stored in its
+        Parquet footer, so the read starts no schema-inference job (one
+        per object otherwise, and df() reads every object).  Objects
+        whose footer carries no Spark schema keep inference."""
+        path = os.path.join(self.path, name)
+        schema = _footer_schema(path)
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(path)
 
     @property
     def version(self) -> int:
@@ -549,7 +593,7 @@ class Collection:
                     "versioned": 0, "checked": 0, "outcomes": []}
         rows = self._stamp_ttl(rows, now_ms).persist()
         try:
-            self._validate_new(rows, check_dup_existing=False)
+            self._validate_new(rows)
             res = apply_insert_dedup(
                 self.df(), rows, cfg, id_col=self.id_col,
                 vector_col=self.vector_col,
@@ -645,26 +689,40 @@ class Collection:
                     raise CollectionError(f"{nulls} null values in required field {fname!r}")
 
     # -------------------------------------------------------- validate --
-    def _validate_new(self, rows: DataFrame, check_dup_existing: bool = True) -> None:
+    def _validate_new(self, rows: DataFrame, live: DataFrame | None = None,
+                      dims: int | None = None) -> int:
+        """Check a batch in ONE action and return its row count:
+        dimension (against `dims`, default the manifest's), NaN/Inf and
+        duplicate-in-batch sums, plus, when `live` (the collection's
+        current view) is given, the number of batch ids already in it.
+        The existing-id count is the batch ids inner-joined with the
+        live ids, so the planner can broadcast the small batch (a rows
+        LEFT JOIN live plan could only broadcast the collection side)."""
         self._validate_schema(rows)
-        vc, ic, dims = self.vector_col, self.id_col, self.dims
-        bad = rows.select(
+        vc, ic = self.vector_col, self.id_col
+        dims = self.dims if dims is None else dims
+        checks = rows.select(
             F.sum((F.size(vc) != dims).cast("int")).alias("dim"),
             F.sum(
                 F.exists(vc, lambda x: F.isnan(x) | (F.abs(x) == float("inf"))).cast("int")
             ).alias("nonfinite"),
             (F.count(F.lit(1)) - F.countDistinct(ic)).alias("dup_in_batch"),
-        ).first()
+            F.count(F.lit(1)).alias("n"),
+        )
+        if live is not None:
+            checks = checks.crossJoin(
+                rows.select(ic).join(live.select(ic), ic, "inner")
+                .agg(F.count(F.lit(1)).alias("existing")))
+        bad = checks.first()
         if bad["dim"]:
             raise CollectionError(f"dimension mismatch: expected {dims}")
         if bad["nonfinite"]:
             raise CollectionError("vector contains NaN or Inf")
         if bad["dup_in_batch"]:
             raise CollectionError("duplicate ids within batch")
-        if check_dup_existing:
-            dups = rows.join(self.df().select(ic), ic, "inner").count()
-            if dups:
-                raise CollectionError(f"{dups} ids already exist")
+        if live is not None and bad["existing"]:
+            raise CollectionError(f"{bad['existing']} ids already exist")
+        return bad["n"]
 
     # -------------------------------------------------------- mutate --
     def _stamp_ttl(self, rows: DataFrame, now_ms: int | None) -> DataFrame:
@@ -692,23 +750,20 @@ class Collection:
             return out["inserted"] + out["versioned"]
         rows = self._stamp_ttl(rows, now_ms).persist()
         try:
-            # state-independent checks up front; the existing-id check
-            # re-runs inside the commit lock against the REFRESHED view
-            # (another instance may have inserted the id meanwhile)
-            self._validate_new(rows, check_dup_existing=False)
-            n = rows.count()
-
-            def check_existing():
-                ic = self.id_col
-                dups = rows.join(self.df().select(ic), ic, "inner").count()
-                if dups:
-                    raise CollectionError(f"{dups} ids already exist")
-
-            self._commit([("add", rows)], [self._event_df(rows, "insert")],
-                         n, now_ms, precommit=check_existing)
+            # every check runs as ONE action inside the commit lock:
+            # the existing-id check must see the REFRESHED view (another
+            # instance may have inserted the id meanwhile), so it was
+            # already an O(collection) scan under the lock; folding the
+            # batch checks into the same action adds no lock time and
+            # saves their separate jobs.  The batch is checked against
+            # the dims this instance was opened with, like the TTL stamp.
+            dims = self.dims
+            return self._commit(
+                [("add", rows)], [self._event_df(rows, "insert")], None,
+                now_ms, precommit=lambda: self._validate_new(
+                    rows, live=self.df(), dims=dims))
         finally:
             rows.unpersist()
-        return n
 
     def upsert(self, rows: DataFrame, now_ms: int | None = None) -> int:
         """MERGE semantics (mutations.rs upsert): tombstone matching ids
@@ -716,8 +771,7 @@ class Collection:
         rewrite of existing data."""
         rows = self._stamp_ttl(rows, now_ms).persist()
         try:
-            self._validate_new(rows, check_dup_existing=False)
-            n = rows.count()
+            n = self._validate_new(rows)
             self._commit(
                 [("del", rows.select(self.id_col)), ("add", rows)],
                 [self._event_df(rows, "upsert")],
@@ -1165,14 +1219,14 @@ class Transaction:
         # same contract as Collection.insert: dims/NaN/schema checks and
         # the default-TTL stamp apply to transactional inserts too
         rows = self.coll._stamp_ttl(rows, None)
-        self.coll._validate_new(rows, check_dup_existing=False)
+        n = self.coll._validate_new(rows)
         ic = self.coll.id_col
         if self._df.join(rows.select(ic), ic, "inner").count():
             raise CollectionError("duplicate ids in transaction insert")
         self._df = self._df.unionByName(rows, allowMissingColumns=True)
         self._ops.append(("add", rows))
         self._events.append(self.coll._event_df(rows, "insert"))
-        self._event_counts.append(rows.count())
+        self._event_counts.append(n)
         return self
 
     def delete(self, flt: dict) -> "Transaction":

@@ -241,7 +241,10 @@ def poisson_load_run(searcher: MicroBatchSearcher, queries,
                      qps: float, k: int = 10, seed: int = 7,
                      warmup: int = 8) -> dict:
     """Open-loop Poisson load driver with per-request completion
-    stamps (done-callback wall clock), the honest sojourn measure."""
+    stamps (done-callback wall clock), the honest sojourn measure:
+    each request is timed from its DUE time on the Poisson schedule,
+    so a stall (a slow submit, a late sleep) is charged to every
+    request queued behind it, not only to the one that stalled."""
     import numpy as np
 
     rng = np.random.default_rng(seed)
@@ -250,7 +253,7 @@ def poisson_load_run(searcher: MicroBatchSearcher, queries,
     for w in range(min(warmup, n)):
         searcher.search(queries[w % n], k=k)
     done_at = [0.0] * n
-    sent_at = [0.0] * n
+    due_at = [0.0] * n
     futs = []
 
     def _stamp(i):
@@ -265,7 +268,7 @@ def poisson_load_run(searcher: MicroBatchSearcher, queries,
         now = time.perf_counter()
         if next_t > now:
             time.sleep(next_t - now)
-        sent_at[i] = time.perf_counter()
+        due_at[i] = next_t
         f = searcher.submit(queries[i], k=k)
         f.add_done_callback(_stamp(i))
         futs.append(f)
@@ -273,7 +276,7 @@ def poisson_load_run(searcher: MicroBatchSearcher, queries,
         f.result(timeout=120.0)
     wall = time.perf_counter() - t_start
     lat_ms = np.asarray(
-        [(done_at[i] - sent_at[i]) * 1000.0 for i in range(n)])
+        [(done_at[i] - due_at[i]) * 1000.0 for i in range(n)])
     lat_ms.sort()
     bs = searcher.batch_sizes[-max(1, len(searcher.batch_sizes)):]
     return {

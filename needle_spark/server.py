@@ -45,6 +45,34 @@ DEFAULT_K = 10  # server/types.rs:222 default_k
 
 META_SCHEMA = "id string, vector array<float>, metadata string"
 
+# a pinned meta field whose get_json_object("$.<field>") path is a plain
+# key lookup ('.', '[' and '*' are JSON-path syntax)
+_PLAIN_META_KEY = re.compile(r"[\w-]+")
+
+
+def _pinned_values(payload: list[dict], fields: list[str]) -> dict | None:
+    """Per pinned field, the values get_json_object("metadata",
+    "$.<field>") gives for the payload rows, keyed by the index's
+    `__mf_<field>` column: the string itself, or None for a missing
+    key, a JSON null or metadata that is not an object.  None when a
+    value is not a string (Spark renders those as JSON text) or a field
+    name is not a plain key."""
+    import numpy as np
+
+    out = {}
+    for f in fields:
+        if not _PLAIN_META_KEY.fullmatch(f):
+            return None
+        vals = []
+        for p in payload:
+            meta = p.get("metadata")
+            v = meta.get(f) if isinstance(meta, dict) else None
+            if v is not None and not isinstance(v, str):
+                return None
+            vals.append(v)
+        out[f"__mf_{f}"] = np.asarray(vals, dtype=object)
+    return out
+
 # operation classes for the central dispatch observability
 _QUERY_OPS = frozenset({
     "search", "batch_search", "search_text", "radius", "metadata_query",
@@ -403,7 +431,7 @@ class RestServer:
     def _coll(self, name: str) -> Collection:
         return self.db.collection(name)
 
-    def _rows_df(self, coll: Collection, vectors: list[dict]):
+    def _rows_df(self, vectors: list[dict]):
         rows = []
         for v in vectors:
             if "id" not in v or "vector" not in v:
@@ -485,10 +513,10 @@ class RestServer:
 
     def insert_vector(self, m, b, q) -> dict:
         c = self._coll(m.group(1))
-        rows = self._rows_df(c, [b])
+        rows = self._rows_df([b])
         with self._mutate:
             n = c.insert(rows)
-            self._index_add(m.group(1), rows, payload=[b])
+            self._index_add(m.group(1), [b])
         return {"inserted": n, "id": str(b.get("id"))}
 
     def batch_insert(self, m, b, q) -> dict:
@@ -496,19 +524,19 @@ class RestServer:
         vectors = b.get("vectors")
         if not isinstance(vectors, list) or not vectors:
             raise _bad("'vectors' must be a non-empty list")
-        rows = self._rows_df(c, vectors)
+        rows = self._rows_df(vectors)
         with self._mutate:
             n = c.insert(rows)
-            self._index_add(m.group(1), rows, payload=vectors)
+            self._index_add(m.group(1), vectors)
         return {"inserted": n}
 
     def upsert_vector(self, m, b, q) -> dict:
         c = self._coll(m.group(1))
-        rows = self._rows_df(c, [b])
+        rows = self._rows_df([b])
         with self._mutate:
             n = c.upsert(rows)
             # add()/add_local() mask stale copies (upsert semantics)
-            self._index_add(m.group(1), rows, payload=[b])
+            self._index_add(m.group(1), [b])
         return {"upserted": n, "id": str(b.get("id"))}
 
     def batch_delete(self, m, b, q) -> dict:
@@ -566,10 +594,10 @@ class RestServer:
             if n and self._index_fields.get(m.group(1)):
                 # pinned meta fields now disagree with the collection:
                 # re-add the row so the serving index upserts the fresh
-                # values (add() masks the stale copy)
-                self._index_add(m.group(1), self._rows_df(c, [{
+                # values (add_local()/add() mask the stale copy)
+                self._index_add(m.group(1), [{
                     "id": m.group(2), "vector": list(row["vector"]),
-                    "metadata": merged}]))
+                    "metadata": merged}])
         return {"updated": n, "id": m.group(2)}
 
     def get_vector(self, m, b, q) -> dict:
@@ -1141,28 +1169,30 @@ class RestServer:
                 entry[0].unpersist()
         return {"dropped": entry is not None}
 
-    def _index_add(self, name: str, rows_df, payload: list | None = None) -> None:
+    def _index_add(self, name: str, payload: list[dict]) -> None:
+        """Add just-committed rows to the serving index from the request
+        body, which already carries the raw vectors and metadata: the
+        index encodes them in-process (numpy encode + WAL append, no
+        Spark job), pinned meta fields included.  A pinned value that
+        is not a string (or a field name that is a JSON path) goes
+        through the DataFrame path instead, so its value is exactly the
+        get_json_object text the index was built with."""
         entry = self._indexes.get(name)
         if entry is None:
             return
         idx = entry[0]
         fields = self._index_fields.get(name, [])
-        # driver-local fast path: the request body already carries the
-        # raw vectors, so the serving index ingests them in-process
-        # (numpy encode + WAL append — no per-request Spark encode
-        # job).  Pinned meta fields fall back to the DataFrame path so
-        # their values go through the same get_json_object extraction
-        # the index was built with.
-        if (payload is not None and not fields
-                and idx._segments is not None
+        metas = _pinned_values(payload, fields)
+        if (metas is not None and idx._segments is not None
                 and all(isinstance(p.get("vector"), list) for p in payload)):
             import numpy as np
 
             ids = [str(p.get("id")) for p in payload]
             V = np.asarray([p["vector"] for p in payload],
                            dtype=np.float32)
-            idx.add_local(ids, V)
+            idx.add_local(ids, V, metas=metas)
             return
+        rows_df = self._rows_df(payload)
         for f in fields:
             rows_df = rows_df.withColumn(
                 f"__mf_{f}",
@@ -1227,10 +1257,10 @@ class RestServer:
     def insert_text(self, m, b, q) -> dict:
         c = self._coll(m.group(1))
         trows = self._text_rows(c, [b])
-        rows = self._rows_df(c, trows)
+        rows = self._rows_df(trows)
         with self._mutate:
             n = c.insert(rows)
-            self._index_add(m.group(1), rows, payload=trows)
+            self._index_add(m.group(1), trows)
         return {"inserted": n, "id": str(b.get("id"))}
 
     def batch_insert_text(self, m, b, q) -> dict:
@@ -1239,10 +1269,10 @@ class RestServer:
         if not isinstance(texts, list) or not texts:
             raise _bad("'texts' must be a non-empty list")
         trows = self._text_rows(c, texts)
-        rows = self._rows_df(c, trows)
+        rows = self._rows_df(trows)
         with self._mutate:
             n = c.insert(rows)
-            self._index_add(m.group(1), rows, payload=trows)
+            self._index_add(m.group(1), trows)
         return {"inserted": n}
 
     def search_text(self, m, b, q) -> dict:
@@ -1723,10 +1753,10 @@ class RestServer:
                 good.append(v)
         inserted = 0
         if good:
-            rows = self._rows_df(c, good)
+            rows = self._rows_df(good)
             with self._mutate:
                 inserted = c.upsert(rows)
-                self._index_add(m.group(1), rows, payload=good)
+                self._index_add(m.group(1), good)
         size = c.count()
         return {"accepted": inserted, "total": len(vectors),
                 "errors": errors, "sequence_id": b.get("sequence_id"),
@@ -1741,10 +1771,10 @@ class RestServer:
         c = self._coll(m.group(1))
         if not b.get("id") or not b.get("text"):
             raise _bad("'id' and 'text' required")
+        trows = self._text_rows(c, [b])
         with self._mutate:
-            rows = self._rows_df(c, self._text_rows(c, [b]))
-            c.insert(rows)
-            self._index_add(m.group(1), rows)
+            c.insert(self._rows_df(trows))
+            self._index_add(m.group(1), trows)
         return {"inserted": str(b["id"])}
 
     # -- diffs (handlers/admin.rs:323-344, 414-480) --
@@ -1846,11 +1876,10 @@ class RestServer:
         meta["_memory_timestamp"] = int(_time.time() * 1000)
         if b.get("session_id"):
             meta["_memory_session"] = str(b["session_id"])
-        rows = self._rows_df(c, [{"id": memory_id, "vector": vec,
-                                  "metadata": meta}])
+        payload = [{"id": memory_id, "vector": vec, "metadata": meta}]
         with self._mutate:
-            c.insert(rows)
-            self._index_add(m.group(1), rows)
+            c.insert(self._rows_df(payload))
+            self._index_add(m.group(1), payload)
         return {"stored": True, "memory_id": memory_id, "tier": tier,
                 "importance": importance}
 

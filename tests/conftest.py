@@ -1,4 +1,7 @@
 import os
+import uuid
+from contextlib import contextmanager
+from types import SimpleNamespace
 
 import pytest
 
@@ -20,6 +23,34 @@ def spark():
     # caught it).  Engine-internal hot sites are converted individually
     # instead (sync._record_one, crdt.op_log_df).
     yield s
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """Count the Spark jobs a block starts in the calling thread:
+
+        with spark_jobs() as jobs:
+            ...
+        assert jobs.n == 0
+
+    The block runs in a fresh job group; on exit the listener bus is
+    drained and the group's jobs are counted through statusTracker."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def count():
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        out = SimpleNamespace(n=None)
+        sc.setJobGroup(group, "spark_jobs fixture")
+        try:
+            yield out
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            out.n = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

@@ -2,6 +2,7 @@
 amortize the flat tier's DRAM pass through one batch kernel call."""
 
 import threading
+import time
 
 import numpy as np
 import pytest
@@ -97,6 +98,30 @@ def test_poisson_load_run_shape(flat_idx):
         assert rep["p50_ms"] <= rep["p99_ms"]
         assert rep["mean_batch"] >= 1.0
         assert rep["achieved_qps"] > 0
+
+        class StallOnce:
+            """Delegates to the real front; the 10th submit blocks."""
+
+            def __init__(self, inner, at=10, stall_s=0.4):
+                self.inner, self.at, self.stall_s = inner, at, stall_s
+                self.calls = 0
+
+            def __getattr__(self, name):
+                return getattr(self.inner, name)
+
+            def submit(self, q, k=10):
+                self.calls += 1
+                if self.calls == self.at:
+                    time.sleep(self.stall_s)
+                return self.inner.submit(q, k=k)
+
+        # the 50 requests due after the stalled one all fall due within
+        # ~0.1 s at 500/s, i.e. while submit is blocked: timed from
+        # their due time they carry most of the 0.4 s stall, so it
+        # lands in the median, not only in the one stalled request
+        rep = poisson_load_run(StallOnce(mb), qs, qps=500.0, k=10,
+                               warmup=4)
+        assert rep["p50_ms"] >= 200.0, rep
     finally:
         mb.close()
 
