@@ -1049,7 +1049,9 @@ def main() -> None:
     # rerun overwrote BENCH_LOCAL.json and destroyed the 32-core
     # per-query artifact — the per-CPU file makes that impossible).
     _here = os.path.dirname(os.path.abspath(__file__))
-    _cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # unset SPARK_GRAFT_CPUS: label the file with the host's core count,
+    # so a run on another host never overwrites another count's file
+    _cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
     _payload = json.dumps(result) + "\n"
     with open(os.path.join(_here, "BENCH_LOCAL.json"), "w") as f:
         f.write(_payload)

@@ -14,9 +14,13 @@ unstemmed pipeline, stemming is exercised by unit tests.
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from needle_spark.functions.distance import col_sql
 
 # ported verbatim from hybrid.rs:238-247 (duplicates in the source
 # collapse in the set)
@@ -28,6 +32,8 @@ STOP_WORDS: tuple[str, ...] = (
 )
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
+# every token the tokenizer can emit matches this
+TOKEN_RE = re.compile("[a-z0-9]*")
 
 
 def let_expr(bound: Column, body) -> Column:
@@ -44,22 +50,35 @@ def let_expr(bound: Column, body) -> Column:
     return F.element_at(F.transform(F.array(bound), body), 1)
 
 
+def _tokenize_sql(expr: str, split_fn: str, filter_fn: str,
+                  stop_words: tuple[str, ...] | None, min_len: int) -> str:
+    """The tokenizer as SQL text, shared by the Spark and DuckDB twins.
+    Only stop words a token can equal ([a-z0-9]*) are kept, so nothing
+    but engine-safe text reaches the SQL."""
+    out = (f"{filter_fn}({split_fn}(lower({expr}), '{TOKEN_SPLIT_RE}'), "
+           f"t -> length(t) >= {int(min_len)})")
+    if stop_words:
+        # NOT IN over > 10 literals optimizes to an InSet hash lookup
+        # (O(1) per token) vs the O(|stop words|) array_contains linear
+        # probe — ~25% off the whole tokenize pass, value-identical
+        sw = sorted(w for w in set(stop_words) if TOKEN_RE.fullmatch(w))
+        if sw:
+            lst = ", ".join(f"'{w}'" for w in sw)
+            out = f"{filter_fn}({out}, t -> t NOT IN ({lst}))"
+    return out
+
+
 def tokenize_expr(
     col: Column | str,
     stop_words: tuple[str, ...] | None = STOP_WORDS,
     min_len: int = 2,
 ) -> Column:
     """tokens(text) as array<string>, matching hybrid.rs tokenize()
-    (sans stemming).  Pure built-in functions -> whole plan stays JVM-side."""
-    c = F.col(col) if isinstance(col, str) else col
-    toks = F.split(F.lower(c), TOKEN_SPLIT_RE)
-    toks = F.filter(toks, lambda t: F.length(t) >= min_len)
-    if stop_words:
-        # isin compiles to an InSet hash lookup (O(1) per token) vs the
-        # O(|stop words|) array_contains linear probe — ~25% off the
-        # whole tokenize pass, value-identical (A/B exceptAll-checked)
-        toks = F.filter(toks, lambda t: ~t.isin(*sorted(set(stop_words))))
-    return toks
+    (sans stemming).  Pure built-in functions -> whole plan stays
+    JVM-side; built as one SQL string -> one JVM call.  `col` is a
+    column name or a plain `F.col` reference."""
+    return F.expr(_tokenize_sql(col_sql(col), "split", "filter",
+                                stop_words, min_len))
 
 
 def duckdb_tokenize_sql(
@@ -68,14 +87,8 @@ def duckdb_tokenize_sql(
     min_len: int = 2,
 ) -> str:
     """DuckDB twin of tokenize_expr for oracle queries."""
-    out = (
-        f"list_filter(string_split_regex(lower({expr}), '{TOKEN_SPLIT_RE}'), "
-        f"t -> length(t) >= {min_len})"
-    )
-    if stop_words:
-        lst = ", ".join(f"'{w}'" for w in sorted(set(stop_words)))
-        out = f"list_filter({out}, t -> t NOT IN ({lst}))"
-    return out
+    return _tokenize_sql(expr, "string_split_regex", "list_filter",
+                         stop_words, min_len)
 
 
 def tokenize_py(
@@ -84,8 +97,6 @@ def tokenize_py(
     min_len: int = 2,
 ) -> list[str]:
     """Driver-side tokenizer for (small) query strings — same semantics."""
-    import re
-
     sw = set(stop_words or ())
     toks = re.split(TOKEN_SPLIT_RE, text.lower())
     return [t for t in toks if len(t) >= min_len and t not in sw]

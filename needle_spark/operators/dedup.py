@@ -1150,8 +1150,11 @@ def srp_lsh_neardup_pairs(
                 "bucket": np.concatenate(out_bucket),
             })
 
-    banded = df.select(id_col, vector_col).mapInPandas(
-        signatures, band_schema)
+    # a null vector has no signature and pairs with nothing; the kernel
+    # needs every row of a batch to stack into one (n, d) matrix
+    banded = (df.select(id_col, vector_col)
+              .filter(F.col(vector_col).isNotNull())
+              .mapInPandas(signatures, band_schema))
     pairs = _pairs_from_banded(banded, id_col, max_bucket_size,
                                bucket_stats)
     # exact verification: role-explode + ONE join against the vector

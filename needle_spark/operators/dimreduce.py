@@ -32,10 +32,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from needle_spark.functions.distance import array_literal
+
 
 def _dot_expr(vec: Column, weights: list[float]) -> Column:
     """Fixed-order dot product of an array column with literal weights."""
-    w = F.array(*[F.lit(float(x)) for x in weights])
+    w = array_literal(weights)
     return F.aggregate(
         F.zip_with(vec, w, lambda x, y: x.cast("double") * y),
         F.lit(0.0),

@@ -43,6 +43,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from needle_spark.functions.distance import array_literal
+
 try:  # C-backed AEAD; the sandbox ships cryptography
     import cryptography.hazmat.primitives.ciphers.aead  # noqa: F401
     _HAVE_AEAD = True
@@ -356,7 +358,7 @@ class VectorEncryptor:
             raise EncryptionError("Searchable encryption not enabled")
         q = self._project(
             np.asarray(query, dtype=np.float32).reshape(1, -1))[0]
-        qarr = F.array(*[F.lit(float(x)) for x in q])
+        qarr = array_literal(q)
         dist = F.sqrt(F.aggregate(
             F.zip_with(F.col("search_embedding").cast("array<double>"), qarr,
                        lambda a, b: (a - b) * (a - b)),

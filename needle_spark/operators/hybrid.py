@@ -15,6 +15,15 @@ is a family of small aggregate DataFrames derived from one tokenize scan
 per-query scoring joins touch only the postings of the query's terms
 (predicate pushdown on `term`).  Rank fusion is two row_number windows
 over top-N candidate sets (tiny) and a full outer join on id.
+
+Driver cost: `bm25_scores` and `rrf_fuse` write their generated columns
+as Spark SQL text — the per-doc tf projection, the stats aggregate, the
+score, each ranked leg and the fused score are one `selectExpr` each,
+one JVM call apiece.  Built from Column objects, every `F.lit`, operator
+and lambda was its own py4j round trip (~1,100 for one BM25 score).
+The same rule as functions/distance.py applies to the text: identifiers
+in backticks, numbers as `repr(float) + "D"` (a bare `0.5` is DECIMAL),
+and query terms only as tokenizer output ([a-z0-9]+).
 """
 
 from __future__ import annotations
@@ -26,8 +35,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from needle_spark.session import materialize
+from needle_spark.functions.distance import col_sql, sql_double
 from needle_spark.functions.text import (
     STOP_WORDS,
+    TOKEN_RE,
     duckdb_tokenize_sql,
     porter_stem,
     stem_tokens_udf,
@@ -57,6 +68,23 @@ def _tokens(docs: DataFrame, id_col: str, text_col: str, stem: bool,
     if stem:
         out = out.withColumn("__toks", stem_tokens_udf()(F.col("__toks")))
     return out
+
+
+def _bm25_score_sql(terms: list[str], qcounts: Counter, k1: float,
+                    b: float) -> str:
+    """Sum over the query's distinct terms of idf * tf_norm * qcount,
+    read from the (__dl, __tf_i) per-doc and (__n, __avgdl, __df_i)
+    stats columns — hybrid.rs:368-380."""
+    lnorm = f"1.0D - {sql_double(b)} + {sql_double(b)} * `__dl` / `__avgdl`"
+    score = "0.0D"
+    for i, t in enumerate(terms):
+        tf, df = f"`__tf_{i}`", f"`__df_{i}`"
+        idf = f"ln((`__n` - {df} + 0.5D) / ({df} + 0.5D) + 1.0D)"
+        tf_norm = (f"({tf} * {sql_double(k1 + 1.0)}) "
+                   f"/ ({tf} + {sql_double(k1)} * ({lnorm}))")
+        score += (f" + CASE WHEN {tf} > 0 THEN {idf} * ({tf_norm}) * "
+                  f"{sql_double(qcounts[t])} ELSE 0.0D END")
+    return score
 
 
 def bm25_scores(
@@ -91,18 +119,18 @@ def bm25_scores(
 
     qcounts = Counter(q_terms)
     terms = sorted(qcounts)
-
-    def _count_eq(term: str):
-        return F.size(F.filter("__toks", lambda x: x == F.lit(term)))
+    # the terms are spliced into SQL text: tokenizer output only
+    bad = [t for t in terms if not TOKEN_RE.fullmatch(t)]
+    if bad:
+        raise ValueError(f"query terms outside [a-z0-9]+: {bad!r}")
+    idc = col_sql(id_col)
 
     toks = _tokens(docs, id_col, text_col, stem, stop_words)
-    per_doc = toks.select(
-        F.col(id_col),
-        F.size("__toks").cast("double").alias("__dl"),
-        *[
-            _count_eq(t).cast("double").alias(f"__tf_{i}")
-            for i, t in enumerate(terms)
-        ],
+    per_doc = toks.selectExpr(
+        idc,
+        "CAST(size(`__toks`) AS DOUBLE) AS `__dl`",
+        *[f"CAST(size(filter(`__toks`, x -> x = '{t}')) AS DOUBLE) AS `__tf_{i}`"
+          for i, t in enumerate(terms)],
     )
     # per_doc feeds BOTH the stats aggregate and the scoring scan; the
     # interpreted tokenize projection is the expensive part and would
@@ -116,32 +144,17 @@ def bm25_scores(
     # where a non-replicated local checkpoint of an O(corpus) frame
     # would make executor loss fatal.
     per_doc = materialize(per_doc, eager=False)
-    stats = per_doc.agg(
-        F.count(F.lit(1)).cast("double").alias("__n"),
-        (F.sum("__dl") / F.count(F.lit(1))).alias("__avgdl"),
-        *[
-            F.sum((F.col(f"__tf_{i}") > 0).cast("double")).alias(f"__df_{i}")
-            for i in range(len(terms))
-        ],
+    stats = per_doc.selectExpr(
+        "CAST(count(1) AS DOUBLE) AS `__n`",
+        "sum(`__dl`) / count(1) AS `__avgdl`",
+        *[f"sum(CAST(`__tf_{i}` > 0 AS DOUBLE)) AS `__df_{i}`"
+          for i in range(len(terms))],
     )
-
-    lnorm = F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("__dl") / F.col("__avgdl")
-    score = F.lit(0.0)
-    for i, t in enumerate(terms):
-        tf = F.col(f"__tf_{i}")
-        idf = F.log(
-            (F.col("__n") - F.col(f"__df_{i}") + 0.5)
-            / (F.col(f"__df_{i}") + 0.5) + 1.0
-        )
-        tf_norm = (tf * (k1 + 1.0)) / (tf + F.lit(k1) * lnorm)
-        score = score + F.when(
-            tf > 0, idf * tf_norm * F.lit(float(qcounts[t]))
-        ).otherwise(F.lit(0.0))
-
+    sc = col_sql(score_col)
     return (
         per_doc.crossJoin(F.broadcast(stats))
-        .select(F.col(id_col), score.alias(score_col))
-        .filter(F.col(score_col) > 0.0)
+        .selectExpr(idc, f"{_bm25_score_sql(terms, qcounts, k1, b)} AS {sc}")
+        .where(f"{sc} > 0.0D")
     )
 
 
@@ -400,30 +413,28 @@ def rrf_fuse(
     Output: (id, score, vector_score, bm25_score, vector_rank, bm25_rank),
     ordered by fused score desc then id.
     """
-    v_rank_w = Window.orderBy(F.col(distance_col).asc_nulls_last(),
-                              F.col(id_col).asc())
-    vr = vector_results.select(
-        F.col(id_col),
-        (F.lit(1.0) / (F.lit(1.0) + F.col(distance_col))).alias("vector_score"),
-        F.row_number().over(v_rank_w).cast("long").alias("vector_rank"),
+    idc, dc, sc = col_sql(id_col), col_sql(distance_col), col_sql(score_col)
+    vr = vector_results.selectExpr(
+        idc,
+        f"1.0D / (1.0D + {dc}) AS vector_score",
+        f"CAST(row_number() OVER (ORDER BY {dc} ASC NULLS LAST, {idc} ASC) "
+        "AS BIGINT) AS vector_rank",
     )
-    b_key = F.round(F.col(score_col), rounding) if rounding else F.col(score_col)
-    b_rank_w = Window.orderBy(b_key.desc(), F.col(id_col).asc())
-    br = bm25_results.select(
-        F.col(id_col),
-        F.col(score_col).alias("bm25_score"),
-        F.row_number().over(b_rank_w).cast("long").alias("bm25_rank"),
+    b_key = f"round({sc}, {int(rounding)})" if rounding else sc
+    br = bm25_results.selectExpr(
+        idc,
+        f"{sc} AS bm25_score",
+        f"CAST(row_number() OVER (ORDER BY {b_key} DESC, {idc} ASC) "
+        "AS BIGINT) AS bm25_rank",
     )
-    fused = vr.join(br, id_col, "full_outer").withColumn(
-        score_col,
-        F.coalesce(F.lit(vector_weight) / (F.lit(rrf_k) + F.col("vector_rank")), F.lit(0.0))
-        + F.coalesce(F.lit(bm25_weight) / (F.lit(rrf_k) + F.col("bm25_rank")), F.lit(0.0)),
+    fused = vr.join(br, id_col, "full_outer").selectExpr(
+        idc,
+        f"coalesce({sql_double(vector_weight)} / ({sql_double(rrf_k)} + vector_rank), 0.0D)"
+        f" + coalesce({sql_double(bm25_weight)} / ({sql_double(rrf_k)} + bm25_rank), 0.0D)"
+        f" AS {sc}",
+        "vector_score", "bm25_score", "vector_rank", "bm25_rank",
     )
-    return (
-        fused.select(id_col, score_col, "vector_score", "bm25_score", "vector_rank", "bm25_rank")
-        .orderBy(F.col(score_col).desc(), F.col(id_col).asc())
-        .limit(limit)
-    )
+    return fused.orderBy(F.desc(score_col), F.asc(id_col)).limit(limit)
 
 
 def hybrid_search(

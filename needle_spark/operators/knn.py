@@ -100,7 +100,7 @@ def knn(
     if pre is not None:
         out = out.filter(pre)
 
-    out = out.withColumn(distance_col, distance_expr(metric, F.col(vector_col), qv))
+    out = out.withColumn(distance_col, distance_expr(metric, vector_col, qv))
 
     if post_filter is not None:
         # post-filter semantics: global top-(k*factor) FIRST, then filter,
@@ -137,7 +137,7 @@ def radius_search(
     pre = _pred(df, filter, meta_col)
     if pre is not None:
         out = out.filter(pre)
-    out = out.withColumn(distance_col, distance_expr(metric, F.col(vector_col), qv))
+    out = out.withColumn(distance_col, distance_expr(metric, vector_col, qv))
     out = out.filter(F.col(distance_col) <= F.lit(float(radius)))
     out = out.orderBy(F.col(distance_col).asc(), F.col(id_col).asc())
     return out.limit(limit) if limit is not None else out
@@ -181,7 +181,7 @@ def batch_knn(
         F.when(~bad_q, F.col("__q_vec")).otherwise(F.raise_error(F.lit(
             "query vector is null or contains NaN/Inf"))))
     scored = d.join(F.broadcast(q)).withColumn(
-        distance_col, distance_expr(metric, F.col("__doc_vec"), F.col("__q_vec"))
+        distance_col, distance_expr(metric, "__doc_vec", "__q_vec")
     )
     w = Window.partitionBy(query_id_col).orderBy(
         F.col(distance_col).asc_nulls_last(), F.col(doc_id_col).asc()
@@ -215,7 +215,7 @@ def knn_after(
     pre = _pred(df, filter, meta_col)
     if pre is not None:
         out = out.filter(pre)
-    out = out.withColumn(distance_col, distance_expr(metric, F.col(vector_col), qv))
+    out = out.withColumn(distance_col, distance_expr(metric, vector_col, qv))
     after = (F.col(distance_col) > F.lit(float(cd))) | (
         (F.col(distance_col) == F.lit(float(cd))) & (F.col(id_col) > F.lit(cid))
     )

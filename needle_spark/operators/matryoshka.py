@@ -20,7 +20,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from needle_spark.functions.distance import distance_expr, l2_normalize_expr
+from needle_spark.functions.distance import (
+    col_sql,
+    distance_expr,
+    l2_normalize_sql,
+)
 
 STANDARD_TIERS = (64, 128, 256, 384, 512, 768, 1024)
 
@@ -28,8 +32,7 @@ STANDARD_TIERS = (64, 128, 256, 384, 512, 768, 1024)
 def truncate_expr(vec: Column | str, dim: int) -> Column:
     """Prefix-truncate to `dim` and L2-renormalize (matryoshka.rs
     truncate: MRL prefixes need renormalization to stay comparable)."""
-    c = F.col(vec) if isinstance(vec, str) else vec
-    return l2_normalize_expr(F.slice(c, 1, dim))
+    return F.expr(l2_normalize_sql(f"slice({col_sql(vec)}, 1, {int(dim)})"))
 
 
 def truncate_py(v, dim: int) -> list[float]:
@@ -80,10 +83,10 @@ def search_at_dimension(
 ) -> DataFrame:
     """Single-phase search on a renormalized dim-prefix: (id, distance)."""
     qd = truncate_py(query_vector, dim)
-    d = distance_expr(metric, truncate_expr(vector_col, dim),
-                      F.array(*[F.lit(float(x)) for x in qd]))
     return (
-        df.select(F.col(id_col), d.alias("distance"))
+        df.select(F.col(id_col), truncate_expr(vector_col, dim).alias("__trunc"))
+        .select(F.col(id_col),
+                distance_expr(metric, "__trunc", qd).alias("distance"))
         .orderBy(F.col("distance").asc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -114,18 +117,21 @@ def coarse_to_fine_search(
     qf = truncate_py(query_vector, fine) if fine < full else [
         float(x) for x in query_vector]
 
-    cd = distance_expr(metric, truncate_expr(vector_col, coarse_dim),
-                       F.array(*[F.lit(float(x)) for x in qc]))
     cand = (
-        df.select(F.col(id_col), F.col(vector_col), cd.alias("coarse_distance"))
+        df.select(F.col(id_col), F.col(vector_col),
+                  truncate_expr(vector_col, coarse_dim).alias("__trunc"))
+        .select(F.col(id_col), F.col(vector_col),
+                distance_expr(metric, "__trunc", qc).alias("coarse_distance"))
         .orderBy(F.col("coarse_distance").asc(), F.col(id_col).asc())
         .limit(k * candidate_multiplier)
     )
-    fvec = (truncate_expr(vector_col, fine) if fine < full
-            else F.col(vector_col))
-    fd = distance_expr(metric, fvec, F.array(*[F.lit(float(x)) for x in qf]))
+    fvec = vector_col
+    if fine < full:
+        cand = cand.withColumn("__trunc", truncate_expr(vector_col, fine))
+        fvec = "__trunc"
     return (
-        cand.select(F.col(id_col), "coarse_distance", fd.alias("distance"))
+        cand.select(F.col(id_col), "coarse_distance",
+                    distance_expr(metric, fvec, qf).alias("distance"))
         .orderBy(F.col("distance").asc(), F.col(id_col).asc())
         .limit(k)
     )

@@ -19,7 +19,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from needle_spark.functions.distance import dot_expr
+from needle_spark.functions.distance import array_literal, distance_expr
 
 
 def maxsim_scores(
@@ -40,14 +40,15 @@ def maxsim_scores(
     q = F.array(*[
         F.struct(
             F.lit(i).alias("qtok"),
-            F.array(*[F.lit(float(x)) for x in qv]).alias("qvec"),
+            array_literal(qv).alias("qvec"),
         )
         for i, qv in enumerate(query_vectors)
     ])
     exploded = doc_tokens.select(
         F.col(doc_id_col), F.col(vector_col), F.explode(q).alias("__q")
     )
-    sim = dot_expr(F.col(vector_col), F.col("__q.qvec"))
+    # the dot metric is -dot; negation is exact
+    sim = -distance_expr("dot", vector_col, "__q.qvec")
     per_qtok = (
         exploded.select(F.col(doc_id_col), F.col("__q.qtok").alias("qtok"), sim.alias("__sim"))
         .groupBy(doc_id_col, "qtok")

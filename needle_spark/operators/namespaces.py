@@ -162,8 +162,7 @@ def multimodal_fusion_search(
                 f"dimension mismatch for {field!r}: expected "
                 f"{fd.dimensions}, got {len(qv)}")
         d = F.when(F.col(field).isNotNull(),
-                   distance_expr(fd.metric, F.col(field),
-                                 [float(x) for x in qv]))
+                   distance_expr(fd.metric, field, [float(x) for x in qv]))
         dcols.append(d.alias(f"d_{field}"))
         weights.append(float(weight))
 
@@ -197,10 +196,11 @@ def multimodal_fusion_search(
         out = df
         for f in fields:
             out = out.filter(F.col(f).isNotNull())
-        out = out.select(
+        out = out.withColumn(
+            "__concat_v", F.concat(*[F.col(f) for f in fields])
+        ).select(
             id_col, *dcols,
-            distance_expr(fd0.metric, F.concat(*[F.col(f) for f in fields]),
-                          concat_q).alias("__concat_d"))
+            distance_expr(fd0.metric, "__concat_v", concat_q).alias("__concat_d"))
         score = F.col("__concat_d")
 
     present_arr = F.filter(

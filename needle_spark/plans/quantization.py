@@ -77,13 +77,13 @@ class SQ8:
         from needle_spark.operators.knn import knn, validate_query_vector
 
         qv = validate_query_vector(query_vector)
-        coarse_dist = distance_expr(metric, self.dequantize_expr(), qv)
         candidates = (
             (encoded_df.filter(filter) if filter is not None else encoded_df)
-            .withColumn("__coarse", coarse_dist)
+            .withColumn("__deq", self.dequantize_expr())
+            .withColumn("__coarse", distance_expr(metric, "__deq", qv))
             .orderBy(F.col("__coarse").asc(), F.col(id_col).asc())
             .limit(k * rescore_factor)
-            .drop("__coarse")
+            .drop("__deq", "__coarse")
         )
         return knn(candidates, qv, k=k, metric=metric,
                    vector_col=self.vector_col, id_col=id_col)

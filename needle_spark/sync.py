@@ -36,6 +36,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from needle_spark.functions.distance import array_literal
 from needle_spark.functions.sequence import distributed_row_number
 
 LAST_WRITE_WINS = "last_write_wins"
@@ -222,8 +223,7 @@ class SyncEngine:
         if vector is None:
             vec = F.lit(None).cast("array<float>")
         else:
-            vec = F.array(*[F.lit(float(x)) for x in vector]).cast(
-                "array<float>")
+            vec = array_literal(vector).cast("array<float>")
         stamped = self.spark.range(0, 1, 1, 1).select(
             F.lit(self.node_id).alias("node_id"),
             F.lit(base + 1).cast("long").alias("timestamp"),

@@ -53,6 +53,37 @@ def spark_jobs(spark):
     return count
 
 
+@pytest.fixture
+def py4j_calls(spark):
+    """Count the py4j commands the driver sends to the JVM in a block:
+
+        with py4j_calls() as calls:
+            ...
+        assert calls.n <= 200
+
+    Py4J's memory (garbage-collection) commands are not counted: Python
+    frees proxies of objects created before the block at any time."""
+    client = spark.sparkContext._gateway._gateway_client
+
+    @contextmanager
+    def count():
+        out = SimpleNamespace(n=0)
+        send = client.send_command
+
+        def counting(command, *args, **kwargs):
+            if not command.startswith("m\n"):
+                out.n += 1
+            return send(command, *args, **kwargs)
+
+        client.send_command = counting
+        try:
+            yield out
+        finally:
+            client.send_command = send
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

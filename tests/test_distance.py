@@ -96,3 +96,89 @@ def test_bitexact_vs_duckdb(spark, embeddings, metric):
     for (sid, sd), (did, dd) in zip([(r["vec_id"], r["d"]) for r in spark_rows], duck):
         assert sid == did
         assert sd == dd, f"{metric}: spark {sd!r} != duckdb {dd!r} (vec {sid})"
+
+
+# Exponent-form literals (repr prints them as 1e-05 / 3.4e+38), a zero
+# query, and rows with a zero vector and a null vector.
+_EXP_Q = [1e-05, 3.4e+38, -2.5e-07, 0.5]
+_ZERO_Q = [0.0, 0.0, 0.0, 0.0]
+_ROWS = [
+    (0, [0.25, -1.5, 3.0, 1e-3]),
+    (1, [0.0, 0.0, 0.0, 0.0]),
+    (2, None),
+    (3, [-7.0, 0.125, 2.0, -0.0]),
+    (4, [1e-05, 3.4e+38, -2.5e-07, 0.5]),
+]
+
+
+@pytest.mark.parametrize("metric", METRICS)
+def test_bitexact_vs_duckdb_edge_rows(spark, metric):
+    """distance_expr against its DuckDB twin, bit for bit: column vs
+    column and column vs literal, with exponent-form literals, zero
+    vectors and null vector rows.  DuckDB reads the query vectors as
+    DOUBLE[] columns — its float literals are not correctly rounded."""
+    import pyarrow as pa
+
+    ids = [i for i, _ in _ROWS]
+    vecs = [v for _, v in _ROWS]
+    tbl = pa.table({
+        "id": pa.array(ids, pa.int64()),
+        "a": pa.array(vecs, pa.list_(pa.float32())),
+        "b": pa.array(list(reversed(vecs)), pa.list_(pa.float32())),
+        "qe": pa.array([_EXP_Q] * len(ids), pa.list_(pa.float64())),
+        "qz": pa.array([_ZERO_Q] * len(ids), pa.list_(pa.float64())),
+    })
+    df = spark.createDataFrame(
+        [(i, v, w) for i, v, w in zip(ids, vecs, reversed(vecs))],
+        "id long, a array<float>, b array<float>")
+    got = df.select(
+        "id",
+        distance_expr(metric, "a", "b").alias("ab"),
+        distance_expr(metric, F.col("a"), _EXP_Q).alias("ae"),
+        distance_expr(metric, _EXP_Q, "a").alias("ea"),
+        distance_expr(metric, "a", _ZERO_Q).alias("az"),
+    ).orderBy("id").collect()
+    con = duckdb.connect()
+    con.register("t", tbl)
+    want = con.execute(
+        f"SELECT id, {duckdb_distance_sql(metric, 'a', 'b')}, "
+        f"{duckdb_distance_sql(metric, 'a', 'qe')}, "
+        f"{duckdb_distance_sql(metric, 'qe', 'a')}, "
+        f"{duckdb_distance_sql(metric, 'a', 'qz')} FROM t ORDER BY id"
+    ).fetchall()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    assert got[2]["ab"] is None and got[2]["ae"] is None
+
+
+def test_sql_literal_spelling(spark):
+    """Literals go into SQL text as repr + D (DOUBLE, never DECIMAL);
+    NaN and +-Inf keep their values through CAST spellings."""
+    from needle_spark.functions.distance import (
+        array_literal, col_sql, sql_double,
+    )
+
+    assert sql_double(1e-05) == "1e-05D"
+    assert sql_double(3.4e+38) == "3.4e+38D"
+    assert sql_double(0.5) == "0.5D"
+    assert sql_double(float("nan")) == "CAST('NaN' AS DOUBLE)"
+    assert sql_double(float("-inf")) == "CAST('-Infinity' AS DOUBLE)"
+    assert col_sql("we`ird.x") == "`we``ird`.`x`"
+    vals = [1e-05, 3.4e+38, -0.0, 0.1, 1 / 3, float("inf"),
+            float("-inf"), float("nan")]
+    df = spark.range(1).select(
+        array_literal(vals).alias("s"),
+        F.array(*[F.lit(v) for v in vals]).alias("c"))
+    # a CAST may yield null, so only the finite literal keeps the
+    # non-nullable element type of F.lit's
+    assert df.schema["s"].dataType.elementType == df.schema["c"].dataType.elementType
+    finite = spark.range(1).select(array_literal(vals[:5]).alias("s"),
+                                   F.array(*[F.lit(v) for v in vals[:5]]))
+    assert finite.schema[0].dataType == finite.schema[1].dataType
+    s, c = df.first()
+    assert [math.copysign(1, x) for x in s] == [math.copysign(1, x) for x in c]
+    assert s[:-1] == c[:-1] and math.isnan(s[-1]) and math.isnan(c[-1])
+
+
+def test_computed_column_must_be_named(spark):
+    with pytest.raises(TypeError, match="withColumn"):
+        distance_expr("cosine", F.slice(F.col("a"), 1, 2), [1.0, 0.0])

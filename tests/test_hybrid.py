@@ -150,3 +150,21 @@ def test_normalize_scores(spark):
     assert abs(sum(sm.values()) - 1.0) < 1e-12
     zs = {r["id"]: r["score"] for r in normalize_scores(df, "z_score").collect()}
     assert abs(sum(zs.values())) < 1e-12
+
+
+def test_bm25_bitexact_vs_duckdb(spark, corpus_df):
+    """bm25_scores against its DuckDB twin, bit for bit, with a repeated
+    query term and a stop word (which must score nothing)."""
+    import duckdb
+    import pandas as pd
+
+    from needle_spark.operators.hybrid import duckdb_bm25_sql
+
+    query = "the fox fox dog"
+    got = sorted(tuple(r) for r in bm25_scores(corpus_df, query).collect())
+    con = duckdb.connect()
+    con.register("docs", pd.DataFrame(CORPUS, columns=["id", "text"]))
+    want = sorted(con.execute(duckdb_bm25_sql(
+        query, table="docs", id_col="id", text_col="text")).fetchall())
+    assert got == want
+    assert {i for i, _ in got} == {1, 2, 4}

@@ -126,6 +126,33 @@ def test_ql_hybrid(ex, qv):
     assert rows[0]["score"] >= rows[-1]["score"]
 
 
+@pytest.mark.parametrize("stmt,budget", [
+    ("SELECT id, distance FROM docs WHERE vector SIMILAR TO $q "
+     "AND tag = 't1' LIMIT 10", 200),
+    ("SELECT id, score FROM docs WHERE vector SIMILAR TO $q "
+     "AND text MATCH 'beta beta gamma the' LIMIT 10", 500),
+])
+def test_ql_statement_build_py4j_budget(spark, py4j_calls, stmt, budget):
+    """Building a kNN or hybrid statement (everything before its
+    action) costs a fixed number of py4j calls: generated columns go to
+    the JVM as one SQL string each, so the count does not grow with the
+    query vector's dimension."""
+    counts = []
+    for d in (8, 512):
+        docs = spark.createDataFrame(
+            [(f"d{i}", [float(i + j) for j in range(d)],
+              f"alpha beta gamma{i}", f"t{i % 2}") for i in range(4)],
+            "id string, vector array<float>, text string, tag string")
+        ex = QueryExecutor(spark, tables={"docs": docs})
+        q = {"q": [0.5] * d}
+        ex.execute(stmt, q)  # warm-up: first-use lookups are not per statement
+        with py4j_calls() as calls:
+            ex.execute(stmt, q)
+        counts.append(calls.n)
+    assert counts[0] == counts[1], counts
+    assert counts[0] <= budget, counts
+
+
 def test_ql_hybrid_post_stages(spark, ex, qv):
     """Hybrid (SIMILAR + MATCH) must APPLY trailing stages instead of
     silently dropping them (ADVICE r1): RERANK BY field reorders the

@@ -329,3 +329,58 @@ def test_insert_dedup_nn_broadcasts_batch_partial_agg(spark, embeddings):
     # end-to-end result sanity through the real API
     res = _nn_vs_existing(existing, batch_pdf, cfg, "id", "vector")
     assert set(res) == {"b1", "b2"}
+
+
+# operators a window's input may pass through on its way down to the
+# limit that bounds it (single-child, row-count preserving)
+_PASS_THROUGH = {"Sort", "Project", "Exchange", "WholeStageCodegen",
+                 "InputAdapter", "AQEShuffleRead", "ColumnarToRow"}
+_LIMITS = {"TakeOrderedAndProject", "GlobalLimit", "LocalLimit",
+           "CollectLimit"}
+
+
+def _windows_above_limits(df) -> int:
+    """Walk the physical plan tree; for every Window follow its input
+    down through pass-through operators and require a limit there.
+    Returns the number of windows checked."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    nodes = []
+    for line in plan.splitlines():
+        m = re.match(r"^([ :|]*(?:[+:]- )?)\*?(?:\(\d+\) )?([A-Za-z]\w*)", line)
+        if m:
+            nodes.append((len(m.group(1)), m.group(2)))
+    checked = 0
+    for i, (depth, name) in enumerate(nodes):
+        if name != "Window":
+            continue
+        j = i + 1
+        while j < len(nodes) and nodes[j][1] in _PASS_THROUGH:
+            j += 1
+        assert j < len(nodes) and nodes[j][0] > depth, plan
+        assert nodes[j][1] in _LIMITS, (
+            f"Window input is not limited (found {nodes[j][1]}):\n{plan}")
+        checked += 1
+    return checked
+
+
+def test_hybrid_rrf_windows_rank_limited_legs(spark):
+    """rrf_fuse ranks with unpartitioned row_number windows.  That is
+    safe only because every caller hands it top-k legs: each Window in
+    the NeedleQL hybrid plan and in hybrid_search must sit above a
+    Limit / TakeOrderedAndProject, never above a corpus-sized input."""
+    from needle_spark.operators.hybrid import hybrid_search
+    from needle_spark.ql.executor import QueryExecutor
+
+    docs = spark.createDataFrame(
+        [(f"d{i}", [float(i), 1.0], f"alpha beta w{i % 4}")
+         for i in range(40)],
+        "id string, vector array<float>, text string")
+    ex = QueryExecutor(spark, tables={"docs": docs})
+    ql = ex.execute(
+        "SELECT id, score FROM docs WHERE vector SIMILAR TO $q "
+        "AND text MATCH 'alpha w1' LIMIT 5", {"q": [1.0, 0.0]})
+    assert _windows_above_limits(ql) == 2
+    hs = hybrid_search(docs, [1.0, 0.0], "alpha w1", k=5, fetch_n=20)
+    assert _windows_above_limits(hs) == 2
