@@ -37,6 +37,7 @@ scalar — kept as a tiny pure-Python class, property-tested.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
 from typing import Iterable, Sequence
 
@@ -117,12 +118,18 @@ def _hlc_struct(prefix: str = "") -> F.Column:
 def make_op(id: str, op: str, hlc: HLC, *, vector: Sequence[float] | None = None,
             metadata: dict[str, str] | None = None,
             meta_key: str | None = None, meta_value: str | None = None) -> dict:
-    """One op-log row (TimestampedOp, crdt.rs:145-163)."""
+    """One op-log row (TimestampedOp, crdt.rs:145-163).  A NaN or ±Inf
+    vector component raises ValueError: needle rejects it at insert, and
+    the op log's Arrow path would turn NaN into null before the merge."""
     if op not in ("add", "update", "update_meta", "delete"):
         raise ValueError(f"unknown CRDT op {op!r}")
+    if vector is not None:
+        vector = list(map(float, vector))
+        if not all(math.isfinite(x) for x in vector):
+            raise ValueError(f"CRDT op {id!r}: NaN or infinite vector component")
     return {
         "id": id, "op": op,
-        "vector": list(map(float, vector)) if vector is not None else None,
+        "vector": vector,
         "metadata": dict(metadata) if metadata is not None else None,
         "meta_key": meta_key, "meta_value": meta_value,
         "physical": hlc.physical, "logical": hlc.logical, "replica": hlc.replica,

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from needle_spark.operators.knn import batch_knn
+from needle_spark.operators.knn_arrow import vector_matrix
 
 
 # ------------------------------------------------- statistical (z/IQR) --
@@ -266,25 +267,15 @@ class IsolationForest:
             raise ValueError("fit() before score()")
         trees, c_n = self.trees, self._c_n
         path = self._path
-        import pandas as pd
 
-        cols = list(df.columns)
-        schema = T.StructType(
-            list(df.schema.fields)
-            + [T.StructField(score_col, T.DoubleType())]
-        )
+        @F.arrow_udf(T.DoubleType())
+        def kernel(vectors):
+            import pyarrow as pa
 
-        def kernel(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                x = np.array(pdf[vector_col].tolist(), dtype=np.float64)
-                scores = []
-                for row in x:
-                    avg = sum(path(t, row, 0) for t in trees) / len(trees)
-                    scores.append(2.0 ** (-avg / c_n) if c_n > 0 else 0.5)
-                pdf = pdf.copy()
-                pdf[score_col] = scores
-                yield pdf
+            scores = []
+            for row in vector_matrix(vectors, np.float64, vector_col):
+                avg = sum(path(t, row, 0) for t in trees) / len(trees)
+                scores.append(2.0 ** (-avg / c_n) if c_n > 0 else 0.5)
+            return pa.array(scores, pa.float64())
 
-        return df.mapInPandas(kernel, schema=schema).select(*cols, score_col)
+        return df.withColumn(score_col, kernel(F.col(vector_col)))

@@ -30,11 +30,14 @@ from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from needle_spark.functions.text import tokenize_expr
+from needle_spark.operators.knn_arrow import _distance_matrix, vector_matrix
 from needle_spark.session import materialize
 
 # MinHash works over the Mersenne field p = 2^31 - 1 with base hashes
@@ -891,8 +894,6 @@ def embedding_neardup_pairs(
     thresholds); size num_cells ≈ n / rows-per-task so each cell's
     pairwise block fits an executor.
     """
-    from needle_spark.operators.knn_arrow import _distance_matrix
-
     m = metric.lower()
     dot_mode = m in _DOT_METRICS
     if (m not in _CELL_METRICS and not dot_mode) or num_cells <= 1:
@@ -927,15 +928,13 @@ def embedding_neardup_pairs(
     # cheaper sample job) was measured to pick a worse-spread centroid
     # set on the replicated bench corpora (embedding_neardup_4x 1.2 ->
     # 3.1 s), so the original string-hash order is kept deliberately.
-    cent_rows = (
+    C = vector_matrix(
         df.select(vector_col)
         .orderBy(F.xxhash64(F.col(vector_col).cast("array<float>").cast("string")))
         .limit(num_cells)
-        .collect()
-    )
-    if not cent_rows:
+        .toArrow().column(0), np.float64, vector_col)
+    if not len(C):
         return spark.createDataFrame([], schema)
-    C = np.asarray([list(r[0]) for r in cent_rows], dtype=np.float64)
     dims = C.shape[1]
 
     def _augment(X: np.ndarray) -> np.ndarray:
@@ -965,11 +964,11 @@ def embedding_neardup_pairs(
         T.StructField(vector_col, df.schema[vector_col].dataType),
     ])
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
+    def assign(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vector_col]])
+            X = vector_matrix(batch.column(1), np.float64, vector_col)
             if dot_mode:
                 Xa = _augment(X)
             elif normalize:
@@ -983,38 +982,38 @@ def embedding_neardup_pairs(
             # small fp slack: the exactness proof is a non-strict bound,
             # so boundary pairs must not be lost to rounding noise
             ri, ci = np.where(D <= dmin + eps + 1e-9)
-            yield pd.DataFrame({
-                "__cell": ci.astype(np.int32),
-                "__primary": D[ri, ci] <= (dmin[ri, 0] + 1e-12),
-                id_col: pdf[id_col].to_numpy()[ri],
-                vector_col: pdf[vector_col].to_numpy()[ri],
-            })
+            take = pa.array(ri)
+            yield pa.RecordBatch.from_arrays([
+                pa.array(ci.astype(np.int32)),
+                pa.array(D[ri, ci] <= (dmin[ri, 0] + 1e-12)),
+                batch.column(0).take(take),
+                batch.column(1).take(take),
+            ], names=assign_schema.names)
 
-    assigned = df.select(id_col, vector_col).mapInPandas(assign, assign_schema)
+    assigned = df.select(id_col, vector_col).mapInArrow(assign, assign_schema)
+    pairs_arrow = to_arrow_schema(schema)
 
-    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
+    def verify(tbl: pa.Table) -> pa.Table:
         # Every pair within ε co-occurs in the PRIMARY cell of (at least)
         # one member, so checking primary×all per cell sees each pair
         # while cutting the per-cell cost from |all|² to |primary|·|all|
         # (duplication stops multiplying with the replica factor).
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vector_col]])
-        ids = pdf[id_col].to_numpy()
-        pi = np.where(pdf["__primary"].to_numpy())[0]
-        if len(pi) == 0:
-            return pd.DataFrame({"id1": [], "id2": [], "distance": []})
+        V = vector_matrix(tbl.column(vector_col), np.float64, vector_col)
+        ids = tbl.column(id_col).to_numpy()
+        pi = np.where(tbl.column("__primary").to_numpy())[0]
         D = _distance_matrix(V[pi], V, m)
         ri, qi = np.where(D <= threshold)
         ida, idb = ids[pi][ri], ids[qi]
         keep = ida != idb
         lo = np.where(ida[keep] < idb[keep], ida[keep], idb[keep])
         hi = np.where(ida[keep] < idb[keep], idb[keep], ida[keep])
-        return pd.DataFrame({
-            "id1": lo, "id2": hi, "distance": D[ri[keep], qi[keep]],
-        })
+        return pa.table(
+            {"id1": lo, "id2": hi, "distance": D[ri[keep], qi[keep]]},
+            schema=pairs_arrow)
 
     return (
         assigned.groupBy("__cell")
-        .applyInPandas(verify, schema)
+        .applyInArrow(verify, schema)
         .dropDuplicates(["id1", "id2"])
     )
 
@@ -1126,35 +1125,36 @@ def srp_lsh_neardup_pairs(
     weights = (1 << np.arange(rows_per_band, dtype=np.int64))
     _n_bits = int(n_bits)
 
-    def signatures(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def signatures(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         R = None  # built from the first batch's dim; same seed -> same R everywhere
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            V = np.asarray([np.asarray(v, dtype=np.float32)
-                            for v in pdf[vector_col]])
+            V = vector_matrix(batch.column(1), np.float32, vector_col)
             if R is None:
                 R = np.random.default_rng(seed).standard_normal(
                     (V.shape[1], _n_bits)).astype(np.float32)
+            elif V.shape[1] != R.shape[0]:
+                raise ValueError(f"{vector_col}: rows of differing widths "
+                                 f"{R.shape[0]} and {V.shape[1]}")
             bits = (V @ R) > 0  # (n, n_bits); sign of the projection
-            ids = pdf[id_col].to_numpy()
-            out_ids, out_band, out_bucket = [], [], []
-            for b in range(bands):
-                blk = bits[:, b * rows_per_band:(b + 1) * rows_per_band]
-                out_ids.append(ids)
-                out_band.append(np.full(len(ids), b, dtype=np.int32))
-                out_bucket.append(blk.astype(np.int64) @ weights)
-            yield pd.DataFrame({
-                id_col: np.concatenate(out_ids),
-                "band": np.concatenate(out_band),
-                "bucket": np.concatenate(out_bucket),
-            })
+            n = len(V)
+            buckets = [bits[:, b * rows_per_band:(b + 1) * rows_per_band]
+                       .astype(np.int64) @ weights for b in range(bands)]
+            yield pa.RecordBatch.from_arrays([
+                pa.concat_arrays([batch.column(0)] * bands),
+                pa.array(np.repeat(np.arange(bands, dtype=np.int32), n)),
+                pa.array(np.concatenate(buckets)),
+            ], names=band_schema.names)
 
-    # a null vector has no signature and pairs with nothing; the kernel
-    # needs every row of a batch to stack into one (n, d) matrix
+    # a null vector has no signature and pairs with nothing (filtered
+    # here, not an error).  Widths are checked within each batch and
+    # against the first batch of each task; two partitions of uniform
+    # but different widths are NOT detected — that needs a scan of the
+    # vector column (+0.3-0.5 s per srp bench row in r11), so none runs.
     banded = (df.select(id_col, vector_col)
               .filter(F.col(vector_col).isNotNull())
-              .mapInPandas(signatures, band_schema))
+              .mapInArrow(signatures, band_schema))
     pairs = _pairs_from_banded(banded, id_col, max_bucket_size,
                                bucket_stats)
     # exact verification: role-explode + ONE join against the vector
@@ -1173,8 +1173,8 @@ def srp_lsh_neardup_pairs(
     both = _pair_vectors(df, pairs, id_col, vector_col)
     return (
         both.withColumn(
-            "distance", _pair_distance_udf(m)(F.col("__v1"),
-                                              F.col("__v2")))
+            "distance", _pair_distance_udf(m, vector_col)(
+                F.col("__v1"), F.col("__v2")))
         .filter(F.col("distance") <= float(threshold))
         .select("id1", "id2", "distance")
     )
@@ -1204,7 +1204,7 @@ def _pair_vectors(df: DataFrame, pairs: DataFrame, id_col: str,
     )
 
 
-def _pair_distance_udf(metric: str):
+def _pair_distance_udf(metric: str, vector_col: str):
     """Arrow-batched float64 pair distance for the verify joins.
     Semantics mirror functions/distance.distance_expr for the angular
     metrics the LSH tiers serve (cosine / cosine_normalized / dot);
@@ -1213,12 +1213,13 @@ def _pair_distance_udf(metric: str):
     practice sit far from any candidate's distance."""
     m = metric.lower()
 
-    @F.pandas_udf("double")
-    def _dist(v1: pd.Series, v2: pd.Series) -> pd.Series:
-        if not len(v1):
-            return pd.Series([], dtype=float)
-        A = np.stack([np.asarray(x, dtype=np.float64) for x in v1])
-        B = np.stack([np.asarray(x, dtype=np.float64) for x in v2])
+    @F.arrow_udf("double")
+    def _dist(v1, v2):
+        A = vector_matrix(v1, np.float64, vector_col)
+        B = vector_matrix(v2, np.float64, vector_col)
+        if A.shape != B.shape:
+            raise ValueError(f"{vector_col}: rows of differing widths "
+                             f"{A.shape[1]} and {B.shape[1]}")
         dot = (A * B).sum(axis=1)
         if m in _DOT_METRICS:
             out = -dot
@@ -1229,7 +1230,7 @@ def _pair_distance_udf(metric: str):
             nb = np.linalg.norm(B, axis=1)
             out = 1.0 - dot / np.maximum(na * nb, 1e-300)
             out[(na == 0.0) | (nb == 0.0)] = 1.0
-        return pd.Series(out)
+        return pa.array(out, pa.float64())
 
     return _dist
 
@@ -1248,8 +1249,6 @@ def blockpair_neardup_pairs(
     every pair is computed exactly once.  O(n²) compute but spread over
     B(B+1)/2 bounded tasks with O(n·B) shuffle — the honest fallback for
     non-metric spaces (dot product) where cell pruning can't be exact."""
-    from needle_spark.operators.knn_arrow import _distance_matrix
-
     schema = _pairs_schema(df, id_col)
     blk = F.pmod(
         F.xxhash64(F.col(vector_col).cast("array<float>").cast("string")),
@@ -1267,15 +1266,15 @@ def blockpair_neardup_pairs(
         id_col, vector_col, "__b", F.explode(groups).alias("__g")
     ).select(id_col, vector_col, "__b", "__g.gi", "__g.gj")
 
-    def verify(key, pdf):
-        gi, gj = key
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vector_col]])
-        ids = pdf[id_col].to_numpy()
-        b = pdf["__b"].to_numpy()
+    pairs_arrow = to_arrow_schema(schema)
+
+    def verify(key, tbl):
+        gi, gj = (k.as_py() for k in key)
+        V = vector_matrix(tbl.column(vector_col), np.float64, vector_col)
+        ids = tbl.column(id_col).to_numpy()
+        b = tbl.column("__b").to_numpy()
         li = np.where(b == gi)[0]
         rj = np.where(b == gj)[0]
-        if len(li) == 0 or len(rj) == 0:
-            return pd.DataFrame({"id1": [], "id2": [], "distance": []})
         D = _distance_matrix(V[li], V[rj], metric)
         ri, qi = np.where(D <= threshold)
         id1, id2 = ids[li][ri], ids[rj][qi]
@@ -1292,9 +1291,10 @@ def blockpair_neardup_pairs(
             lo = np.where(id1 < id2, id1, id2)
             hi = np.where(id1 < id2, id2, id1)
             dist = D[ri, qi]
-        return pd.DataFrame({"id1": lo, "id2": hi, "distance": dist})
+        return pa.table({"id1": lo, "id2": hi, "distance": dist},
+                        schema=pairs_arrow)
 
-    return replicated.groupBy("gi", "gj").applyInPandas(verify, schema)
+    return replicated.groupBy("gi", "gj").applyInArrow(verify, schema)
 
 
 def neardup_components(pairs: DataFrame, id_col: str = "id",

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from needle_spark.functions.distance import array_literal
+from needle_spark.operators.knn_arrow import vector_matrix
 
 
 def _dot_expr(vec: Column, weights: list[float]) -> Column:
@@ -113,7 +114,7 @@ class PCA:
     @classmethod
     def fit(cls, df: DataFrame, n_components: int,
             vector_col: str = "vector") -> "PCA":
-        import pandas as pd
+        import pyarrow as pa
 
         first = df.select(vector_col).first()
         if first is None or first[0] is None:
@@ -121,17 +122,17 @@ class PCA:
         d_probe = len(first[0])
 
         def partials(batches):
-            for pdf in batches:
-                x = np.array(pdf[vector_col].tolist(), dtype=np.float64)
+            for batch in batches:
+                x = vector_matrix(batch.column(0), np.float64, vector_col)
                 if x.size == 0:
                     continue
-                yield pd.DataFrame({
+                yield pa.RecordBatch.from_pydict({
                     "n": [float(x.shape[0])],
                     "s": [x.sum(axis=0).tolist()],
                     "ss": [(x.T @ x).reshape(-1).tolist()],
                 })
 
-        parts = df.select(vector_col).mapInPandas(
+        parts = df.select(vector_col).mapInArrow(
             partials, schema="n double, s array<double>, ss array<double>"
         ).collect()
         if not parts:
@@ -285,40 +286,31 @@ class NeighborEmbedding:
         weight saturates the normalization)."""
         if self.landmarks_hd is None:
             raise ValueError("fit() before transform()")
-        import pandas as pd
-
         hd, ld = self.landmarks_hd, self.landmarks_ld
         k = min(self.interp_k, hd.shape[0])
         out_dims = self.output_dims
-        cols = list(df.columns)
-        # NB: StructType.add mutates in place — never call it on
-        # df.schema (that poisons the frame's cached schema)
-        schema = T.StructType(
-            list(df.schema.fields)
-            + [T.StructField(out_col, T.ArrayType(T.DoubleType()))]
-        )
+        h_sq = (hd ** 2).sum(1)
 
-        def kernel(batches):
-            h_sq = (hd ** 2).sum(1)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                x = np.array(pdf[vector_col].tolist(), dtype=np.float64)
-                d2 = np.maximum(
-                    (x ** 2).sum(1)[:, None] - 2.0 * (x @ hd.T) + h_sq[None, :],
-                    0.0,
-                )
-                idx = np.argpartition(d2, k - 1, axis=1)[:, :k]
-                nd = np.take_along_axis(d2, idx, axis=1)
-                w = 1.0 / (nd + 1e-9)
-                w = w / w.sum(1, keepdims=True)
-                pos = (w[:, :, None] * ld[idx]).sum(1)
-                pdf = pdf.copy()
-                pdf[out_col] = [row.tolist() for row in pos[:, :out_dims]]
-                yield pdf
+        @F.arrow_udf(T.ArrayType(T.DoubleType()))
+        def layout(vectors):
+            import pyarrow as pa
 
-        return df.mapInPandas(kernel, schema=schema).select(
-            *cols, out_col)
+            x = vector_matrix(vectors, np.float64, vector_col)
+            if len(x) == 0:
+                return pa.array([], pa.list_(pa.float64()))
+            d2 = np.maximum(
+                (x ** 2).sum(1)[:, None] - 2.0 * (x @ hd.T) + h_sq[None, :],
+                0.0,
+            )
+            idx = np.argpartition(d2, k - 1, axis=1)[:, :k]
+            nd = np.take_along_axis(d2, idx, axis=1)
+            w = 1.0 / (nd + 1e-9)
+            w = w / w.sum(1, keepdims=True)
+            pos = np.ascontiguousarray((w[:, :, None] * ld[idx]).sum(1)[:, :out_dims])
+            return pa.FixedSizeListArray.from_arrays(
+                pa.array(pos.ravel()), pos.shape[1])
+
+        return df.withColumn(out_col, layout(F.col(vector_col)))
 
     def fit_transform(self, df: DataFrame, vector_col: str = "vector",
                       id_col: str = "id", out_col: str = "layout") -> DataFrame:

@@ -68,7 +68,7 @@ def vector_stats(df: DataFrame, vector_col: str = "vector",
     the compiled plan small; same math either way."""
     # null vectors are excluded from the sample on BOTH paths (the
     # expr path's F.avg would skip them silently while the Arrow path
-    # crashed on them; filtering keeps sample_count consistent)
+    # raises on them; filtering keeps sample_count consistent)
     df = df.filter(F.col(vector_col).isNotNull())
     if dims is None:
         first = df.select(vector_col).first()
@@ -97,14 +97,16 @@ def vector_stats(df: DataFrame, vector_col: str = "vector",
             avg_magnitude=float(r["mag"]), sample_count=n,
         )
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from needle_spark.operators.knn_arrow import vector_matrix
 
     def partials(batches):
-        for pdf in batches:
-            x = np.array(pdf[vector_col].tolist(), dtype=np.float64)
+        for batch in batches:
+            x = vector_matrix(batch.column(0), np.float64, vector_col)
             if x.size == 0:
                 continue
-            yield pd.DataFrame({
+            yield pa.RecordBatch.from_pydict({
                 "n": [float(x.shape[0])],
                 "s": [x.sum(0).tolist()],
                 "ss": [(x * x).sum(0).tolist()],
@@ -112,7 +114,7 @@ def vector_stats(df: DataFrame, vector_col: str = "vector",
                 "mag": [float(np.linalg.norm(x, axis=1).sum())],
             })
 
-    parts = df.select(vector_col).mapInPandas(
+    parts = df.select(vector_col).mapInArrow(
         partials,
         schema=("n double, s array<double>, ss array<double>, "
                 "lo array<double>, hi array<double>, mag double"),

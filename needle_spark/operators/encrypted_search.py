@@ -44,6 +44,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from needle_spark.operators.knn_arrow import vector_matrix
+
 _MMIX_MUL = 6364136223846793005
 _MMIX_ADD = 1442695040888963407
 _U64 = 1 << 64
@@ -168,9 +170,10 @@ def encrypt_vectors(
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            tbl = batch.to_pydict()
-            vecs = np.asarray(tbl["vector"], dtype=np.float64)
-            if vecs.ndim != 2 or vecs.shape[1] != planes.shape[1]:
+            vecs = vector_matrix(batch.column("vector"), np.float64, vector_col)
+            if not len(vecs):
+                continue
+            if vecs.shape[1] != planes.shape[1]:
                 raise EncryptedSearchError(
                     f"expected {planes.shape[1]}-dim vectors, got shape {vecs.shape}"
                 )
@@ -179,7 +182,7 @@ def encrypt_vectors(
             norms = np.sqrt((vecs * vecs).sum(axis=1)).astype(np.float32)
             yield pa.RecordBatch.from_pydict(
                 {
-                    "id": tbl["id"],
+                    "id": batch.column("id"),
                     "codes": codes.tolist(),
                     "original_norm": norms,
                 }

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from needle_spark.functions.distance import array_literal
+from needle_spark.operators.knn_arrow import vector_matrix
 
 try:  # C-backed AEAD; the sandbox ships cryptography
     import cryptography.hazmat.primitives.ciphers.aead  # noqa: F401
@@ -275,15 +276,15 @@ class VectorEncryptor:
             aead = _aead(key)
             expect = matrix.shape[1] if matrix is not None else None
             for batch in batches:
-                tbl = batch.to_pydict()
-                rows = tbl["vector"]
-                want = expect if expect is not None else (
-                    len(rows[0]) if rows and rows[0] is not None else 0)
-                if any(v is None or len(v) != want for v in rows):
+                try:
+                    vecs = vector_matrix(batch.column("vector"), np.float32,
+                                         vector_col)
+                except ValueError as e:
+                    raise EncryptionError(f"{e}: cannot encrypt") from e
+                if (expect is not None and len(vecs)
+                        and vecs.shape[1] != expect):
                     raise EncryptionError(
-                        f"vector dims != expected ({want}); "
-                        "null or ragged vectors cannot encrypt")
-                vecs = np.asarray(rows, dtype=np.float32)
+                        f"vector dims {vecs.shape[1]} != expected ({expect})")
                 if cfg.searchable:
                     if matrix is not None:
                         embs = vecs.astype(np.float64) @ matrix.T

@@ -73,29 +73,40 @@ def _distance_matrix(V: np.ndarray, Q: np.ndarray, metric: str) -> np.ndarray:
     raise ValueError(f"unknown distance metric: {metric!r}")
 
 
-def _matrix_from_arrow(arr, dtype) -> np.ndarray:
-    """Arrow list<float>/fixed_size_list<float> column -> (n, d) matrix.
+def vector_matrix(arr, dtype, column: str) -> np.ndarray:
+    """Arrow list / large_list / fixed_size_list vector column -> (n, d).
 
-    Fast path: when every list has the same width (always true for a
-    vector column), reshape the flattened values buffer — no per-row
-    Python loop, near-zero-copy.  Falls back to a row loop for ragged
-    or exotic layouts."""
+    The one way every kernel turns a vector column into a matrix: the
+    flattened values buffer is reshaped (slice offsets honoured), with
+    no per-row Python.  A chunked array is combined first.  A collection
+    holds fixed-width finite vectors (needle rejects NaN at insert,
+    src/collection/mod.rs:126-164), so any of these raises ValueError
+    naming `column`: a null cell, a null element, rows of differing
+    widths, a NaN or ±Inf component."""
     import pyarrow as pa
 
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
     n = len(arr)
-    if n == 0:
-        return np.empty((0, 0), dtype=dtype)
+    if arr.null_count:
+        raise ValueError(f"{column}: null vector")
     if pa.types.is_fixed_size_list(arr.type):
         d = arr.type.list_size
-        vals = arr.flatten().to_numpy(zero_copy_only=False)
-        return np.ascontiguousarray(vals, dtype=dtype).reshape(n, d)
-    if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
-        offs = arr.offsets.to_numpy(zero_copy_only=False)
-        widths = np.diff(offs)
-        if widths.size and (widths == widths[0]).all():
-            vals = arr.flatten().to_numpy(zero_copy_only=False)
-            return np.ascontiguousarray(vals, dtype=dtype).reshape(n, int(widths[0]))
-    return np.asarray([np.asarray(v, dtype=dtype) for v in arr.to_pylist()])
+    else:
+        widths = np.diff(arr.offsets.to_numpy())
+        d = int(widths[0]) if n else 0
+        bad = np.flatnonzero(widths != d)
+        if bad.size:
+            raise ValueError(f"{column}: rows of differing widths "
+                             f"{d} and {int(widths[bad[0]])}")
+    vals = arr.flatten()
+    if vals.null_count:
+        raise ValueError(f"{column}: null vector element")
+    X = np.ascontiguousarray(vals.to_numpy(zero_copy_only=False),
+                             dtype=dtype).reshape(n, d)
+    if not np.isfinite(X).all():
+        raise ValueError(f"{column}: NaN or infinite vector component")
+    return X
 
 
 def _resolve_queries(queries, query_id_col: str, query_vector_col: str):
@@ -107,11 +118,11 @@ def _resolve_queries(queries, query_id_col: str, query_vector_col: str):
       - sequence of (id, vector) pairs
     """
     if isinstance(queries, DataFrame):
-        q_rows = queries.select(query_id_col, query_vector_col).collect()
-        if not q_rows:
+        tbl = queries.select(query_id_col, query_vector_col).toArrow()
+        if not tbl.num_rows:
             raise ValueError("empty query set")
-        q_ids = [r[0] for r in q_rows]
-        Q = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
+        q_ids = tbl.column(0).to_pylist()
+        Q = vector_matrix(tbl.column(1), np.float64, query_vector_col)
         qid_type = queries.schema[query_id_col].dataType
         return q_ids, Q, qid_type
     if isinstance(queries, tuple) and len(queries) == 2:
@@ -170,7 +181,7 @@ def _topk_map_stage(
         for batch in batches:
             names = batch.schema.names
             vec = batch.column(names.index(doc_vector_col))
-            V = _matrix_from_arrow(vec, dtype)
+            V = vector_matrix(vec, dtype, doc_vector_col)
             if V.size == 0:
                 continue
             ids = batch.column(names.index(doc_id_col)).to_numpy(zero_copy_only=False)

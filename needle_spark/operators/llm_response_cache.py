@@ -40,6 +40,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from needle_spark.operators.knn_arrow import vector_matrix
+
 _WS = re.compile(r"\s+")
 
 
@@ -380,7 +382,6 @@ def cache_lookup_batch(batch: DataFrame, cache: DataFrame,
     max_entries — the same serialize-with-the-task-closure pattern as
     operators/knn_arrow.py).  No groupBy, no window, no anti-join.
     """
-    import pandas as pd
     from pyspark.sql import types as T
 
     if ttl_seconds is not None:
@@ -411,12 +412,14 @@ def cache_lookup_batch(batch: DataFrame, cache: DataFrame,
     ])
 
     def _best_match(embs):
+        import pyarrow as pa
+
         n = len(embs)
         out_q = [None] * n
         out_r = [None] * n
         out_s = [None] * n
         if c_rows and n:
-            Q = np.asarray([np.asarray(e, dtype=np.float64) for e in embs])
+            Q = vector_matrix(embs, np.float64, vector_col)
             if metric == "cosine":
                 qn = np.linalg.norm(Q, axis=1)
                 denom = np.outer(qn, norms)
@@ -436,10 +439,12 @@ def cache_lookup_batch(batch: DataFrame, cache: DataFrame,
                 if s >= thr:
                     j = order[int(best[i])]
                     out_q[i], out_r[i], out_s[i] = c_queries[j], c_resps[j], s
-        return pd.DataFrame(
-            {"cached_query": out_q, "response": out_r, "similarity": out_s})
+        return pa.StructArray.from_arrays(
+            [pa.array(out_q, pa.string()), pa.array(out_r, pa.string()),
+             pa.array(out_s, pa.float64())],
+            names=["cached_query", "response", "similarity"])
 
-    best_match = F.pandas_udf(_best_match, _out_t)
+    best_match = F.arrow_udf(_best_match, _out_t)
 
     exact = cache.select(
         normalize_query_col("cached_query").alias("__norm"),

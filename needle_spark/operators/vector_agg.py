@@ -23,7 +23,7 @@ Spark mapping, two centroid engines:
 Spread / distribution / outliers are second passes joining the
 centroid back and folding distances as scan expressions.  Medoid is
 genuinely all-pairs inside a group, so it runs per group in
-`applyInPandas` with a documented group-size cap — same cost shape as
+`applyInArrow` with a documented group-size cap — same cost shape as
 the reference's in-memory loop."""
 
 from __future__ import annotations
@@ -31,9 +31,10 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from needle_spark.operators.knn_arrow import vector_matrix
 
 _FX = 1_000_000.0  # fixed-point scale for order-exact float sums
 
@@ -175,7 +176,7 @@ def group_medoid(df: DataFrame, group_col: str = "label",
                  max_group_rows: int = 5000) -> DataFrame:
     """compute_medoid per group: the member minimizing summed distance
     to all other members.  All-pairs by definition -> runs inside each
-    group via applyInPandas; groups larger than `max_group_rows` raise
+    group via applyInArrow; groups larger than `max_group_rows` raise
     (sample first, or use the centroid as the proxy)."""
     m = metric.lower()
     if m not in ("euclidean", "cosine", "manhattan"):
@@ -184,12 +185,15 @@ def group_medoid(df: DataFrame, group_col: str = "label",
     out_schema = (f"group string, medoid_id string, "
                   f"medoid array<double>, total_distance double")
 
-    def _medoid(key, pdf):
-        if len(pdf) > max_group_rows:
+    def _medoid(key, tbl):
+        import pyarrow as pa
+
+        group = key[0].as_py()
+        if tbl.num_rows > max_group_rows:
             raise ValueError(
-                f"group {key[0]!r} has {len(pdf)} rows > medoid cap "
+                f"group {group!r} has {tbl.num_rows} rows > medoid cap "
                 f"{max_group_rows}; sample first")
-        X = np.asarray(pdf[vector_col].tolist(), dtype=np.float64)
+        X = vector_matrix(tbl.column(vector_col), np.float64, vector_col)
         if m == "euclidean":
             sq = (X * X).sum(axis=1)
             D2 = np.maximum(sq[:, None] - 2.0 * (X @ X.T) + sq[None, :], 0.0)
@@ -203,12 +207,12 @@ def group_medoid(df: DataFrame, group_col: str = "label",
             D = 1.0 - (Xn @ Xn.T)
         totals = D.sum(axis=1)
         best = int(np.argmin(totals))
-        return pd.DataFrame({
-            "group": [str(key[0])],
-            "medoid_id": [str(pdf[id_col].iloc[best])],
+        return pa.table({
+            "group": [str(group)],
+            "medoid_id": [str(tbl.column(id_col)[best].as_py())],
             "medoid": [X[best].tolist()],
             "total_distance": [float(totals[best])],
         })
 
     return (df.select(F.col(group_col), F.col(id_col), F.col(vector_col))
-            .groupBy(group_col).applyInPandas(_medoid, out_schema))
+            .groupBy(group_col).applyInArrow(_medoid, out_schema))

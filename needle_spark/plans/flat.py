@@ -64,6 +64,7 @@ from typing import Sequence
 
 import numpy as np
 
+from needle_spark.operators.knn_arrow import vector_matrix
 from needle_spark.plans.ivf import IvfBatchKnnIndex, _l2_normalize
 
 __all__ = ["FlatKnnIndex", "single_thread_blas"]
@@ -245,17 +246,10 @@ class FlatKnnIndex:
         """Pin a DataFrame's (id, vector[, metas]) into the serving
         tier: one Arrow collect — the build step IS the pin (there is
         no training phase, unlike IVF's KMeans fit)."""
-        cols = [id_col, vector_col, *meta_cols]
-        sub = df.select(*cols)
-        try:
-            tbl = sub.toArrow()
-            pdf = tbl.to_pandas()
-        except Exception:
-            pdf = sub.toPandas()
-        vecs = np.asarray(
-            [np.asarray(v, dtype=np.float32) for v in pdf[vector_col]])
-        metas = {c: pdf[c].to_numpy() for c in meta_cols}
-        return cls(pdf[id_col].to_numpy(), vecs, metric=metric,
+        tbl = df.select(id_col, vector_col, *meta_cols).toArrow()
+        vecs = vector_matrix(tbl.column(vector_col), np.float32, vector_col)
+        metas = {c: tbl.column(c).to_numpy() for c in meta_cols}
+        return cls(tbl.column(id_col).to_numpy(), vecs, metric=metric,
                    metas=metas, threads=threads, id_col=id_col,
                    vector_col=vector_col)
 
@@ -1066,20 +1060,16 @@ class FlatKnnIndex:
 
     def add(self, rows_df) -> int:
         """DataFrame twin of add_local (one Arrow collect)."""
-        sub = rows_df.select(
+        tbl = rows_df.select(
             rows_df[self.id_col],
             rows_df[self._vector_col].alias("__vec__"),
-            *[rows_df[c] for c in self.metas])
-        try:
-            pdf = sub.toArrow().to_pandas()
-        except Exception:
-            pdf = sub.toPandas()
-        if not len(pdf):
+            *[rows_df[c] for c in self.metas]).toArrow()
+        if not tbl.num_rows:
             return 0
-        V = np.asarray([np.asarray(v, dtype=np.float32)
-                        for v in pdf["__vec__"]])
-        metas = {c: pdf[c].to_numpy() for c in self.metas}
-        return self.add_local(pdf[self.id_col].to_numpy(), V,
+        V = vector_matrix(tbl.column("__vec__"), np.float32,
+                          self._vector_col)
+        metas = {c: tbl.column(c).to_numpy() for c in self.metas}
+        return self.add_local(tbl.column(self.id_col).to_numpy(), V,
                               metas=metas or None)
 
     def delete(self, ids) -> int:

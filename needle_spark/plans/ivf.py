@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from needle_spark.operators.knn_arrow import vector_matrix
+
 
 class IvfIndex:
     """KMeans-centroid IVF index over an array<float> column."""
@@ -70,22 +72,22 @@ class IvfIndex:
     def assign(self, df: DataFrame, out_col: str = "centroid_id") -> DataFrame:
         """Attach the nearest-centroid id (L2) to each row via an Arrow
         kernel — one map-only pass; write partitioned by this column."""
-        from pyspark.sql.functions import pandas_udf
-
         C = self.centroids
         vector_col = self.vector_col
 
-        @pandas_udf("int")
-        def _nearest(s: pd.Series) -> pd.Series:
-            V = np.asarray([np.asarray(v, dtype=np.float64) for v in s])
+        @F.arrow_udf("int")
+        def _nearest(s):
+            import pyarrow as pa
+
+            V = vector_matrix(s, np.float64, vector_col)
             if len(V) == 0:
-                return pd.Series([], dtype="int32")
+                return pa.array([], pa.int32())
             d = (
                 (V * V).sum(axis=1, keepdims=True)
                 - 2.0 * (V @ C.T)
                 + (C * C).sum(axis=1)[None, :]
             )
-            return pd.Series(d.argmin(axis=1).astype("int32"))
+            return pa.array(d.argmin(axis=1).astype(np.int32))
 
         return df.withColumn(out_col, _nearest(F.col(vector_col)))
 
@@ -212,10 +214,9 @@ def _bytes_matrix_from_arrow(arr, width: int) -> np.ndarray:
     # variable-width binary (Spark BinaryType): offsets + data buffers
     offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)[arr.offset:arr.offset + n + 1]
     data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
-    widths = np.diff(offs)
-    if widths.size and (widths == width).all():
-        return data[offs[0]:offs[-1]].reshape(n, width)
-    return np.asarray([np.frombuffer(b, dtype=np.uint8) for b in arr.to_pylist()])
+    if arr.null_count or (np.diff(offs) != width).any():
+        raise ValueError(f"binary column: values of width other than {width}")
+    return data[offs[0]:offs[-1]].reshape(n, width)
 
 
 def _pq_encode(res, books):
@@ -525,10 +526,9 @@ class IvfBatchKnnIndex:
         # sample without a full count when possible: limit() is cheap and
         # biased toward leading partitions, acceptable for quantizer fit;
         # use an explicit fraction sample when the caller wants one.
-        sample = np.asarray(
-            [list(r[0]) for r in sample_df.limit(sample_rows).collect()],
-            dtype=np.float64,
-        )
+        sample = vector_matrix(
+            sample_df.limit(sample_rows).toArrow().column(0), np.float64,
+            vector_col)
         if sample.size == 0:
             raise ValueError("cannot build an IVF index over an empty table")
         if m == "cosine":
@@ -817,8 +817,6 @@ class IvfBatchKnnIndex:
         for pruned serving at rest."""
         import pyarrow as pa
 
-        from needle_spark.operators.knn_arrow import _matrix_from_arrow
-
         C32 = np.ascontiguousarray(self.centroids, dtype=np.float32)
         csq = (C32 * C32).sum(axis=1)
         mn32 = self.mn.astype(np.float32)
@@ -859,7 +857,8 @@ class IvfBatchKnnIndex:
         def kernel(batches) -> Iterator:
             for batch in batches:
                 names = batch.schema.names
-                V = _matrix_from_arrow(batch.column(names.index(vector_col)), np.float32)
+                V = vector_matrix(batch.column(names.index(vector_col)),
+                                  np.float32, vector_col)
                 if V.size == 0:
                     continue
                 nsq = (V * V).sum(axis=1)

@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from needle_spark.operators.knn_arrow import vector_matrix
+
 
 class SQ8:
     """Symmetric per-collection scalar quantizer."""
@@ -245,34 +247,28 @@ class ProductQuantizer:
         return cls(np.asarray(books), vector_col=vector_col, **kw)
 
     def encode(self, df: DataFrame) -> DataFrame:
-
-
-        from pyspark.sql.functions import pandas_udf
-
         B, m, sub = self.codebooks, self.m, self.sub_dim
+        vector_col = self.vector_col
 
-        @pandas_udf("array<int>")
-        def _enc(s: pd.Series) -> pd.Series:
-            V = np.asarray([np.asarray(v, dtype=np.float64) for v in s])
-            out = []
-            if len(V) == 0:
-                return pd.Series(out)
+        @F.arrow_udf("array<int>")
+        def _enc(s):
+            import pyarrow as pa
+
+            V = vector_matrix(s, np.float64, vector_col)
             codes = np.empty((len(V), m), dtype=np.int32)
-            for j in range(m):
-                S = V[:, j * sub:(j + 1) * sub]
-                d = ((S[:, None, :] - B[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = d.argmin(axis=1)
-            return pd.Series([list(map(int, row)) for row in codes])
+            if len(V):
+                for j in range(m):
+                    S = V[:, j * sub:(j + 1) * sub]
+                    d = ((S[:, None, :] - B[j][None, :, :]) ** 2).sum(axis=2)
+                    codes[:, j] = d.argmin(axis=1)
+            return pa.FixedSizeListArray.from_arrays(
+                pa.array(codes.ravel()), m)
 
         return df.withColumn(self.codes_col, _enc(F.col(self.vector_col)))
 
     def search(self, encoded_df: DataFrame, query_vector, k: int = 10,
                rescore_factor: int = 8, metric: str = "euclidean",
                id_col: str = "id") -> DataFrame:
-
-
-        from pyspark.sql.functions import pandas_udf
-
         from needle_spark.operators.knn import knn, validate_query_vector
 
         qv = np.asarray(validate_query_vector(query_vector), dtype=np.float64)
@@ -283,13 +279,16 @@ class ProductQuantizer:
             for j in range(m)
         ])
 
-        @pandas_udf("double")
-        def _adc(codes: pd.Series) -> pd.Series:
-            C = np.asarray([np.asarray(c, dtype=np.int64) for c in codes])
+        codes_col = self.codes_col
+
+        @F.arrow_udf("double")
+        def _adc(codes):
+            import pyarrow as pa
+
+            C = vector_matrix(codes, np.int64, codes_col)
             if len(C) == 0:
-                return pd.Series([], dtype="float64")
-            rows = np.arange(m)
-            return pd.Series(table[rows[None, :], C].sum(axis=1))
+                return pa.array([], pa.float64())
+            return pa.array(table[np.arange(m)[None, :], C].sum(axis=1))
 
         candidates = (
             encoded_df.withColumn("__adc", _adc(F.col(self.codes_col)))

@@ -44,24 +44,23 @@ def local_df(spark: SparkSession, data, schema) -> DataFrame:
     turns a 15-branch union's count() into ~5 s.  Routing the same rows
     through a pandas DataFrame takes the Arrow conversion path and
     lands them in a JVM LocalRelation (same count(): ~0.6 s).  Falls
-    back to the classic path for data the Arrow converter rejects.
-
-    CAVEAT: Arrow coerces float NaN to null in some nested cells where
-    the pickle path keeps NaN — only use this for data whose consumers
-    do not distinguish the two (do NOT route rows through here ahead of
-    NaN-validation logic)."""
+    back to the classic path for data the pandas/Arrow conversion
+    rejects (a TypeError, ValueError or Arrow error); any other error
+    propagates.  Vectors routed here must be finite: Arrow turns a NaN
+    inside an array into null (crdt.make_op checks its vectors)."""
     import pandas as pd
+    import pyarrow as pa
 
+    names = [f.name for f in schema.fields] if hasattr(schema, "fields") \
+        else list(spark.createDataFrame([], schema).columns)
     try:
-        names = [f.name for f in schema.fields] if hasattr(schema, "fields") \
-            else list(spark.createDataFrame([], schema).columns)
         if data and isinstance(data[0], dict):
             pdf = pd.DataFrame.from_records(
                 [{n: r.get(n) for n in names} for r in data], columns=names)
         else:
             pdf = pd.DataFrame.from_records(list(data), columns=names)
         return spark.createDataFrame(pdf, schema=schema)
-    except Exception:
+    except (TypeError, ValueError, pa.ArrowException):
         return spark.createDataFrame(data, schema)
 
 

@@ -102,8 +102,8 @@ def main() -> None:
         "shuffles only cell-tagged rows",
         {
             "Scan parquet": grab(p, "Scan parquet")["Scan parquet"],
-            "FlatMapGroupsInPandas": grab(p, "FlatMapGroupsInPandas")["FlatMapGroupsInPandas"],
-            "MapInPandas": grab(p, "MapInPandas")["MapInPandas"],
+            "FlatMapGroupsInArrow": grab(p, "FlatMapGroupsInArrow")["FlatMapGroupsInArrow"],
+            "MapInArrow": grab(p, "MapInArrow")["MapInArrow"],
         },
     ))
 

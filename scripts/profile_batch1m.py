@@ -11,7 +11,7 @@ import pyarrow as pa
 from pyspark.sql import functions as F
 
 from needle_spark import get_spark
-from needle_spark.operators.knn_arrow import BatchKnnIndex, _matrix_from_arrow
+from needle_spark.operators.knn_arrow import BatchKnnIndex, vector_matrix
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -62,7 +62,7 @@ timeit("jvm_count", lambda: idx.docs.count())
 def _consume(batches):
     tot = 0
     for b in batches:
-        V = _matrix_from_arrow(b.column(1), np.float32)
+        V = vector_matrix(b.column(1), np.float32, "embedding")
         tot += V.shape[0]
     yield pa.RecordBatch.from_arrays([pa.array([tot], type=pa.int64())], names=["n"])
 

@@ -5,7 +5,7 @@ Builds the same planted-twin corpus bench.py uses (sf0.1 embeddings,
 Walsh replica groups + one perturbed twin per vector) and times the
 three pipeline stages separately:
 
-  1. signatures   — mapInPandas sign-projection kernel (n x bands rows)
+  1. signatures   — mapInArrow sign-projection kernel (n x bands rows)
   2. banding      — _pairs_from_banded groupBy (band, bucket) -> pairs
   3. verification — role-explode + join vectors + exact distance filter
 
@@ -27,6 +27,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from needle_spark import get_spark  # noqa: E402
 from needle_spark.operators.dedup import (  # noqa: E402
     _pairs_from_banded, srp_lsh_neardup_pairs)
+from needle_spark.operators.knn_arrow import vector_matrix  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -98,29 +99,25 @@ def main() -> None:
         weights = (1 << np.arange(rpb, dtype=np.int64))
 
         def signatures(batches):
-            import pandas as pd
-            for pdf in batches:
-                if pdf.empty:
+            import pyarrow as pa
+            for batch in batches:
+                if not batch.num_rows:
                     continue
-                V = np.asarray([np.asarray(v, dtype=np.float32)
-                                for v in pdf["embedding"]])
+                V = vector_matrix(batch.column(1), np.float32, "embedding")
                 bits = (V @ R) > 0
-                ids = pdf["vec_id"].to_numpy()
-                oi, ob, ou = [], [], []
-                for b in range(8):
-                    blk = bits[:, b * rpb:(b + 1) * rpb]
-                    oi.append(ids)
-                    ob.append(np.full(len(ids), b, dtype=np.int32))
-                    ou.append(blk.astype(np.int64) @ weights)
-                yield pd.DataFrame({"vec_id": np.concatenate(oi),
-                                    "band": np.concatenate(ob),
-                                    "bucket": np.concatenate(ou)})
+                ou = [bits[:, b * rpb:(b + 1) * rpb].astype(np.int64) @ weights
+                      for b in range(8)]
+                yield pa.RecordBatch.from_arrays([
+                    pa.concat_arrays([batch.column(0)] * 8),
+                    pa.array(np.repeat(np.arange(8, dtype=np.int32), len(V))),
+                    pa.array(np.concatenate(ou)),
+                ], names=["vec_id", "band", "bucket"])
 
         band_schema = T.StructType([
             T.StructField("vec_id", id_type),
             T.StructField("band", T.IntegerType()),
             T.StructField("bucket", T.LongType())])
-        banded = corpus.select("vec_id", "embedding").mapInPandas(
+        banded = corpus.select("vec_id", "embedding").mapInArrow(
             signatures, band_schema)
         t_sig = best2(lambda: banded.count())
         pairs = _pairs_from_banded(banded, "vec_id", 256, None)

@@ -237,3 +237,33 @@ def test_annotations_add_wins_merge(spark):
     assert out["a1"]["content"] == "edited" and out["a1"]["user_id"] == "bob"
     assert "a2" not in out
     assert out["a3"]["document_id"] == "d2"
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_make_op_rejects_non_finite_vector(bad):
+    # the op log's Arrow path turns a NaN inside an array into null, so
+    # a NaN op would reach the LWW merge as a null vector
+    with pytest.raises(ValueError, match="NaN or infinite"):
+        make_op("a", "add", HLC(1, 0, 1), vector=[1.0, bad])
+    assert make_op("a", "delete", HLC(1, 0, 1))["vector"] is None
+
+
+def test_local_df_falls_back_only_on_conversion_errors(spark, monkeypatch):
+    import pandas as pd
+
+    from needle_spark.session import local_df
+
+    # an int in a string column sends Arrow to Spark's record path, where
+    # the pandas float cell of the nullable long column is rejected
+    # (TypeError); the classic path takes the raw rows as they are
+    rows = [(5, 1), (6, None)]
+    got = local_df(spark, rows, "s string, n long").collect()
+    want = spark.createDataFrame(rows, "s string, n long").collect()
+    assert got == want == [("5", 1), ("6", None)]
+
+    def boom(*a, **k):
+        raise RuntimeError("boom")
+
+    monkeypatch.setattr(pd.DataFrame, "from_records", boom)
+    with pytest.raises(RuntimeError, match="boom"):
+        local_df(spark, rows, "s string, n long")

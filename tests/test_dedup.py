@@ -3,6 +3,7 @@ oracle, MinHash-LSH recall vs exact pairs, SimHash, embedding near-dup."""
 
 import itertools
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -735,3 +736,146 @@ def test_neardup_components_star_random_vs_unionfind(spark):
               for r in neardup_components(pairs, id_col="id",
                                           algorithm="hashmin").collect()}
     assert got_hm == want
+
+
+# ------------------------------------------- the vector-column contract ---
+#
+# Every Spark kernel reads its vectors through knn_arrow.vector_matrix:
+# a null cell, mixed widths or a NaN component raises ValueError naming
+# the column.  A kernel's error reaches the driver wrapped in Spark's
+# PythonException, whose text carries the original exception.
+
+def _vector_kernels():
+    import numpy as np
+
+    from needle_spark.operators.anomaly import IsolationForest
+    from needle_spark.operators.dedup import (
+        blockpair_neardup_pairs,
+        srp_lsh_neardup_pairs,
+    )
+    from needle_spark.operators.dimreduce import PCA, NeighborEmbedding
+    from needle_spark.operators.drift import _EXPR_DIMS_LIMIT, vector_stats
+    from needle_spark.operators.encrypted_search import (
+        EncryptionConfig as LshConfig,
+        encrypt_vectors,
+    )
+    from needle_spark.operators.encryption import (
+        EncryptionConfig,
+        KeyManager,
+        VectorEncryptor,
+    )
+    from needle_spark.operators.insert_dedup import (
+        SemanticDedupConfig,
+        apply_insert_dedup,
+    )
+    from needle_spark.operators.knn_arrow import batch_knn_arrow
+    from needle_spark.operators.llm_response_cache import cache_lookup_batch
+    from needle_spark.operators.vector_agg import group_medoid
+    from needle_spark.plans.flat import FlatKnnIndex
+    from needle_spark.plans.ivf import IvfBatchKnnIndex, IvfIndex
+    from needle_spark.plans.quantization import ProductQuantizer
+
+    def cache(df):
+        spark = df.sparkSession
+        entries = spark.createDataFrame(
+            [("q", [1.0, 0.0, 0.0, 0.0], "r")],
+            "cached_query string, embedding array<float>, response string")
+        batch = df.select(F.col("id").cast("string").alias("query"),
+                          F.col("vector").alias("embedding"))
+        return cache_lookup_batch(batch, entries, threshold=0.5)
+
+    def fitted_on_good(model, act):
+        return lambda df: act(model.fit(df.filter("id < 3")), df)
+
+    return {
+        "embedding_neardup": lambda df: embedding_neardup_pairs(
+            df, 0.5, metric="euclidean"),
+        "srp_lsh": lambda df: srp_lsh_neardup_pairs(
+            df, 0.5, n_bits=32, bands=2),
+        "blockpair": lambda df: blockpair_neardup_pairs(
+            df, 0.5, metric="euclidean", num_blocks=2),
+        "batch_knn_arrow": lambda df: batch_knn_arrow(
+            df, ([0], [[1.0, 0.0, 0.0, 0.0]]), k=2),
+        "ivf_assign": lambda df: IvfIndex(
+            np.eye(4)[:2], "vector", "id").assign(df),
+        "ivf_encode": lambda df: IvfBatchKnnIndex(
+            df.filter("id < 3"), nlist=2, persist=False).add(df),
+        "flat_from_df": lambda df: FlatKnnIndex.from_df(df),
+        "insert_dedup": lambda df: apply_insert_dedup(
+            df.filter("id < 0"), df, SemanticDedupConfig(enabled=True)),
+        "pq_encode": lambda df: ProductQuantizer(
+            np.zeros((2, 256, 2))).encode(df),
+        "group_medoid": lambda df: group_medoid(
+            df.withColumn("label", F.lit("a"))),
+        "vector_stats": lambda df: vector_stats(
+            df, dims=_EXPR_DIMS_LIMIT + 1),
+        "pca_fit": lambda df: PCA.fit(df, 2),
+        "neighbor_embedding": fitted_on_good(
+            NeighborEmbedding(n_iter=5),
+            lambda m, df: m.transform(df)),
+        "isolation_forest": fitted_on_good(
+            IsolationForest(n_trees=2, sample_size=3),
+            lambda m, df: m.score(df)),
+        "encrypted_search": lambda df: encrypt_vectors(
+            df, LshConfig(dimensions=4, hash_bits=8)),
+        "encryption": lambda df: VectorEncryptor(
+            EncryptionConfig(), KeyManager(b"k" * 32)).encrypt_vectors(df),
+        "cache_lookup_batch": cache,
+    }
+
+
+_BAD_VECTORS = {
+    "null": None,
+    "ragged": [1.0, 0.0, 0.0, 0.0, 1.0],
+    "nan": [float("nan"), 0.0, 0.0, 0.0],
+}
+# SRP and vector_stats drop null vectors by rule (no signature / not in
+# the sample), so a null row is skipped there instead of raising
+_SKIPS_NULLS = {"srp_lsh", "vector_stats"}
+
+
+@pytest.mark.parametrize("bad", sorted(_BAD_VECTORS))
+@pytest.mark.parametrize("kernel", sorted(_vector_kernels()))
+def test_vector_kernels_reject_bad_vectors(spark, kernel, bad):
+    from pyspark.sql import DataFrame
+
+    rows = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.9, 0.1, 0.0, 0.0]),
+            (2, [0.0, 1.0, 0.0, 0.0]), (3, _BAD_VECTORS[bad])]
+    # one partition: the bad row shares a batch with the good ones
+    df = spark.createDataFrame(rows, "id long, vector array<float>") \
+        .coalesce(1)
+    run = _vector_kernels()[kernel]
+
+    def act():
+        out = run(df)
+        if isinstance(out, DataFrame):
+            out.collect()
+
+    if bad == "null" and kernel in _SKIPS_NULLS:
+        act()
+        return
+    with pytest.raises(Exception) as err:
+        act()
+    if isinstance(err.value, ValueError):  # raised in the driver
+        assert str(err.value).startswith("vector: ")
+    else:  # raised in a task; EncryptionError subclasses ValueError
+        assert re.search(r"(ValueError|EncryptionError|EncryptedSearchError):"
+                         r" (vector|embedding): ", str(err.value)), \
+            str(err.value)[:2000]
+
+
+def test_srp_lsh_pair_verify_rejects_mixed_widths(spark):
+    """Two partitions of uniform but different widths pass the
+    signature kernel (each task sees one width); a candidate pair that
+    spans them must not be scored as if the widths matched."""
+    from needle_spark.operators.dedup import srp_lsh_neardup_pairs
+
+    schema = "id long, vector array<float>"
+    # same seed: the 5-d hyperplane matrix extends the 4-d one, so the
+    # zero-padded twin gets the identical signature and becomes a pair
+    df = spark.createDataFrame([(0, [1.0, 0.5, 0.0, 0.0])], schema) \
+        .coalesce(1).union(spark.createDataFrame(
+            [(1, [1.0, 0.5, 0.0, 0.0, 0.0])], schema).coalesce(1))
+    with pytest.raises(Exception, match="ValueError: vector: rows of "
+                                        "differing widths 4 and 5"):
+        srp_lsh_neardup_pairs(df, 0.5, n_bits=32, bands=2).collect()

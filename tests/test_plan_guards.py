@@ -16,8 +16,10 @@ regress them:
   as TakeOrderedAndProject (per-partition heaps, no global sort);
 - aggregation: map-side partial aggregation before the shuffle;
 - embedding near-dup: the verification kernel is a distributed
-  FlatMapGroupsInPandas over cells, not a driver-side loop.
+  FlatMapGroupsInArrow over cells, not a driver-side loop.
 """
+
+import ast
 
 import pytest
 from pyspark.sql import functions as F
@@ -111,7 +113,7 @@ def test_embedding_neardup_is_distributed_kernel(spark, embeddings):
         embeddings.limit(300), threshold=0.15, metric="euclidean",
         vector_col="embedding", id_col="vec_id")
     p = plan_of(pairs)
-    assert "FlatMapGroupsInPandas" in p  # per-cell verification kernel
+    assert "FlatMapGroupsInArrow" in p  # per-cell verification kernel
     assert "Scan parquet" in p           # source scan retained (no collect)
 
 
@@ -327,7 +329,8 @@ def test_insert_dedup_nn_broadcasts_batch_partial_agg(spark, embeddings):
     # partial (map-side) min before the exchange
     assert p.count("HashAggregate") >= 2 or "partial_min" in p
     # end-to-end result sanity through the real API
-    res = _nn_vs_existing(existing, batch_pdf, cfg, "id", "vector")
+    res = _nn_vs_existing(existing, batch_pdf["__bid"].tolist(),
+                          np.stack(batch_pdf["__bvec"]), cfg, "id", "vector")
     assert set(res) == {"b1", "b2"}
 
 
@@ -384,3 +387,139 @@ def test_hybrid_rrf_windows_rank_limited_legs(spark):
     assert _windows_above_limits(ql) == 2
     hs = hybrid_search(docs, [1.0, 0.0], "alpha w1", k=5, fetch_n=20)
     assert _windows_above_limits(hs) == 2
+
+
+# ------------------------------------------ no per-row vector copies ---
+#
+# Kernels read vector columns through knn_arrow.vector_matrix (one
+# reshape of the Arrow values buffer, one rule for null / width / NaN).
+# This scan finds the hand-written per-row conversion that rule replaced:
+# np.asarray / np.array / np.stack fed by a comprehension over a column
+# (`for v in pdf[col]`, `arr.to_pylist()`, a UDF's Series argument) or
+# by `pdf[col].tolist()`, and a `for v in <column>` loop converting
+# each row with np.asarray.
+
+_NP_MATRIX_FNS = {"asarray", "array", "stack"}
+
+# qualified name -> why it may convert row by row
+_PER_ROW_ALLOWED = {
+    # documented rule: null vectors pack zero words, ragged rows zero-pad
+    # or truncate, NaN packs 1 (tests/test_nl_quant.py)
+    "BinaryQuantizer.encode._pack",
+    # vectors from a request payload / caller-supplied (id, vector)
+    # pairs, on the driver, not a column
+    "RestServer._index_add",
+    "_resolve_queries",
+    # applyInPandasWithState has no Arrow twin; documented rule drops
+    # null and off-width vectors instead of failing the stream
+    "streaming_centroids.fn",
+}
+
+
+def _np_matrix_call(node) -> bool:
+    f = getattr(node, "func", None)
+    return (isinstance(node, ast.Call) and isinstance(f, ast.Attribute)
+            and f.attr in _NP_MATRIX_FNS and isinstance(f.value, ast.Name)
+            and f.value.id == "np")
+
+
+def _row_of(expr, var: set) -> bool:
+    """expr is the loop variable, a subscript of it, or a list() /
+    np conversion of one of those."""
+    if isinstance(expr, ast.Name):
+        return expr.id in var
+    if isinstance(expr, ast.Subscript):
+        return _row_of(expr.value, var)
+    if isinstance(expr, ast.Call) and expr.args and (
+            _np_matrix_call(expr) or getattr(expr.func, "id", None) == "list"):
+        return _row_of(expr.args[0], var)
+    return False
+
+
+def _column(it, params: set) -> bool:
+    if isinstance(it, ast.Call) and getattr(it.func, "id", None) == "enumerate":
+        it = it.args[0]
+    if isinstance(it, ast.Subscript):
+        return True
+    if isinstance(it, ast.Call) and isinstance(it.func, ast.Attribute):
+        return it.func.attr in ("to_pylist", "tolist")
+    return isinstance(it, ast.Name) and it.id in params
+
+
+def _names(target) -> set:
+    return {n.id for n in ast.walk(target) if isinstance(n, ast.Name)}
+
+
+def _per_row_copies(tree) -> list:
+    """(qualified name, line) of each per-row vector conversion."""
+    found = []
+
+    def visit(node, scope, params):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef)):
+                inner = set(params)
+                if not isinstance(child, ast.ClassDef):
+                    inner |= {a.arg for a in child.args.args
+                              + child.args.kwonlyargs}
+                visit(child, scope + [child.name], inner)
+                continue
+            hit = False
+            if _np_matrix_call(child) and child.args:
+                a = child.args[0]
+                if isinstance(a, (ast.ListComp, ast.GeneratorExp)):
+                    g = a.generators[0]
+                    hit = (_column(g.iter, params)
+                           and _row_of(a.elt, _names(g.target)))
+                elif getattr(a, "func", None) is not None:
+                    hit = (getattr(a.func, "attr", None) == "tolist"
+                           and isinstance(a.func.value, ast.Subscript))
+            elif isinstance(child, ast.For) and _column(child.iter, params):
+                var = _names(child.target)
+                hit = any(_np_matrix_call(n) and n.args and _row_of(n.args[0], var)
+                          for stmt in child.body for n in ast.walk(stmt))
+            if hit:
+                found.append((".".join(scope), child.lineno))
+            visit(child, scope, params)
+
+    visit(tree, [], set())
+    return found
+
+
+def test_per_row_scan_catches_the_replaced_copies():
+    src = '''
+def kernel(batches):
+    for pdf in batches:
+        X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
+        Y = np.array(pdf["v"].tolist(), dtype=np.float64)
+        Z = np.asarray([np.asarray(v) for v in arr.to_pylist()])
+
+def udf(s):
+    return np.stack([np.asarray(x, dtype=np.float64) for x in s])
+
+def rows_loop(vs):
+    for i, v in enumerate(vs):
+        a = np.asarray(v, dtype=np.float64)
+'''
+    assert [q for q, _ in _per_row_copies(ast.parse(src))] == [
+        "kernel", "kernel", "kernel", "udf", "rows_loop"]
+
+
+def test_no_per_row_vector_copies():
+    import pathlib
+
+    import needle_spark
+
+    root = pathlib.Path(needle_spark.__file__).parent
+    found = {}
+    for path in sorted(root.rglob("*.py")):
+        for qual, line in _per_row_copies(ast.parse(path.read_text())):
+            found.setdefault(qual, []).append(
+                f"{path.relative_to(root.parent)}:{line}")
+    extra = {q: where for q, where in found.items()
+             if q not in _PER_ROW_ALLOWED}
+    assert not extra, (
+        "per-row vector conversion outside knn_arrow.vector_matrix: "
+        f"{extra}")
+    # an allowlist entry whose code is gone must leave the list too
+    assert set(found) == _PER_ROW_ALLOWED
