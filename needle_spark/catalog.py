@@ -38,12 +38,16 @@ Insert validation mirrors the reference's contract
 (tests/edge_cases.rs:173-215): dimension mismatch, NaN/Inf, and
 duplicate ids are rejected.
 
-Spark jobs per insert: df() starts none (each object's schema comes
-from its Parquet footer), the batch is checked and counted in ONE action
-under the commit lock (dimension, NaN/Inf, duplicate-in-batch and
-existing-id counts together), then the segment write, the CDC
-sequencing and the CDC append.  The existing-id check still joins the
-batch against the whole live view, so an insert is O(collection).
+Write batches come in two forms.  A pyarrow.Table (every REST write)
+is checked in-process with pyarrow.compute (dimension, NaN/Inf,
+duplicate-in-batch, metadata schema, row count); its existing-id check
+runs under the commit lock against the id columns of the segments
+(_live_ids, no Spark job), and it reaches Spark once, as a JVM
+LocalRelation feeding the segment and CDC writes.  A DataFrame batch is
+checked and counted in ONE Spark action under the commit lock, its
+existing-id check an inner join against the whole live view.  df()
+starts no job either way (each object's schema comes from its Parquet
+footer).
 """
 
 from __future__ import annotations
@@ -59,6 +63,8 @@ import uuid
 from functools import reduce
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -493,6 +499,48 @@ class Collection:
             reader = reader.schema(schema)
         return reader.parquet(path)
 
+    def _live_ids(self, ids) -> set:
+        """The ids among `ids` that df() shows, read in-process with
+        pyarrow and no Spark job: only the id column (and `expires_at`)
+        of each seg-/del- object of the current version, under an `in`
+        filter so row groups whose min/max miss every id are skipped.
+        Same merge-on-read rules as df(): a tombstone masks the segments
+        before its position, and a default-TTL collection hides rows
+        whose expiry has passed by the wall clock."""
+        import pyarrow.dataset as ds
+
+        ic = self.id_col
+        ids = [i for i in ids if i is not None]
+        if not ids:
+            return set()
+        now = (int(time.time())
+               if self._manifest.get("default_ttl_seconds") is not None
+               else None)
+
+        def read(name: str, ttl: bool) -> set:
+            obj = ds.dataset(os.path.join(self.path, name), format="parquet")
+            names = obj.schema.names
+            if ic not in names:  # an object with no part file
+                return set()
+            flt = ds.field(ic).isin(
+                pa.array(ids).cast(obj.schema.field(ic).type))
+            if ttl and "expires_at" in names:
+                exp = ds.field("expires_at")
+                flt &= exp.is_null() | (exp > now)
+            return set(obj.to_table(columns=[ic], filter=flt)
+                       .column(0).to_pylist())
+
+        entry = self._entry(self.version)
+        masks = [(read(t, False), pos) for t, pos in entry["tombstones"]]
+        live = set()
+        for i, seg in enumerate(entry["segments"]):
+            rows = read(seg, now is not None)
+            for mask, pos in masks:
+                if pos > i:
+                    rows -= mask
+            live |= rows
+        return live
+
     @property
     def version(self) -> int:
         return self._manifest["version"]
@@ -658,11 +706,17 @@ class Collection:
             self._manifest["metadata_schema"] = fields
             self._write_manifest_static(self.path, self._manifest)
 
-    def _validate_schema(self, rows: DataFrame) -> None:
+    def _validate_schema(self, rows: DataFrame | pa.Table) -> None:
         spec: dict = self._manifest.get("metadata_schema") or {}
         if not spec:
             return
-        dtypes = dict(rows.dtypes)
+        if isinstance(rows, pa.Table):
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            dtypes = {f.name: f.dataType.simpleString()
+                      for f in from_arrow_schema(rows.schema)}
+        else:
+            dtypes = dict(rows.dtypes)
         for fname, fspec in spec.items():
             required = bool(fspec.get("required"))
             if fname not in dtypes:
@@ -684,36 +738,57 @@ class Collection:
                     f"field {fname!r}: declared {want}, batch has {got}"
                 )
             if required:
-                nulls = rows.filter(F.col(fname).isNull()).count()
+                nulls = (rows.column(fname).null_count
+                         if isinstance(rows, pa.Table)
+                         else rows.filter(F.col(fname).isNull()).count())
                 if nulls:
                     raise CollectionError(f"{nulls} null values in required field {fname!r}")
 
     # -------------------------------------------------------- validate --
-    def _validate_new(self, rows: DataFrame, live: DataFrame | None = None,
+    def _validate_new(self, rows: DataFrame | pa.Table,
+                      live: DataFrame | None = None,
                       dims: int | None = None) -> int:
-        """Check a batch in ONE action and return its row count:
-        dimension (against `dims`, default the manifest's), NaN/Inf and
-        duplicate-in-batch sums, plus, when `live` (the collection's
+        """Check a batch and return its row count: dimension (against
+        `dims`, default the manifest's), NaN/Inf and duplicate-in-batch
+        counts, plus, for a DataFrame when `live` (the collection's
         current view) is given, the number of batch ids already in it.
-        The existing-id count is the batch ids inner-joined with the
-        live ids, so the planner can broadcast the small batch (a rows
-        LEFT JOIN live plan could only broadcast the collection side)."""
+
+        A pyarrow.Table is checked in-process on whole columns (a null
+        vector counts as a width mismatch, like Spark's size(null) = -1;
+        NaN/Inf on the float32 values; duplicates are count − distinct
+        non-null ids).  A DataFrame is checked in ONE action; its
+        existing-id count is the batch ids inner-joined with the live
+        ids, so the planner can broadcast the small batch (a rows LEFT
+        JOIN live plan could only broadcast the collection side)."""
         self._validate_schema(rows)
         vc, ic = self.vector_col, self.id_col
         dims = self.dims if dims is None else dims
-        checks = rows.select(
-            F.sum((F.size(vc) != dims).cast("int")).alias("dim"),
-            F.sum(
-                F.exists(vc, lambda x: F.isnan(x) | (F.abs(x) == float("inf"))).cast("int")
-            ).alias("nonfinite"),
-            (F.count(F.lit(1)) - F.countDistinct(ic)).alias("dup_in_batch"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        if live is not None:
-            checks = checks.crossJoin(
-                rows.select(ic).join(live.select(ic), ic, "inner")
-                .agg(F.count(F.lit(1)).alias("existing")))
-        bad = checks.first()
+        if isinstance(rows, pa.Table):
+            vec = rows.column(vc)
+            widths = pc.list_value_length(vec)
+            values = pc.list_flatten(vec).cast(pa.float32())
+            bad = {
+                "dim": pc.sum(pc.fill_null(pc.not_equal(widths, dims),
+                                           True)).as_py(),
+                "nonfinite": pc.sum(pc.invert(pc.is_finite(values))).as_py(),
+                "dup_in_batch": (rows.num_rows
+                                 - pc.count_distinct(rows.column(ic)).as_py()),
+                "n": rows.num_rows,
+            }
+        else:
+            checks = rows.select(
+                F.sum((F.size(vc) != dims).cast("int")).alias("dim"),
+                F.sum(
+                    F.exists(vc, lambda x: F.isnan(x) | (F.abs(x) == float("inf"))).cast("int")
+                ).alias("nonfinite"),
+                (F.count(F.lit(1)) - F.countDistinct(ic)).alias("dup_in_batch"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            if live is not None:
+                checks = checks.crossJoin(
+                    rows.select(ic).join(live.select(ic), ic, "inner")
+                    .agg(F.count(F.lit(1)).alias("existing")))
+            bad = checks.first()
         if bad["dim"]:
             raise CollectionError(f"dimension mismatch: expected {dims}")
         if bad["nonfinite"]:
@@ -725,7 +800,8 @@ class Collection:
         return bad["n"]
 
     # -------------------------------------------------------- mutate --
-    def _stamp_ttl(self, rows: DataFrame, now_ms: int | None) -> DataFrame:
+    def _stamp_ttl(self, rows: DataFrame | pa.Table,
+                   now_ms: int | None) -> DataFrame | pa.Table:
         """Default-TTL expiry stamp (CollectionConfig::
         with_default_ttl_seconds, ttl.rs): inserted rows without an
         explicit expires_at get now + ttl."""
@@ -733,21 +809,51 @@ class Collection:
         if ttl is None:
             return rows
         now_s = (now_ms if now_ms is not None else _utcnow_ms()) // 1000
+        if isinstance(rows, pa.Table):
+            exp = pa.scalar(int(now_s + ttl), pa.int64())
+            if "expires_at" in rows.column_names:
+                return rows.set_column(
+                    rows.column_names.index("expires_at"), "expires_at",
+                    pc.coalesce(rows["expires_at"].cast(pa.int64()), exp))
+            return rows.append_column("expires_at",
+                                      pa.repeat(exp, rows.num_rows))
         exp = F.lit(int(now_s + ttl)).cast("long")
         if "expires_at" in rows.columns:
             return rows.withColumn(
                 "expires_at", F.coalesce(F.col("expires_at").cast("long"), exp))
         return rows.withColumn("expires_at", exp)
 
-    def insert(self, rows: DataFrame, now_ms: int | None = None) -> int:
+    def insert(self, rows: DataFrame | pa.Table,
+               now_ms: int | None = None) -> int:
         """Append rows as one new segment; rejects duplicate ids
         (insert.rs semantics).  When the collection has semantic dedup
         enabled (set_semantic_dedup), routes through the policy gate
         (insert.rs:147) and returns the number of rows actually
-        appended."""
+        appended.  A pyarrow.Table batch is checked in-process (see
+        _validate_new) and its existing ids are looked up under the
+        commit lock in the segments' id columns (_live_ids): no Spark
+        job runs before the segment write."""
         if self._manifest.get("semantic_dedup", {}).get("enabled"):
+            if isinstance(rows, pa.Table):
+                rows = self.spark.createDataFrame(rows)
             out = self.insert_dedup(rows, now_ms=now_ms)
             return out["inserted"] + out["versioned"]
+        if isinstance(rows, pa.Table):
+            rows = self._stamp_ttl(rows, now_ms)
+            n = self._validate_new(rows)
+            ids = rows.column(self.id_col).to_pylist()
+
+            def no_existing_ids():
+                # under the lock, against the refreshed version: another
+                # instance may have inserted one of the ids meanwhile
+                existing = len(self._live_ids(ids))
+                if existing:
+                    raise CollectionError(f"{existing} ids already exist")
+
+            batch = self.spark.createDataFrame(rows)
+            return self._commit(
+                [("add", batch)], [self._event_df(batch, "insert")], n,
+                now_ms, precommit=no_existing_ids)
         rows = self._stamp_ttl(rows, now_ms).persist()
         try:
             # every check runs as ONE action inside the commit lock:
@@ -765,29 +871,50 @@ class Collection:
         finally:
             rows.unpersist()
 
-    def upsert(self, rows: DataFrame, now_ms: int | None = None) -> int:
+    def upsert(self, rows: DataFrame | pa.Table,
+               now_ms: int | None = None) -> int:
         """MERGE semantics (mutations.rs upsert): tombstone matching ids
         in earlier segments, append the batch as a new segment — no
-        rewrite of existing data."""
-        rows = self._stamp_ttl(rows, now_ms).persist()
-        try:
-            n = self._validate_new(rows)
+        rewrite of existing data.  A pyarrow.Table batch is checked
+        in-process and written from one LocalRelation."""
+        def commit(batch: DataFrame, n: int) -> int:
             self._commit(
-                [("del", rows.select(self.id_col)), ("add", rows)],
-                [self._event_df(rows, "upsert")],
+                [("del", batch.select(self.id_col)), ("add", batch)],
+                [self._event_df(batch, "upsert")],
                 n,
                 now_ms,
             )
+            return n
+
+        rows = self._stamp_ttl(rows, now_ms)
+        if isinstance(rows, pa.Table):
+            return commit(self.spark.createDataFrame(rows),
+                          self._validate_new(rows))
+        rows = rows.persist()
+        try:
+            return commit(rows, self._validate_new(rows))
         finally:
             rows.unpersist()
-        return n
 
     def delete(self, flt: dict | None = None, ids: list | None = None,
                now_ms: int | None = None, pred=None) -> int:
         """Delete by filter, id list, or raw predicate Column
         (mutations.rs:27-115); returns the number of deleted rows.
         Writes only a tombstone of the victim ids — victims never land
-        on the driver."""
+        on the driver, except for an id list: its victims are the
+        listed ids live now, looked up in-process (_live_ids) with no
+        Spark job before the tombstone write."""
+        if pred is None and ids is not None \
+                and not isinstance(ids, DataFrame):
+            live = sorted(self._live_ids(ids))
+            if not live:
+                return 0
+            victims = self.spark.createDataFrame(
+                pa.table({self.id_col: pa.array(live)}))
+            self._commit([("del", victims)],
+                         [self._event_df(victims, "delete")], len(live),
+                         now_ms)
+            return len(live)
         cur = self.df()
         if pred is not None:
             pass
@@ -804,8 +931,6 @@ class Collection:
                 [("del", victims)], [self._event_df(victims, "delete")], n, now_ms
             )
             return n
-        elif ids is not None:
-            pred = F.col(self.id_col).isin(ids)
         elif flt is not None:
             pred = compile_filter(flt, df=cur)
         else:

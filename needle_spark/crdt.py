@@ -119,8 +119,7 @@ def make_op(id: str, op: str, hlc: HLC, *, vector: Sequence[float] | None = None
             metadata: dict[str, str] | None = None,
             meta_key: str | None = None, meta_value: str | None = None) -> dict:
     """One op-log row (TimestampedOp, crdt.rs:145-163).  A NaN or ±Inf
-    vector component raises ValueError: needle rejects it at insert, and
-    the op log's Arrow path would turn NaN into null before the merge."""
+    vector component raises ValueError: needle rejects it at insert."""
     if op not in ("add", "update", "update_meta", "delete"):
         raise ValueError(f"unknown CRDT op {op!r}")
     if vector is not None:

@@ -323,13 +323,13 @@ class HalfQuantizer:
         self.codes_col = codes_col
 
     # -- pack/unpack (vectorized over whole Arrow batches) -------------
-    def _pack(self, x: np.ndarray) -> bytes:
+    def _pack(self, X: np.ndarray) -> np.ndarray:
+        """(n, d) float32 matrix -> (n, d) 16-bit words."""
         if self.fmt == "float16":
-            return x.astype(np.float16).tobytes()
+            return X.astype(np.float16)
         # bfloat16 = top 16 bits of the float32 pattern (truncation,
         # float16.rs:202 from_f32)
-        u = x.astype(np.float32).view(np.uint32)
-        return (u >> 16).astype(np.uint16).tobytes()
+        return (X.view(np.uint32) >> 16).astype(np.uint16)
 
     def _unpack(self, raw: bytes) -> np.ndarray:
         if self.fmt == "float16":
@@ -337,14 +337,25 @@ class HalfQuantizer:
         u = np.frombuffer(raw, dtype=np.uint16).astype(np.uint32) << 16
         return u.view(np.float32)
 
+    def _encode_batch(self, arr):
+        """One Arrow batch of vectors -> fixed-width binary codes: the
+        batch is read through vector_matrix and packed as one matrix."""
+        import pyarrow as pa
+
+        H = np.ascontiguousarray(
+            self._pack(vector_matrix(arr, np.float32, self.vector_col)))
+        return pa.FixedSizeBinaryArray.from_buffers(
+            pa.binary(H.shape[1] * 2), len(H),
+            [None, pa.py_buffer(H.tobytes())])
+
     def encode(self, df: DataFrame) -> DataFrame:
         """One Arrow map pass: adds the packed `binary` column (keep the
         float column for exact rescoring, or drop it for 2x at rest)."""
-        pack = self._pack
+        encode_batch = self._encode_batch
 
-        @F.pandas_udf("binary")
-        def _enc(vs: pd.Series) -> pd.Series:
-            return vs.apply(lambda v: pack(np.asarray(v, dtype=np.float32)))
+        @F.arrow_udf("binary")
+        def _enc(s):
+            return encode_batch(s)
 
         return df.withColumn(self.codes_col, _enc(F.col(self.vector_col)))
 

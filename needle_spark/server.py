@@ -36,6 +36,7 @@ from concurrent.futures import TimeoutError as FuturesTimeout
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any, Callable
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from needle_spark.catalog import Collection, CollectionError, Database
@@ -44,10 +45,36 @@ from needle_spark.filters import compile_filter
 DEFAULT_K = 10  # server/types.rs:222 default_k
 
 META_SCHEMA = "id string, vector array<float>, metadata string"
+META_ARROW_SCHEMA = pa.schema([("id", pa.string()),
+                               ("vector", pa.list_(pa.float32())),
+                               ("metadata", pa.string())])
 
 # a pinned meta field whose get_json_object("$.<field>") path is a plain
 # key lookup ('.', '[' and '*' are JSON-path syntax)
 _PLAIN_META_KEY = re.compile(r"[\w-]+")
+
+
+def _rows_table(vectors: list[dict]) -> pa.Table:
+    """A REST write batch as one pyarrow.Table with META_SCHEMA's Arrow
+    schema: float32 vectors (1e39 overflows to Inf, which the insert
+    check rejects) and the metadata as sorted-key JSON text.  The
+    catalog checks it in-process; spark.createDataFrame(table) makes it
+    a JVM LocalRelation."""
+    ids, vecs, metas = [], [], []
+    for v in vectors:
+        if "id" not in v or "vector" not in v:
+            raise _bad("each vector needs 'id' and 'vector'")
+        meta = v.get("metadata")
+        ids.append(str(v["id"]))
+        vecs.append(v["vector"])
+        metas.append(None if meta is None
+                     else json.dumps(meta, sort_keys=True))
+    vector = pa.array(vecs, META_ARROW_SCHEMA.field("vector").type)
+    if vector.values.null_count:
+        raise _bad("vector components must be numbers")
+    return pa.Table.from_arrays([pa.array(ids, pa.string()), vector,
+                                 pa.array(metas, pa.string())],
+                                schema=META_ARROW_SCHEMA)
 
 
 def _pinned_values(payload: list[dict], fields: list[str]) -> dict | None:
@@ -431,19 +458,6 @@ class RestServer:
     def _coll(self, name: str) -> Collection:
         return self.db.collection(name)
 
-    def _rows_df(self, vectors: list[dict]):
-        rows = []
-        for v in vectors:
-            if "id" not in v or "vector" not in v:
-                raise _bad("each vector needs 'id' and 'vector'")
-            meta = v.get("metadata")
-            rows.append((
-                str(v["id"]),
-                [float(x) for x in v["vector"]],
-                None if meta is None else json.dumps(meta, sort_keys=True),
-            ))
-        return self.db.spark.createDataFrame(rows, META_SCHEMA)
-
     @staticmethod
     def _result_row(r, metric: str, include_vectors: bool) -> dict:
         d = float(r["distance"])
@@ -513,7 +527,7 @@ class RestServer:
 
     def insert_vector(self, m, b, q) -> dict:
         c = self._coll(m.group(1))
-        rows = self._rows_df([b])
+        rows = _rows_table([b])
         with self._mutate:
             n = c.insert(rows)
             self._index_add(m.group(1), [b])
@@ -524,7 +538,7 @@ class RestServer:
         vectors = b.get("vectors")
         if not isinstance(vectors, list) or not vectors:
             raise _bad("'vectors' must be a non-empty list")
-        rows = self._rows_df(vectors)
+        rows = _rows_table(vectors)
         with self._mutate:
             n = c.insert(rows)
             self._index_add(m.group(1), vectors)
@@ -532,7 +546,7 @@ class RestServer:
 
     def upsert_vector(self, m, b, q) -> dict:
         c = self._coll(m.group(1))
-        rows = self._rows_df([b])
+        rows = _rows_table([b])
         with self._mutate:
             n = c.upsert(rows)
             # add()/add_local() mask stale copies (upsert semantics)
@@ -1192,7 +1206,7 @@ class RestServer:
                            dtype=np.float32)
             idx.add_local(ids, V, metas=metas)
             return
-        rows_df = self._rows_df(payload)
+        rows_df = self.db.spark.createDataFrame(_rows_table(payload))
         for f in fields:
             rows_df = rows_df.withColumn(
                 f"__mf_{f}",
@@ -1257,7 +1271,7 @@ class RestServer:
     def insert_text(self, m, b, q) -> dict:
         c = self._coll(m.group(1))
         trows = self._text_rows(c, [b])
-        rows = self._rows_df(trows)
+        rows = _rows_table(trows)
         with self._mutate:
             n = c.insert(rows)
             self._index_add(m.group(1), trows)
@@ -1269,7 +1283,7 @@ class RestServer:
         if not isinstance(texts, list) or not texts:
             raise _bad("'texts' must be a non-empty list")
         trows = self._text_rows(c, texts)
-        rows = self._rows_df(trows)
+        rows = _rows_table(trows)
         with self._mutate:
             n = c.insert(rows)
             self._index_add(m.group(1), trows)
@@ -1753,7 +1767,7 @@ class RestServer:
                 good.append(v)
         inserted = 0
         if good:
-            rows = self._rows_df(good)
+            rows = _rows_table(good)
             with self._mutate:
                 inserted = c.upsert(rows)
                 self._index_add(m.group(1), good)
@@ -1773,7 +1787,7 @@ class RestServer:
             raise _bad("'id' and 'text' required")
         trows = self._text_rows(c, [b])
         with self._mutate:
-            c.insert(self._rows_df(trows))
+            c.insert(_rows_table(trows))
             self._index_add(m.group(1), trows)
         return {"inserted": str(b["id"])}
 
@@ -1878,7 +1892,7 @@ class RestServer:
             meta["_memory_session"] = str(b["session_id"])
         payload = [{"id": memory_id, "vector": vec, "metadata": meta}]
         with self._mutate:
-            c.insert(self._rows_df(payload))
+            c.insert(_rows_table(payload))
             self._index_add(m.group(1), payload)
         return {"stored": True, "memory_id": memory_id, "tier": tier,
                 "importance": importance}

@@ -35,31 +35,32 @@ CHECKPOINT_MODE_CONF = "spark.needle.checkpoint.mode"
 
 
 def local_df(spark: SparkSession, data, schema) -> DataFrame:
-    """JVM-resident local DataFrame from driver-side rows.
+    """JVM-resident local DataFrame from driver-side rows (tuples or
+    dicts keyed by column name).
 
     ``spark.createDataFrame(list, schema)`` keeps the rows in the
     PYTHON driver (a parallelized pickled RDD): every later action on
     any plan containing that relation re-runs one Python-worker round
     trip per such branch — measured ~0.3 s per branch per action, which
-    turns a 15-branch union's count() into ~5 s.  Routing the same rows
-    through a pandas DataFrame takes the Arrow conversion path and
-    lands them in a JVM LocalRelation (same count(): ~0.6 s).  Falls
-    back to the classic path for data the pandas/Arrow conversion
-    rejects (a TypeError, ValueError or Arrow error); any other error
-    propagates.  Vectors routed here must be finite: Arrow turns a NaN
-    inside an array into null (crdt.make_op checks its vectors)."""
-    import pandas as pd
+    turns a 15-branch union's count() into ~5 s.  The rows are built
+    here as a pyarrow.Table with the schema's Arrow types, so they land
+    in a JVM LocalRelation with their values exact (a nullable long
+    keeps all 64 bits, a NaN stays NaN).  Falls back to the classic
+    path for data the Arrow conversion rejects (a TypeError, ValueError
+    or Arrow error); any other error propagates."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
-    names = [f.name for f in schema.fields] if hasattr(schema, "fields") \
-        else list(spark.createDataFrame([], schema).columns)
+    if not isinstance(schema, StructType):
+        schema = spark.createDataFrame([], schema).schema
+    names = schema.fieldNames()
     try:
-        if data and isinstance(data[0], dict):
-            pdf = pd.DataFrame.from_records(
-                [{n: r.get(n) for n in names} for r in data], columns=names)
-        else:
-            pdf = pd.DataFrame.from_records(list(data), columns=names)
-        return spark.createDataFrame(pdf, schema=schema)
+        table = pa.Table.from_pylist(
+            [r if isinstance(r, dict) else dict(zip(names, r))
+             for r in data],
+            schema=to_arrow_schema(schema))
+        return spark.createDataFrame(table, schema=schema)
     except (TypeError, ValueError, pa.ArrowException):
         return spark.createDataFrame(data, schema)
 

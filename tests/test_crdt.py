@@ -1,6 +1,7 @@
 """Multi-replica CRDT merge: LWW convergence, deltas, Merkle
 anti-entropy, annotations (reference crdt.rs / collaborative_search.rs)."""
 
+import math
 import random
 
 import pytest
@@ -241,21 +242,19 @@ def test_annotations_add_wins_merge(spark):
 
 @pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
 def test_make_op_rejects_non_finite_vector(bad):
-    # the op log's Arrow path turns a NaN inside an array into null, so
-    # a NaN op would reach the LWW merge as a null vector
+    # needle rejects a non-finite component at insert
     with pytest.raises(ValueError, match="NaN or infinite"):
         make_op("a", "add", HLC(1, 0, 1), vector=[1.0, bad])
     assert make_op("a", "delete", HLC(1, 0, 1))["vector"] is None
 
 
 def test_local_df_falls_back_only_on_conversion_errors(spark, monkeypatch):
-    import pandas as pd
+    import pyspark.sql.pandas.types as arrow_types
 
     from needle_spark.session import local_df
 
-    # an int in a string column sends Arrow to Spark's record path, where
-    # the pandas float cell of the nullable long column is rejected
-    # (TypeError); the classic path takes the raw rows as they are
+    # Arrow rejects an int in a string column (ArrowTypeError); the
+    # classic path takes the raw rows as they are
     rows = [(5, 1), (6, None)]
     got = local_df(spark, rows, "s string, n long").collect()
     want = spark.createDataFrame(rows, "s string, n long").collect()
@@ -264,6 +263,27 @@ def test_local_df_falls_back_only_on_conversion_errors(spark, monkeypatch):
     def boom(*a, **k):
         raise RuntimeError("boom")
 
-    monkeypatch.setattr(pd.DataFrame, "from_records", boom)
+    monkeypatch.setattr(arrow_types, "to_arrow_schema", boom)
     with pytest.raises(RuntimeError, match="boom"):
         local_df(spark, rows, "s string, n long")
+
+
+def test_local_df_keeps_values_exact(spark, spark_jobs):
+    from needle_spark.crdt import op_log_df
+    from needle_spark.session import local_df
+
+    big = 2 ** 53 + 1  # float64 would round it to 2**53
+    rows = [("a", big, [1.0, float("nan")]), ("b", None, None)]
+    with spark_jobs() as jobs:
+        df = local_df(spark, rows, "s string, n long, v array<double>")
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert jobs.n == 0 and "LocalRelation" in plan
+    got = df.collect()
+    assert got[0]["n"] == big and got[1]["n"] is None
+    assert got[0]["v"][0] == 1.0 and math.isnan(got[0]["v"][1])
+    ops = [make_op("x", "add", HLC(1, 0, big), vector=[0.5, 2.0],
+                   metadata={"k": "v"}),
+           make_op("x", "delete", HLC(2, 0, big))]
+    back = sorted(op_log_df(spark, ops).collect(), key=lambda r: r["physical"])
+    assert [r["replica"] for r in back] == [big, big]
+    assert back[0]["metadata"] == {"k": "v"} and back[1]["vector"] is None

@@ -309,6 +309,50 @@ def test_half_quantizer_roundtrip_and_search(spark, embeddings):
         HalfQuantizer("fp8")
 
 
+def _half_bytes_per_row(fmt, v):
+    """The codes one vector packed on its own (the row-by-row rule)."""
+    x = np.asarray(v, dtype=np.float32)
+    if fmt == "float16":
+        return x.astype(np.float16).tobytes()
+    return (x.view(np.uint32) >> 16).astype(np.uint16).tobytes()
+
+
+@pytest.mark.filterwarnings("ignore:overflow encountered in cast")
+def test_half_quantizer_batch_codes_match_per_row(spark):
+    import pyarrow as pa
+
+    from needle_spark.plans.quantization import HalfQuantizer
+
+    rng = np.random.default_rng(7)
+    V = np.concatenate([
+        rng.standard_normal((30, 6)) * 10.0 ** rng.integers(-8, 6, (30, 1)),
+        # subnormal, signed zero, float16 overflow, bfloat16 truncation
+        [[1e-7, -0.0, 7e4, -7e4, 1.0 + 2 ** -10, 3.4e38]],
+    ]).astype(np.float32)
+    rows = V.tolist()
+    layouts = {
+        "list": pa.array(rows, pa.list_(pa.float32())),
+        "fixed": pa.array(rows, pa.list_(pa.float32(), 6)),
+        "sliced": pa.array([[0.0] * 6] * 3 + rows,
+                           pa.list_(pa.float32())).slice(3),
+        "chunked": pa.chunked_array([pa.array(rows[:11], pa.list_(pa.float64())),
+                                     pa.array(rows[11:], pa.list_(pa.float64()))]),
+    }
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(rows)],
+                               "id long, vector array<float>").repartition(3)
+    for fmt in ("float16", "bfloat16"):
+        hq = HalfQuantizer(fmt)
+        want = [_half_bytes_per_row(fmt, v) for v in rows]
+        for name, arr in layouts.items():
+            got = hq._encode_batch(arr)
+            assert got.type == pa.binary(12), name
+            assert got.to_pylist() == want, (fmt, name)
+        out = {r["id"]: bytes(r["half"]) for r in hq.encode(df).collect()}
+        assert [out[i] for i in range(len(rows))] == want, fmt
+        assert hq._encode_batch(pa.array([], pa.list_(pa.float32()))) \
+            .to_pylist() == []
+
+
 def test_adaptive_probe_tuner():
     from needle_spark.plans.tuning import AdaptiveProbeTuner
 
