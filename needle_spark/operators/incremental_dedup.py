@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from needle_spark.operators.dedup import (_banded_buckets_arrow_text,
-                                          _shingle_frame)
+                                          _jaccard_verify)
 
 
 class IncrementalMinHashDedup:
@@ -191,24 +191,6 @@ class IncrementalMinHashDedup:
 
     # ------------------------------------------------------- batch --
 
-    def _verify(self, cand: DataFrame, docs: DataFrame) -> DataFrame:
-        """Exact-Jaccard verify of candidate (id1, id2) pairs against
-        a frame holding BOTH sides' text (pairs-only join)."""
-        sh = _shingle_frame(docs, self.id_col, self.text_col, self.n,
-                            "arrow")
-        s1 = sh.select(F.col(self.id_col).alias("id1"),
-                       F.col("__sh").alias("__sh1"))
-        s2 = sh.select(F.col(self.id_col).alias("id2"),
-                       F.col("__sh").alias("__sh2"))
-        j = cand.join(s1, "id1").join(s2, "id2")
-        inter = F.size(F.array_intersect("__sh1", "__sh2")) \
-            .cast("double")
-        union = (F.size("__sh1") + F.size("__sh2")).cast("double") \
-            - inter
-        return (j.withColumn("jaccard", inter / union)
-                .filter(F.col("jaccard") >= self.threshold)
-                .select("id1", "id2", "jaccard"))
-
     def dedup_batch(self, batch: DataFrame, corpus: DataFrame | None,
                     update_state: bool = True) -> dict:
         """Dedup one micro-batch against the persisted corpus index
@@ -250,7 +232,9 @@ class IncrementalMinHashDedup:
                     .select(self.id_col, self.text_col)
                 docs = old_docs.unionByName(
                     batch.select(self.id_col, self.text_col))
-                verified = self._verify(cand_old, docs)
+                verified = _jaccard_verify(
+                    cand_old, docs, self.id_col, self.text_col, self.n,
+                    self.threshold)
             else:
                 verified = cand_old.withColumn(
                     "jaccard", F.lit(None).cast("double"))
@@ -270,8 +254,9 @@ class IncrementalMinHashDedup:
             .select(F.col(f"a.{self.id_col}").alias("id1"),
                     F.col(f"b.{self.id_col}").alias("id2"))
             .distinct())
-        wb_v = self._verify(
-            wb, batch.select(self.id_col, self.text_col))
+        wb_v = _jaccard_verify(
+            wb, batch.select(self.id_col, self.text_col), self.id_col,
+            self.text_col, self.n, self.threshold)
         wb_rows = wb_v.collect()
         # sequential keep-first over the (small, driver-sized) batch
         # pair list: a row near an already-DROPPED row still survives

@@ -18,6 +18,8 @@ from needle_spark.operators.dedup import (
     simhash_candidates,
 )
 
+from conftest import SF_DIR
+
 ROWS = [
     (1, "the quick brown fox jumps over the lazy dog near the river bank"),
     (2, "the quick brown fox jumps over the lazy dog near the river bend"),  # near-dup of 1
@@ -199,46 +201,41 @@ def test_simhash_candidates(spark, docs):
     assert (10, 12) not in got
 
 
-# Frozen signatures for sf0.01 documents 0..9 (arrow kernel: dual-salted
-# crc32 64-bit token hashes, tf-weighted bit majority).  SimHash has no
-# DuckDB oracle (no crc32/xxhash twin), so this GOLDEN fixture pins the
-# whole tokenizer+hash+majority pipeline: any drift breaks equality.
-SIMHASH_GOLDEN_SF001 = {
-    0: -3782642749880796218,
-    1: 658036095961904076,
-    2: -3191415660967625787,
-    3: 4734773351453678173,
-    4: 5995931394946233055,
-    5: 5311383708134142686,
-    6: 6608207955896693646,
-    7: 6608278222501180381,
-    8: -3333417888343010339,
-    9: -4488449152562105633,
-}
-# Candidate pairs among sf0.01 docs 0..59 at max_hamming=8, bands=4
-SIMHASH_GOLDEN_PAIRS = [(5, 32, 7), (28, 56, 7), (32, 37, 8), (40, 51, 8), (54, 57, 6)]
+SF001_DOCS = os.path.join(os.path.dirname(SF_DIR), "sf0.01",
+                          "documents.parquet")
 
 
-@pytest.mark.skipif(
-    not os.path.exists("/root/testdata/sf0.01/documents.parquet"),
-    reason="sf0.01 testdata not present",
-)
+@pytest.mark.skipif(not os.path.exists(SF001_DOCS),
+                    reason="sf0.01 testdata not present")
 def test_simhash_golden_values(spark):
+    """The SimHash kernel against its independent DuckDB twin: for sf0.01
+    docs 0..59, every signature equals the one the oracle SQL's `sim`
+    CTE computes, and the candidate pairs equal the oracle's pairs."""
+    import duckdb
+
+    import __spark_entry__ as em
     from needle_spark.operators.dedup import _simhash_arrow
 
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    sigs = {
-        r["doc_id"]: r["__sim"]
-        for r in _simhash_arrow(
-            docs.filter("doc_id < 10").select("doc_id", "text"), "doc_id", "text"
-        ).collect()
-    }
-    assert sigs == SIMHASH_GOLDEN_SF001
+    sql = em._SIMHASH_MD5_SQL
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"'{SF001_DOCS}' WHERE doc_id < 60")
+    sim_sql = sql[:sql.index("banded AS")].rstrip().rstrip(",")
+    want_sigs = {
+        d: s - (1 << 64) if s >= 1 << 63 else s  # UBIGINT -> signed
+        for d, s in con.execute(
+            f"{sim_sql}\nSELECT doc_id, s FROM sim").fetchall()}
+    want_pairs = sorted(con.execute(sql).fetchall())
 
-    pairs = simhash_candidates(
-        docs.filter("doc_id < 60"), id_col="doc_id", max_hamming=8)
+    docs = spark.read.parquet(SF001_DOCS).filter("doc_id < 60")
+    sigs = {r["doc_id"]: r["__sim"]
+            for r in _simhash_arrow(docs, "doc_id", "text").collect()}
+    assert len(sigs) == 60
+    assert sigs == want_sigs
+
+    pairs = simhash_candidates(docs, id_col="doc_id", max_hamming=8)
     got = sorted((r["id1"], r["id2"], r["hamming"]) for r in pairs.collect())
-    assert got == SIMHASH_GOLDEN_PAIRS
+    assert got and got == want_pairs
 
 
 def test_hot_group_pair_expansion_streams(spark):
@@ -420,18 +417,6 @@ def test_embedding_neardup_is_distributed(spark, embeddings):
     assert plan.count() > 0  # and the lazy plan still executes
 
 
-def test_simhash_md5_impl_same_semantics(spark, docs):
-    """The oracle-checkable md5 tier (round 5) runs the identical
-    banding/hamming algorithm over a different hash family: invariants
-    (identical text -> hamming 0; unrelated text absent) hold, and the
-    near-duplicate paragraph pair survives the hash swap."""
-    pairs = {(r["id1"], r["id2"]): r["hamming"] for r in
-             simhash_candidates(docs, id_col="id", max_hamming=10,
-                                impl="md5").collect()}
-    assert pairs[(1, 4)] == 0
-    assert (3, 5) not in pairs
-
-
 def test_srp_lsh_neardup_recall_and_precision(spark):
     """SRP-LSH (round 6): on a planted near-dup corpus (clusters of
     perturbed copies — the shape real embedding dedup sees), candidates
@@ -610,8 +595,8 @@ def test_srp_auto_band_width_scales_with_corpus(spark):
 
 
 def test_neardup_components_and_keeper(spark):
-    """Fuzzy-dedup group assignment (round 9): hash-min connected
-    components over a pair graph must equal a union-find oracle —
+    """Fuzzy-dedup group assignment (round 9): connected components
+    over a pair graph must equal a union-find oracle —
     including multi-hop chains (the case a one-round min would miss) —
     and the keeper op must retain exactly min-id-per-component plus
     all unpaired rows."""
@@ -675,12 +660,9 @@ def _uf_oracle(pair_list):
 
 def test_neardup_components_star_long_chain(spark):
     """Adversarial duplicate chain (VERDICT r9 #4): a 300-node path
-    graph has diameter 299 — hash-min label propagation needs 299
-    rounds (and must now RAISE at its bound instead of silently
-    returning wrong labels, ADVICE r9), while large-star/small-star
-    converges in O(log n) rounds well inside max_iter=30."""
-    import pytest as _pytest
-
+    graph has diameter 299 — label propagation would need 299 rounds,
+    while large-star/small-star converges in O(log n) rounds well
+    inside max_iter=30."""
     from needle_spark.operators.dedup import neardup_components
 
     n = 300
@@ -691,16 +673,14 @@ def test_neardup_components_star_long_chain(spark):
     pairs = spark.createDataFrame(pair_list, "id1 long, id2 long")
     want = _uf_oracle(pair_list)
     got = {r["id"]: r["component"]
-           for r in neardup_components(pairs, id_col="id",
-                                       algorithm="star").collect()}
+           for r in neardup_components(pairs, id_col="id").collect()}
     assert got == want
     assert set(got.values()) == {min(ids)}  # one component, min label
 
-    # hash-min on the same chain: diameter >> max_iter must raise, not
-    # return truncated labels
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        neardup_components(pairs, id_col="id", algorithm="hashmin",
-                           max_iter=5).collect()
+    # a round bound the chain cannot meet raises instead of returning
+    # partial labels
+    with pytest.raises(RuntimeError, match="did not converge"):
+        neardup_components(pairs, id_col="id", max_iter=1)
 
 
 def test_neardup_components_star_random_vs_unionfind(spark):
@@ -728,14 +708,8 @@ def test_neardup_components_star_random_vs_unionfind(spark):
     pairs = spark.createDataFrame(pair_list, "id1 long, id2 long")
     want = _uf_oracle([(a, b) for a, b in pair_list if a != b])
     got = {r["id"]: r["component"]
-           for r in neardup_components(pairs, id_col="id",
-                                       algorithm="star").collect()}
+           for r in neardup_components(pairs, id_col="id").collect()}
     assert got == want
-    # hashmin agrees on this small-diameter graph
-    got_hm = {r["id"]: r["component"]
-              for r in neardup_components(pairs, id_col="id",
-                                          algorithm="hashmin").collect()}
-    assert got_hm == want
 
 
 # ------------------------------------------- the vector-column contract ---

@@ -5,7 +5,7 @@ only."""
 
 import pytest
 
-import needle_spark.operators.incremental_dedup as incdedup
+import needle_spark.operators.dedup as dedup
 from needle_spark.operators.incremental_dedup import IncrementalMinHashDedup
 
 
@@ -99,14 +99,15 @@ def test_per_batch_cost_scales_with_batch_not_corpus(spark, tmp_path):
     """THE incremental claim, asserted structurally: the number of
     docs shingled per dedup_batch equals |batch| + |candidate corpus
     docs| — independent of corpus size (the banded index is probed,
-    never re-derived).  Counted by instrumenting _shingle_frame."""
+    never re-derived).  Counted by instrumenting _shingle_frame, which
+    the shared verify (dedup._jaccard_verify) calls."""
     import random
 
     from unittest import mock
 
     rng = random.Random(23)
     counts = []
-    orig = incdedup._shingle_frame
+    orig = dedup._shingle_frame
 
     def counting(df, *a, **k):
         counts.append(df.count())
@@ -126,10 +127,12 @@ def test_per_batch_cost_scales_with_batch_not_corpus(spark, tmp_path):
         batch = spark.createDataFrame(batch_rows,
                                       "id long, text string")
         counts.clear()
-        with mock.patch.object(incdedup, "_shingle_frame", counting):
+        with mock.patch.object(dedup, "_shingle_frame", counting):
             res = inc.dedup_batch(batch, corpus)
         assert {d[0] for d in res["dropped"]} == {9000}
         shingled_per_corpus[n_corpus] = sum(counts)
+    # the patch reached the shared verify's shingle scans
+    assert shingled_per_corpus[50] > 0
     # identical shingling work at 10x the corpus: |batch|-scaled cost
     assert shingled_per_corpus[50] == shingled_per_corpus[500]
     # and it is batch-sized: banding(5) + verify(candidates + batch)

@@ -15,11 +15,15 @@ regress them:
 - filtered kNN: predicate pushed to the Parquet scan + top-k planned
   as TakeOrderedAndProject (per-partition heaps, no global sort);
 - aggregation: map-side partial aggregation before the shuffle;
+- text near-dup: each operator runs its one Python kernel once — the
+  MinHash banding kernel and candidate shingle UDF, the SimHash kernel,
+  the n-gram shingle UDF;
 - embedding near-dup: the verification kernel is a distributed
   FlatMapGroupsInArrow over cells, not a driver-side loop.
 """
 
 import ast
+import collections
 
 import pytest
 from pyspark.sql import functions as F
@@ -115,6 +119,48 @@ def test_embedding_neardup_is_distributed_kernel(spark, embeddings):
     p = plan_of(pairs)
     assert "FlatMapGroupsInArrow" in p  # per-cell verification kernel
     assert "Scan parquet" in p           # source scan retained (no collect)
+
+
+def _python_nodes(p: str) -> tuple:
+    """(MapInPandas, ArrowEvalPython) tree entries of a formatted plan
+    (the detail section repeats each name as "(n) Name")."""
+    return p.count("MapInPandas ("), p.count("ArrowEvalPython (")
+
+
+def test_minhash_one_banding_kernel_one_shingle_udf(spark, documents):
+    """The banding kernel runs inside the materialized pair frame, the
+    candidate shingle UDF in the verify plan above it: one of each."""
+    from unittest import mock
+
+    from needle_spark.operators import dedup
+
+    banding_plans = []
+    real = dedup.materialize
+
+    def spy(df):
+        banding_plans.append(plan_of(df))
+        return real(df)
+
+    with mock.patch.object(dedup, "materialize", spy):
+        out = dedup.minhash_lsh_candidates(documents, id_col="doc_id",
+                                           text_col="text")
+    assert len(banding_plans) == 1
+    assert _python_nodes(banding_plans[0]) == (1, 0)
+    assert _python_nodes(plan_of(out)) == (0, 1)
+
+
+def test_simhash_one_kernel_no_udf(spark, documents):
+    from needle_spark.operators.dedup import simhash_candidates
+
+    p = plan_of(simhash_candidates(documents, id_col="doc_id"))
+    assert _python_nodes(p) == (1, 0)
+
+
+def test_ngram_jaccard_one_shingle_udf(spark, documents):
+    from needle_spark.operators.dedup import ngram_jaccard_pairs
+
+    p = plan_of(ngram_jaccard_pairs(documents, id_col="doc_id"))
+    assert _python_nodes(p) == (0, 1)
 
 
 def test_snapshot_diff_single_join_no_python(spark, embeddings):
@@ -523,3 +569,77 @@ def test_no_per_row_vector_copies():
         f"{extra}")
     # an allowlist entry whose code is gone must leave the list too
     assert set(found) == _PER_ROW_ALLOWED
+
+
+# ----------------------------------------------- no dead private helpers ---
+#
+# A module-level `_private` function or class in needle_spark/ that no
+# program file names — needle_spark/, __spark_entry__.py, bench.py or
+# perfbench/ — is dead code.  Tests do not count as callers, and a
+# helper naming itself (recursion) does not keep it alive.
+
+_PROGRAM_PATHS = ("needle_spark", "__spark_entry__.py", "bench.py",
+                  "perfbench")
+
+
+def _names_in(tree) -> collections.Counter:
+    """Every identifier a tree names: variables, attributes, imported
+    names and identifier-shaped string constants (getattr-style)."""
+    names = collections.Counter()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            names[n.id] += 1
+        elif isinstance(n, ast.Attribute):
+            names[n.attr] += 1
+        elif isinstance(n, ast.alias):
+            names[n.name.rsplit(".", 1)[-1]] += 1
+        elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+              and n.value.isidentifier()):
+            names[n.value] += 1
+    return names
+
+
+def _dead_private_helpers(sources: dict) -> list:
+    """'path:name' of each module-level _private def or class of a
+    needle_spark/ source that no source names outside its own body.
+    `sources` maps repo-relative paths to source text."""
+    defs, used = [], collections.Counter()
+    for path, text in sources.items():
+        tree = ast.parse(text)
+        used.update(_names_in(tree))
+        if path.startswith("needle_spark/"):
+            defs += [(path, n) for n in tree.body
+                     if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                       ast.ClassDef))
+                     and n.name.startswith("_") and not n.name.endswith("__")]
+    return sorted(f"{path}:{node.name}" for path, node in defs
+                  if used[node.name] == _names_in(node)[node.name])
+
+
+def test_dead_helper_scan_catches_an_unused_helper():
+    sources = {
+        "needle_spark/m.py": (
+            "def _used():\n    return 1\n"
+            "def _dead():\n    return 2\n"
+            "def _recursive(n):\n    return _recursive(n - 1)\n"
+            "class _Cls:\n    pass\n"
+            "def public():\n    return _Cls()\n"),
+        "bench.py": "from needle_spark.m import _used\n",
+    }
+    assert _dead_private_helpers(sources) == [
+        "needle_spark/m.py:_dead", "needle_spark/m.py:_recursive"]
+
+
+def test_no_dead_private_helpers():
+    import pathlib
+
+    import needle_spark
+
+    repo = pathlib.Path(needle_spark.__file__).parent.parent
+    sources = {}
+    for name in _PROGRAM_PATHS:
+        p = repo / name
+        for path in sorted(p.rglob("*.py")) if p.is_dir() else [p]:
+            sources[str(path.relative_to(repo))] = path.read_text()
+    dead = _dead_private_helpers(sources)
+    assert not dead, f"module-level private helpers with no caller: {dead}"
