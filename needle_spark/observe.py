@@ -30,7 +30,9 @@ import json
 import math
 import time
 from collections import deque
+from contextlib import contextmanager
 from dataclasses import dataclass, field
+from types import SimpleNamespace
 
 #: Histogram bucket sets — metrics.rs:393-414.
 DURATION_BUCKETS = (0.0001, 0.0005, 0.001, 0.005, 0.01, 0.05, 0.1, 0.5, 1.0)
@@ -79,11 +81,19 @@ class MetricsRegistry:
             self.histograms[key] = _Histogram(buckets)
         self.histograms[key].observe(value)
 
-    def operation(self, collection: str, operation: str) -> "OperationTimer":
-        """metrics.rs:505-517 — counts the op now, times it on exit."""
-        self.inc("needle_operations_total",
-                 {"collection": collection, "operation": operation})
-        return OperationTimer(self, collection, operation)
+    @contextmanager
+    def operation(self, collection: str, operation: str):
+        """metrics.rs:505-517, :600-614 — counts the op on entry and
+        records its duration on exit (a context manager instead of
+        Drop), also when the body raises."""
+        labels = {"collection": collection, "operation": operation}
+        self.inc("needle_operations_total", labels)
+        start = time.monotonic()
+        try:
+            yield
+        finally:
+            self.observe("needle_operation_duration_seconds", labels,
+                         time.monotonic() - start)
 
     def error(self, collection: str, operation: str, error_type: str) -> None:
         """metrics.rs:520-526."""
@@ -171,27 +181,6 @@ class MetricsRegistry:
             out.append(f"{name}_sum{fmt_labels(labels)} {num(h.total)}")
             out.append(f"{name}_count{fmt_labels(labels)} {h.n}")
         return "\n".join(out) + "\n"
-
-
-class OperationTimer:
-    """metrics.rs:600-614 — context manager instead of Drop."""
-
-    def __init__(self, registry: MetricsRegistry, collection: str,
-                 operation: str):
-        self.registry = registry
-        self.collection = collection
-        self.operation = operation
-        self.start = time.monotonic()
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        self.registry.observe(
-            "needle_operation_duration_seconds",
-            {"collection": self.collection, "operation": self.operation},
-            time.monotonic() - self.start)
-        return False
 
 
 # ------------------------------------------------------------- grafana
@@ -468,20 +457,6 @@ class RecallEstimator:
 
 
 @dataclass
-class IndexHealthMetrics:
-    """observability.rs:191-222."""
-
-    fragmentation_ratio: float = 0.0
-    balance_score: float = 1.0
-    memory_usage_bytes: int = 0
-    disk_usage_bytes: int = 0
-    vector_count: int = 0
-    deleted_count: int = 0
-    avg_connections_per_node: float = 0.0
-    last_compaction: str | None = None
-
-
-@dataclass
 class AlertRule:
     """observability.rs:264-274.  metric one of query_latency_p99 |
     recall_estimate | fragmentation | memory_usage | drift_score |
@@ -502,7 +477,10 @@ class ObservabilitySuite:
     def __init__(self):
         self.latency_histograms: dict[str, LatencyHistogram] = {}
         self.recall_estimator = RecallEstimator(100)
-        self.index_health: dict[str, IndexHealthMetrics] = {}
+        # per-collection health (observability.rs:191-222, the
+        # fields this port derives): fragmentation_ratio,
+        # vector_count, memory_usage_bytes
+        self.index_health: dict[str, SimpleNamespace] = {}
         self.alerts: list[dict] = []
         self.alert_rules: list[AlertRule] = []
         self.error_counts: dict[str, int] = {}
@@ -517,10 +495,10 @@ class ObservabilitySuite:
         self.error_counts[key] = self.error_counts.get(key, 0) + 1
 
     def update_index_health(self, collection: str,
-                            health: IndexHealthMetrics) -> None:
+                            health: SimpleNamespace) -> None:
         self.index_health[collection] = health
 
-    def health_from_collection(self, collection) -> IndexHealthMetrics:
+    def health_from_collection(self, collection) -> SimpleNamespace:
         """Derive real health from the catalog: fragmentation = delta
         segments beyond the first per version entry (auto-compaction's
         own trigger signal)."""
@@ -528,10 +506,9 @@ class ObservabilitySuite:
         segs = len(entry.get("segments", []) or [])
         dels = len(entry.get("tombstones", []) or [])
         frag = (segs + dels - 1) / (segs + dels) if segs + dels > 1 else 0.0
-        h = IndexHealthMetrics(
-            fragmentation_ratio=frag,
-            vector_count=collection.count(),
-        )
+        h = SimpleNamespace(fragmentation_ratio=frag,
+                            vector_count=collection.count(),
+                            memory_usage_bytes=0)
         self.index_health[collection.path] = h
         return h
 

@@ -558,17 +558,12 @@ def _simhash_arrow(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                 W = np.array(list(counts.values()), dtype=np.int64)
                 bits = ((H[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int64)
                 votes = ((bits * 2 - 1) * W[:, None]).sum(axis=0)
-                sim = np.uint64(0)
-                for b in range(64):
-                    if votes[b] > 0:
-                        sim |= np.uint64(1) << np.uint64(b)
-                v = int(sim)
-                if v >= 1 << 63:
-                    v -= 1 << 64  # reinterpret as signed two's-complement
                 ids.append(did)
-                sims.append(v)
+                sims.append(((votes > 0).astype(np.uint64) << shifts).sum())
             if ids:
-                yield pd.DataFrame({id_col: ids, "__sim": np.array(sims, dtype=np.int64)})
+                # same 64 bits, reinterpreted as signed (Spark LongType)
+                yield pd.DataFrame({id_col: ids, "__sim": np.array(
+                    sims, dtype=np.uint64).view(np.int64)})
 
     return df.select(id_col, text_col).mapInPandas(kernel, schema)
 

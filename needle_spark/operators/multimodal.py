@@ -197,9 +197,9 @@ def _decode_png(data: bytes) -> np.ndarray:
         row = np.frombuffer(raw, dtype=np.uint8,
                             count=stride, offset=off + 1).copy()
         off += 1 + stride
-        if ftype == 1:    # Sub
-            for x in range(bpp, stride):
-                row[x] = (row[x] + row[x - bpp]) & 0xFF
+        if ftype == 1:    # Sub: per-lane running sum, wrapping mod 256
+            row = np.cumsum(row.reshape(-1, bpp), axis=0,
+                            dtype=np.uint8).reshape(-1)
         elif ftype == 2:  # Up
             row = (row.astype(np.uint16) + prev) & 0xFF
             row = row.astype(np.uint8)

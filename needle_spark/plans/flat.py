@@ -69,6 +69,10 @@ from needle_spark.plans.ivf import IvfBatchKnnIndex, _l2_normalize
 
 __all__ = ["FlatKnnIndex", "single_thread_blas"]
 
+#: single-query serving paths: the exact scan and the two compiled
+#: coarse cuts (each with an exact float32 re-rank)
+_PATHS = ("exact", "f16", "vnni")
+
 _BLAS_CTL = None  # cached (set_fn, get_fn) | (None, None)
 _PIN_LOCK = threading.Lock()
 _PIN_COUNT = 0     # concurrent single_thread_blas holders
@@ -166,17 +170,10 @@ class FlatKnnIndex:
     SAMPLE_RANK = 3
     #: at or below this many queries per call the full float32 pass is
     #: GEMV-shaped (pure memory bandwidth, can't amortize the 4B/dim
-    #: read across queries) — route through the SQ8 coarse sidecar
+    #: read across queries): the coarse cuts keep their full over-fetch
+    #: (see _fetch), and f16 without the fused gemm8 kernel serves only
+    #: calls this small
     COARSE_MAX_Q = 4
-    #: coarse survivors re-ranked exactly per query; ~400x over-fetch
-    #: at k=10 buries the SQ8 quantization error (see _scan_coarse)
-    COARSE_FETCH = 4096
-    #: 1-bit coarse survivors per query (path="bin"): sign codes are
-    #: coarser than SQ8, so the cut over-fetches harder — the pass is
-    #: so cheap (25 MB at 1M x 200) that rerank cost, not the cut,
-    #: bounds the fetch.  Recall@10 vs fetch is MEASURED on the
-    #: glove-like twin (scripts/bin_recall_curve.py, PLANS.md)
-    BIN_FETCH = 8192
     #: micro-batch cap for the fused 8-query kernels (f16/vnni paths):
     #: one matrix pass per 8 queries, so batches this size keep the
     #: pass amortized without an unbounded per-call service time
@@ -214,14 +211,12 @@ class FlatKnnIndex:
             self._aug = True
         self._nt = threads or min(32, os.cpu_count() or 8)
         self._pool = None
-        # SQ8 coarse sidecar (opt-in path="coarse"; built lazily)
+        # SQ8 coarse sidecar (opt-in path="vnni"; built lazily by
+        # enable_vnni)
         self._sq8 = None
         # float16 coarse sidecar (opt-in path="f16"; built lazily by
         # enable_f16 — needs the runtime-compiled F16C kernel)
         self._f16 = None
-        # 1-bit sign-code sidecar (opt-in path="bin"; built lazily by
-        # enable_bin — 1 bit/dim, 32x less coarse-pass traffic than f32)
-        self._bin = None
         # unfiltered threshold sample is identical across calls (fixed
         # seed): gather it once — the 2048-row fancy-index gather was
         # measurable per-call overhead on the single-query path
@@ -370,8 +365,8 @@ class FlatKnnIndex:
         x.q = q.lo + (q*step).codes is computable from 1-byte codes
         with the query pre-scaled — 4x less DRAM traffic than the
         float32 pass, which is the entire cost of a GEMV-shaped scan.
-        Built lazily on the first low-q search (~n*dims bytes); the
-        corpus is quantized, the query stays float (asymmetric SQ,
+        Built lazily by enable_vnni (~n*dims bytes); the corpus is
+        quantized, the query stays float (asymmetric SQ,
         standard FAISS ScalarQuantizer posture)."""
         if self._sq8 is None:
             X = self._X[:, :self.dims] if self._aug else self._X
@@ -386,109 +381,21 @@ class FlatKnnIndex:
             self._sq8 = (np.ascontiguousarray(codes), lo, step)
         return self._sq8
 
-    def _scan_coarse(self, Q: np.ndarray, Qt: np.ndarray,
-                     wm: np.ndarray | None, k: int):
-        """Low-q scan: SQ8 coarse pass -> exact float32 re-rank.
-
-        The coarse pass reads codes (1 B/dim) instead of floats
-        (4 B/dim) and keeps rows above a sampled score threshold tuned
-        for ~COARSE_FETCH survivors per query; survivors are re-scored
-        exactly against the pinned float32 matrix, so returned
-        DISTANCES are always exact — only membership is approximate,
-        with the miss probability bounded by P[quant error moves a
-        true top-k row below the ~400x-overfetch threshold].  Measured
-        on the glove-like 1M x 200 twin: recall@10 vs the exact scan
-        and single-query p50 are committed in ANN_RECALL_glove_like
-        .json (tier=flat single path).  Any query with < k survivors
-        falls back to its own exact full column."""
-        codes, lo, step = self._ensure_sq8()
-        X = self._X
-        n = len(codes)
-        n_q = Qt.shape[1]
-        Qf = np.ascontiguousarray(Q, dtype=np.float64)
-        if self.metric == "cosine":
-            Qf = _l2_normalize(Qf)
-        qsT = np.ascontiguousarray((Qf * step[None, :]).T,
-                                   dtype=np.float32)        # (d, q)
-        off = (Qf @ lo).astype(np.float32)                  # (q,)
-        nsq = X[:, -1] if self._aug else None  # stored |x|^2 column
-
-        cand_pool = np.flatnonzero(wm) if wm is not None else None
-        rows_eff = len(cand_pool) if cand_pool is not None else n
-        fetch = min(self.COARSE_FETCH, rows_eff)
-
-        def coarse_block(rows_or_slice):
-            Gb = codes[rows_or_slice].astype(np.float32) @ qsT \
-                + off[None, :]
-            if nsq is not None:           # euclidean: 2 x.q - |x|^2
-                Gb = 2.0 * Gb - nsq[rows_or_slice, None]
-            return Gb
-
-        rng = np.random.default_rng(0x5C8A)
-        samp = rng.integers(0, rows_eff, min(self.SAMPLE_ROWS, rows_eff))
-        samp_rows = cand_pool[samp] if cand_pool is not None else samp
-        Gs = coarse_block(samp_rows)
-        rank = max(1, min(int(round(len(samp_rows) * fetch / rows_eff)),
-                          len(samp_rows) - 1))
-        thr = np.partition(Gs, -1 - rank, axis=0)[-1 - rank]
-
-        # 8k-row blocks: codes block (1.6 MB at d=200) converts to
-        # float32 in-cache, so DRAM sees only the 1 B/dim codes
-        nb = min(max(self._nt, n // 8_192), n)
-        bounds = np.linspace(0, n, nb + 1).astype(np.int64)
-        pool = self._ensure_pool()
-
-        # compiled uint8 conversion-FMA kernel when available: the
-        # numpy .astype(float32) cast is GIL-bound (~5 GB/s pooled —
-        # why r8 declined this path); the kernel streams the codes at
-        # memory bandwidth and releases the GIL (plans/native.py)
-        from needle_spark.plans.native import gemv_f16_kernel
-
-        lib = gemv_f16_kernel()
-        d = codes.shape[1]
-        qcols = [np.ascontiguousarray(qsT[:, qi]) for qi in range(n_q)]
-        codes_ptr = codes.ctypes.data if codes.flags["C_CONTIGUOUS"] \
-            else None
-
-        def scan_block(b):
-            s, e = int(bounds[b]), int(bounds[b + 1])
-            if lib is not None and codes_ptr is not None:
-                buf = np.empty(e - s, dtype=np.float32)
-                rs, qqs = [], []
-                for qi in range(n_q):
-                    lib.gemv_u8(int(codes_ptr + s * d),
-                                qcols[qi].ctypes.data, buf.ctypes.data,
-                                0, e - s, d)
-                    gb = buf + off[qi]
-                    if nsq is not None:
-                        gb = 2.0 * gb - nsq[s:e]
-                    m = gb > thr[qi]
-                    if wm is not None:
-                        m &= wm[s:e]
-                    r = np.flatnonzero(m)
-                    rs.append(r + s)
-                    qqs.append(np.full(len(r), qi, dtype=np.int64))
-                return np.concatenate(rs), np.concatenate(qqs)
-            Gb = coarse_block(slice(s, e))
-            m = Gb > thr[None, :]
-            if wm is not None:
-                m &= wm[s:e, None]
-            r, qq = np.nonzero(m)
-            return r + s, qq
-
-        with single_thread_blas():
-            parts = list(pool.map(scan_block, range(nb)))
-        rows = np.concatenate([p[0] for p in parts])
-        qs = np.concatenate([p[1] for p in parts])
-
-        # exact re-rank: gather survivors' float32 rows, true scores
-        return self._rerank_exact(rows, qs, Qt, wm, k, rows_eff, n_q)
+    def _fetch(self, n_q: int, rows_eff: int) -> int:
+        """Coarse survivors per query, re-ranked exactly: ~400x
+        over-fetch at k=10 buries the quantization error.  Micro-batch
+        calls scale it down: the exact re-rank gathers fetch x n_q
+        random rows, and 4096 x 24 reads ~10% of the matrix back
+        through a fancy index — at n_q > COARSE_MAX_Q a 100x over-fetch
+        keeps the same threshold-miss argument at a tenth of the
+        gather bytes."""
+        return min(4096 if n_q <= self.COARSE_MAX_Q else 1024, rows_eff)
 
     def _rerank_exact(self, rows, qs, Qt, wm, k, rows_eff, n_q):
         """Exact re-rank of coarse survivors: gather their float32
         rows, true scores; per-query fallback to a full exact column
-        when a coarse cut under-fills k (shared by the SQ8/f16/vnni
-        coarse paths).
+        when a coarse cut under-fills k (shared by the f16 and vnni
+        paths).
 
         Vectorized across the whole batch (round 10): the old
         per-query gather+GEMV loop cost ~B separate fancy-index passes
@@ -544,8 +451,7 @@ class FlatKnnIndex:
         pass at memory bandwidth (numpy's own half path measured 0.7
         GB/s, 45x SLOWER — PLANS.md 'Angular single-query: f16
         kernel').  Distances stay EXACT: the f16 pass only CUTS to
-        ~COARSE_FETCH survivors, re-ranked against the f32 matrix
-        (same contract as path="coarse")."""
+        ~_fetch survivors, re-ranked against the f32 matrix."""
         from needle_spark.plans.native import gemv_f16_kernel
 
         if gemv_f16_kernel() is None:
@@ -563,10 +469,12 @@ class FlatKnnIndex:
         return True
 
     def _scan_f16(self, Qt: np.ndarray, wm: np.ndarray | None, k: int):
-        """f16 coarse cut + exact re-rank (path="f16").  Same shape as
-        _scan_coarse with the block scorer swapped for the compiled
-        kernel; per-block buffers stay cache-resident across the <=
-        COARSE_MAX_Q queries so multi-query calls re-read DRAM once."""
+        """f16 coarse cut + exact re-rank (path="f16"): a sampled score
+        threshold tuned for ~_fetch survivors per query, the blocks
+        scored by the compiled kernel, survivors re-scored exactly
+        against the pinned float32 matrix (_rerank_exact); per-block
+        buffers stay cache-resident across the <= COARSE_MAX_Q queries
+        so multi-query calls re-read DRAM once."""
         from needle_spark.plans.native import gemv_f16_kernel
 
         lib = gemv_f16_kernel()
@@ -576,13 +484,7 @@ class FlatKnnIndex:
         nsq = X[:, -1] if self._aug else None
         cand_pool = np.flatnonzero(wm) if wm is not None else None
         rows_eff = len(cand_pool) if cand_pool is not None else n
-        # micro-batch calls scale the per-query over-fetch down: the
-        # exact re-rank gathers fetch x n_q random rows, and 4096 x 24
-        # reads ~10% of the matrix back through a fancy index — at
-        # n_q > 4 a 100x over-fetch (>= 1024 at k=10) keeps the same
-        # threshold-miss argument at a tenth of the gather bytes
-        fetch = min(self.COARSE_FETCH if n_q <= self.COARSE_MAX_Q
-                    else max(1024, self.COARSE_FETCH // 4), rows_eff)
+        fetch = self._fetch(n_q, rows_eff)
         qcols = [np.ascontiguousarray(Qt[:d, qi], dtype=np.float32)
                  for qi in range(n_q)]
 
@@ -665,7 +567,7 @@ class FlatKnnIndex:
         of precision); VPDPBUSD does 64 integer MACs per instruction,
         the only arithmetic on this host that is 4x denser.  Distances
         stay EXACT (rerank); membership is approximate with the same
-        sampled-threshold + ~400x overfetch argument as _scan_coarse,
+        sampled-threshold + ~400x overfetch argument as _scan_f16,
         plus the s8 query quantization absorbed by the same margin —
         recall is MEASURED per corpus (bench glove_sustained rows).
 
@@ -682,9 +584,7 @@ class FlatKnnIndex:
         nsq = X[:, -1] if self._aug else None
         cand_pool = np.flatnonzero(wm) if wm is not None else None
         rows_eff = len(cand_pool) if cand_pool is not None else n
-        # micro-batch over-fetch scaling: see _scan_f16
-        fetch = min(self.COARSE_FETCH if n_q <= self.COARSE_MAX_Q
-                    else max(1024, self.COARSE_FETCH // 4), rows_eff)
+        fetch = self._fetch(n_q, rows_eff)
 
         # effective float query against the codes: q' = q * step
         Qp = (np.asarray(Qt[:d, :], dtype=np.float64)
@@ -774,123 +674,6 @@ class FlatKnnIndex:
         qs = np.concatenate([p[1] for p in parts])
         return self._rerank_exact(rows, qs, Qt, wm, k, rows_eff, n_q)
 
-    def enable_bin(self) -> bool:
-        """Build the 1-BIT sign-code sidecar (path="bin") and probe the
-        Hamming kernels (plans/native.py ham8_*).  Cosine only: sign
-        codes rank by ANGLE (hamming(sign x, sign q) estimates the
-        angle — the SRP-LSH identity, Charikar 2002), which is exactly
-        the cosine ordering on the L2-normalized pinned matrix; dot
-        needs magnitudes and euclidean needs offsets that 1 bit/dim
-        cannot carry.
-
-        Why this path exists (VERDICT r10 Next #3): every other coarse
-        pass still streams >= 1 B/dim — the sign codes are 25 MB at
-        1M x 200 vs the SQ8 sidecar's 200 MB, an 8x cut in the memory
-        traffic PLANS identified as the sustained-serving floor, and
-        xor+popcount is denser arithmetic than any FMA.  Distances
-        stay EXACT (same _rerank_exact contract); membership recall vs
-        over-fetch is measured per corpus."""
-        from needle_spark.plans.native import gemv_f16_kernel
-
-        if self.metric != "cosine":
-            return False
-        lib = gemv_f16_kernel()
-        if lib is None or not hasattr(lib, "ham8_u64"):
-            return False
-        w = (self.dims + 63) // 64
-        if w > 32:  # NS_HAM_MAX_W in the kernel
-            return False
-        if self._bin is None:
-            X = self._X[:, :self.dims] if self._aug else self._X
-            packed = np.packbits(X > 0, axis=1, bitorder="little")
-            padB = w * 8 - packed.shape[1]
-            if padB:
-                packed = np.concatenate(
-                    [packed, np.zeros((len(packed), padB), np.uint8)],
-                    axis=1)
-            self._bin = np.ascontiguousarray(packed) \
-                .view(np.uint64).reshape(len(X), w)
-        return True
-
-    def _encode_bin_queries(self, Qt: np.ndarray, b_pad: int):
-        """Sign-pack queries the same way as the corpus (pad lanes
-        zero; their thr sentinel is -1 so they never survive)."""
-        d = self.dims
-        w = (d + 63) // 64
-        Qs = (Qt[:d, :].T > 0)                       # (n_q, d) bool
-        packed = np.packbits(Qs, axis=1, bitorder="little")
-        padB = w * 8 - packed.shape[1]
-        if padB:
-            packed = np.concatenate(
-                [packed, np.zeros((len(packed), padB), np.uint8)],
-                axis=1)
-        Qb = np.zeros((b_pad, w), dtype=np.uint64)
-        Qb[:len(Qs)] = packed.view(np.uint64).reshape(len(Qs), w)
-        return np.ascontiguousarray(Qb), w
-
-    def _scan_bin(self, Qt: np.ndarray, wm: np.ndarray | None, k: int):
-        """1-bit coarse pass: Hamming cut over sign codes -> exact
-        float32 re-rank.  Same sampled-threshold shape as the other
-        coarse scans, with the compare INVERTED (hamming: smaller =
-        closer) and folded into the kernel — the survivor byte comes
-        straight off the epu64 compare mask, so the epilogue only
-        unpacks ~fetch-sparse bits (shared with _scan_vnni)."""
-        from needle_spark.plans.native import gemv_f16_kernel
-
-        lib = gemv_f16_kernel()
-        codes = self._bin
-        X = self._X
-        n, n_q = len(codes), Qt.shape[1]
-        cand_pool = np.flatnonzero(wm) if wm is not None else None
-        rows_eff = len(cand_pool) if cand_pool is not None else n
-        fetch = min(self.BIN_FETCH if n_q <= self.COARSE_MAX_Q
-                    else max(2048, self.BIN_FETCH // 4), rows_eff)
-        b_pad = ((n_q + 7) // 8) * 8
-        Qb, w = self._encode_bin_queries(Qt, b_pad)
-
-        # per-query integer threshold from a sampled Hamming histogram
-        rng = np.random.default_rng(0xB117)
-        samp = rng.integers(0, rows_eff, min(self.SAMPLE_ROWS, rows_eff))
-        samp_rows = cand_pool[samp] if cand_pool is not None else samp
-        samp_codes = np.ascontiguousarray(codes[samp_rows])
-        s_buf = np.empty((len(samp_rows), b_pad), dtype=np.int32)
-        lib.ham8_u64(samp_codes.ctypes.data, Qb.ctypes.data,
-                     s_buf.ctypes.data, 0, len(samp_rows), w, b_pad)
-        rank = max(1, min(int(round(len(samp_rows) * fetch / rows_eff)),
-                          len(samp_rows) - 1))
-        # rank-th SMALLEST sample distance; integer ties make the cut
-        # conservative (more survivors than fetch — rerank absorbs it)
-        thr = np.full(b_pad, -1, dtype=np.int32)   # pad sentinel
-        thr[:n_q] = np.partition(
-            s_buf[:, :n_q], rank, axis=0)[rank].astype(np.int32)
-
-        nb = min(max(self._nt, n // 65_536), n)
-        bounds = np.linspace(0, n, nb + 1).astype(np.int64)
-        pool = self._ensure_pool()
-        base_ptr = codes.ctypes.data
-
-        def scan_block(b):
-            s, e = int(bounds[b]), int(bounds[b + 1])
-            bits = np.empty((e - s, b_pad // 8), dtype=np.uint8)
-            lib.ham8_thr(int(base_ptr + s * w * 8), Qb.ctypes.data,
-                         thr.ctypes.data, bits.ctypes.data,
-                         0, e - s, w, b_pad)
-            hot = np.flatnonzero(bits.any(axis=1))
-            if not len(hot):
-                return (np.empty(0, np.int64), np.empty(0, np.int64))
-            m = np.unpackbits(bits[hot], axis=1,
-                              bitorder="little")[:, :n_q].astype(bool)
-            if wm is not None:
-                m &= wm[s:e][hot, None]
-            r, qq = np.nonzero(m)
-            return hot[r] + s, qq
-
-        with single_thread_blas():
-            parts = list(pool.map(scan_block, range(nb)))
-        rows = np.concatenate([p[0] for p in parts])
-        qs = np.concatenate([p[1] for p in parts])
-        return self._rerank_exact(rows, qs, Qt, wm, k, rows_eff, n_q)
-
     @staticmethod
     def _host_canary_ms() -> float:
         """First-touch page-fault probe (the bench/adjudication canary,
@@ -933,12 +716,10 @@ class FlatKnnIndex:
         ids = list(range(sample_q))
         timings = {}
         ref_ids = None
-        for path in ("exact", "f16", "vnni", "bin"):
+        for path in _PATHS:
             if path == "f16" and not self.enable_f16():
                 continue
             if path == "vnni" and not self.enable_vnni():
-                continue
-            if path == "bin" and not self.enable_bin():
                 continue
             self.search_many_local((ids, Q), k=10, path=path)  # warm
             t0 = _time.perf_counter()
@@ -948,20 +729,6 @@ class FlatKnnIndex:
             got = list(zip(res["query_id"], res[self.id_col]))
             if path == "exact":
                 ref_ids = got
-                continue
-            if path == "bin":
-                # approximate BY DESIGN: surface its sample timing and
-                # recall for an operator choosing it explicitly, but
-                # NEVER leave it in the auto-pick pool — a lucky
-                # all-match sample (corpus rows as queries) must not
-                # make approximate results the serving default
-                ref_sets = {}
-                for q, i in ref_ids:
-                    ref_sets.setdefault(q, set()).add(i)
-                hit = sum(1 for q, i in got if i in ref_sets.get(q, ()))
-                dec["bin_sample_ms"] = timings.pop(path)
-                dec["bin_sample_recall"] = round(
-                    hit / max(1, len(ref_ids)), 4)
             elif got != ref_ids:
                 timings.pop(path)  # mismatch: never auto-serve it
         c1 = self._host_canary_ms()
@@ -1055,7 +822,6 @@ class FlatKnnIndex:
         self._samp_cache = None
         self._sq8 = None
         self._f16 = None  # stale sidecar would silently drop new rows
-        self._bin = None
         return len(new_ids)
 
     def add(self, rows_df) -> int:
@@ -1110,7 +876,6 @@ class FlatKnnIndex:
             self._pool = None
         self._sq8 = None
         self._f16 = None
-        self._bin = None
 
     def search_many_local(self, queries, k: int = 10, nprobe: int = 0,
                           where: dict | None = None,
@@ -1120,18 +885,20 @@ class FlatKnnIndex:
         rank), ties broken by (distance, id); `nprobe` ignored.
 
         ``path="exact"`` (default): recall 1.0 by construction on
-        every call.  ``path="coarse"``: low-q calls on large corpora
-        route through the SQ8 sidecar + exact re-rank (_scan_coarse) —
-        distances stay exact, membership is approximate with measured
-        recall.  MEASURED SLOWER than exact on this numpy/OpenBLAS
-        stack: the uint8->float32 cast loop tops out ~5 GB/s pooled
-        (GIL-bound, non-SIMD) while the exact sgemv streams at the
-        61 GB/s DRAM ceiling, so the 4x byte saving never materializes
-        (PLANS.md 'Flat single-query floor').  Kept opt-in for stacks
-        with vectorized casts; batches fall back to exact either way."""
+        every call.  ``path="f16"`` / ``path="vnni"``: calls of at most
+        GEMM_MAX_Q queries on corpora above THRESHOLD_MIN_ROWS route
+        through the compiled coarse cut + exact re-rank (_scan_f16 /
+        _scan_vnni) — distances stay exact, membership is approximate
+        with measured recall; other calls, and hosts without the
+        kernel, serve the exact scan.  Any other path raises
+        ValueError."""
         import pandas as pd
 
         from needle_spark.operators.knn_arrow import _resolve_queries
+
+        if path not in _PATHS:
+            raise ValueError(
+                f"path must be one of {_PATHS}, got {path!r}")
 
         q_ids, Q, _ = _resolve_queries(queries, "query_id", "vector")
         Qt = self._queries_matrix(Q)
@@ -1159,13 +926,6 @@ class FlatKnnIndex:
                 and rows_eff > self.THRESHOLD_MIN_ROWS
                 and self.enable_vnni()):
             rows, qs, vals = self._scan_vnni(Qt, wm, k)
-        elif (path == "bin" and Qt.shape[1] <= self.GEMM_MAX_Q
-                and rows_eff > self.THRESHOLD_MIN_ROWS
-                and self.enable_bin()):
-            rows, qs, vals = self._scan_bin(Qt, wm, k)
-        elif (path == "coarse" and Qt.shape[1] <= self.COARSE_MAX_Q
-                and rows_eff > self.THRESHOLD_MIN_ROWS):
-            rows, qs, vals = self._scan_coarse(Q, Qt, wm, k)
         else:
             rows, qs, vals = self._scan(Qt, wm, k)
         if len(rows) == 0:
@@ -1209,11 +969,11 @@ class FlatKnnIndex:
         measured 13 ms at 1M x 200 f32 / 61.5 GB/s on this host
         (PLANS.md 'Flat single-query floor'); an in-process graph
         index answers singles faster only by reading ~0.1% of the
-        data at <1.0 recall.  ``path="coarse"`` opts into the SQ8
-        sidecar (measured slower here; see search_many_local);
-        ``path="f16"`` opts into the compiled half-precision coarse
-        pass (halves the DRAM floor, exact re-ranked distances —
-        enable_f16 / PLANS.md 'Angular single-query: f16 kernel').
+        data at <1.0 recall.  ``path="f16"`` opts into the compiled
+        half-precision coarse pass (halves the DRAM floor, exact
+        re-ranked distances — enable_f16 / PLANS.md 'Angular
+        single-query: f16 kernel'), ``path="vnni"`` into the int8 one
+        (see search_many_local).
 
         Returns [(id, distance), ...] ascending, length <= k — the
         same shape as IvfBatchKnnIndex.search_one, so the REST index

@@ -241,39 +241,11 @@ def _pq_encode(res, books):
     return codes, dec.reshape(n, dim)
 
 
-def _rotate_per_cell(M: np.ndarray, assign: np.ndarray,
-                     R_cells: np.ndarray, inverse: bool = False
-                     ) -> np.ndarray:
-    """Rotate each row of M by its cell's rotation (opq_local): one
-    small matmul per cell PRESENT in the batch, not per row."""
-    out = np.empty_like(M)
-    for c in np.unique(assign):
-        m = assign == c
-        R = R_cells[int(c)]
-        out[m] = M[m] @ (R.T if inverse else R)
-    return out
-
-
-def _sq_for_cell(SQ, step2, QT, cell, qidx=None):
+def _sq_for_cell(SQ, step2, QT, cell):
     """Per-cell step-scaled query block: the global (dim, nq) SQ when
     the quantizer is global (sq8/float32) — or the ('pq', LUT) marker,
-    which is cell-independent too — or ('pq_local', ...) which builds
-    THIS cell's LUT from the cell-rotated queries (opq_local) FOR THE
-    PROBING QUERIES ONLY when qidx is given (a full-batch LUT per
-    probed cell wasted ~nq/probing-count of the rotate+einsum) — or
-    step2[cell]-scaled QT for the per-cell quantizer (sq8_cell)."""
-    if isinstance(SQ, tuple) and SQ[0] == "pq_local":
-        _tag, Qd, books, R_cells = SQ
-        m_sub, _, sub = books.shape
-        Qsub = Qd if qidx is None else Qd[np.asarray(qidx)]
-        Qr = np.ascontiguousarray(Qsub @ R_cells[int(cell)],
-                                  dtype=np.float32)
-        Qs = Qr.reshape(len(Qsub), m_sub, sub)
-        LUT = np.ascontiguousarray(
-            np.einsum("qjs,jcs->qjc", Qs, books))
-        # "pq_sub": LUT rows are ALREADY the probing queries — the
-        # scorer must not re-index by qidx
-        return ("pq", LUT) if qidx is None else ("pq_sub", LUT)
+    which is cell-independent too — or step2[cell]-scaled QT for the
+    per-cell quantizer (sq8_cell)."""
     if SQ is not None:
         return SQ
     return np.ascontiguousarray(step2[cell][:, None] * QT)
@@ -298,13 +270,12 @@ def _score_cell_block(codes_u8, ids_cell, nsq_cell, qidx, SQ, base_row, qsq,
     distance: dot(v, q) = c.q + sum_j LUT[q][j, code_j], one (m, 256)
     table per query built once per batch — the bytes read per scored
     row drop to m (e.g. 48 for 384-d), the IvfPQ capacity tier."""
-    if isinstance(SQ, tuple):  # ('pq'|'pq_sub', LUT (nq, m, 256) f32)
+    if isinstance(SQ, tuple):  # ('pq', LUT (nq, m, 256) f32)
         LUT = SQ[1]
         codes_i = codes_u8 if codes_u8.dtype == np.uint8 \
             else codes_u8.astype(np.int64)
         m_sub = codes_i.shape[1]
-        # 'pq_sub' (opq_local): LUT rows already == probing queries
-        Lq = LUT if SQ[0] == "pq_sub" else LUT[qidx]
+        Lq = LUT[qidx]
         acc = np.zeros((len(qidx), codes_i.shape[0]), dtype=np.float32)
         for j in range(m_sub):
             acc += np.take(Lq[:, j, :], codes_i[:, j], axis=1)
@@ -455,20 +426,12 @@ class IvfBatchKnnIndex:
         refine: bool = False,
         refine_factor: int = 4,
         pq_m: int | None = None,
-        pq_rotation: str = "none",
         max_pending_ids: int | None = 2_000_000,
     ):
         if code_dtype not in ("sq8", "sq8_cell", "float32", "pq"):
             raise ValueError(
                 f"code_dtype must be 'sq8', 'sq8_cell', 'float32' or "
                 f"'pq', got {code_dtype!r}")
-        if pq_rotation not in ("none", "pca", "random", "opq",
-                               "opq_local"):
-            # validated for EVERY code tier (review r9): a typo'd
-            # rotation on a non-PQ build must not pass silently
-            raise ValueError(
-                f"pq_rotation must be 'opq_local', 'opq', 'pca', "
-                f"'random' or 'none', got {pq_rotation!r}")
         if refine and code_dtype == "float32":
             raise ValueError(
                 "refine=True pairs a QUANTIZED code tier with an exact "
@@ -570,11 +533,6 @@ class IvfBatchKnnIndex:
         # corpora: pair with refine=True to buy back the recall the
         # coarse codes give up.
         self._pq = None
-        self._pq_R = None
-        # per-cell rotations (pq_rotation="opq_local", VERDICT r10 #8:
-        # the r10 autopsy showed ONE global rotation regresses 107/151
-        # cells while improving pooled MSE — rotations must be local)
-        self._pq_R_cells = None
         if code_dtype == "pq":
             m_sub = pq_m
             if m_sub is None:
@@ -589,124 +547,27 @@ class IvfBatchKnnIndex:
             if self.dim % m_sub != 0:
                 raise ValueError(f"pq_m {m_sub} must divide dim {self.dim}")
             sub = self.dim // m_sub
-            res_s = sample - C[d2.argmin(axis=1)]
-            fit_rows = min(len(res_s), 16384)
-            rs = res_s[:fit_rows]
-            # OPQ-lite orthogonal pre-transform (VERDICT r8 #7),
-            # MEASURED AND DEFAULTED OFF (PLANS.md round 9).  On the
-            # sample sim (residuals wrt the global mean) PCA
-            # eigen-allocation looked mildly positive (sift factor-4
-            # 0.797 -> 0.807, fashion 0.967 -> 0.997) and a random
-            # rotation clearly negative (sift 0.797 -> 0.733).  On the
-            # REAL 1M index — residuals wrt per-cell IVF centroids —
-            # PCA on the pooled residual covariance misaligns the
-            # per-cell structure and collapses the coarse cut: grid
-            # factor-4 recall 0.507 -> 0.350, factor-32 0.885 -> 0.798
-            # (ANN_RECALL.json history).  Default 'none'; 'pca'/
-            # 'random' stay selectable for corpora whose residual
-            # covariance is genuinely global (cost: one (dim x dim)
-            # multiply per encoded batch and per query-LUT build).
-            if pq_rotation == "pca" and fit_rows >= 2:
-                cov = np.cov(np.asarray(rs, dtype=np.float64).T)
-                w, Vv = np.linalg.eigh(np.atleast_2d(cov))
-                order = np.argsort(w)[::-1]
-                Vv, w = Vv[:, order], w[order]
-                bucket_var = np.zeros(m_sub)
-                bucket_n = np.zeros(m_sub, dtype=np.int64)
-                alloc = np.empty(self.dim, dtype=np.int64)
-                for i in range(self.dim):
-                    j = int(np.argmin(np.where(bucket_n < sub,
-                                               bucket_var, np.inf)))
-                    bucket_var[j] += w[i]
-                    bucket_n[j] += 1
-                    alloc[i] = j
-                self._pq_R = np.ascontiguousarray(
-                    Vv[:, np.argsort(alloc, kind="stable")])
-            elif pq_rotation == "random":
-                rng_r = np.random.default_rng(seed + 777)
-                Qm, _ = np.linalg.qr(
-                    rng_r.standard_normal((self.dim, self.dim)))
-                self._pq_R = np.ascontiguousarray(Qm)
-            def _fit_books(res_rot):
-                Rr = np.ascontiguousarray(res_rot, dtype=np.float64) \
-                    .reshape(len(res_rot), m_sub, sub)
-                bk = np.empty((m_sub, 256, sub), dtype=np.float64)
-                for j in range(m_sub):
-                    bj = _kmeans_fit(np.ascontiguousarray(Rr[:, j, :]),
-                                     256, seed + j, 4)
-                    if len(bj) < 256:
-                        # _kmeans_fit returns min(256, sample)
-                        # centroids; tile so small-sample builds still
-                        # produce a full 256-entry codebook (extra
-                        # entries are harmless — encode only ever
-                        # picks the nearest).
-                        reps = -(-256 // len(bj))
-                        bj = np.tile(bj, (reps, 1))[:256]
-                    bk[j] = bj
-                return bk
-            if pq_rotation == "opq" and fit_rows >= 2:
-                # true OPQ (VERDICT r9 #5; Ge et al. 2013, the
-                # non-parametric alternation): rotation and codebooks
-                # optimized JOINTLY on the SAME per-cell residuals the
-                # index quantizes — the r9 PCA attempt failed exactly
-                # because its rotation was fit to the pooled covariance
-                # instead of to quantization error.  Each round: fit
-                # codebooks in the rotated frame, then solve the
-                # orthogonal Procrustes min_R ||res R - decoded||_F
-                # (R = U V^T from svd(res^T decoded)).
-                rs0 = np.ascontiguousarray(rs, dtype=np.float64)
-                Rm = np.eye(self.dim)
-                for _ in range(8):
-                    rr = rs0 @ Rm
-                    books = _fit_books(rr)
-                    _c, dec = _pq_encode(
-                        rr.astype(np.float32),
-                        np.ascontiguousarray(books, dtype=np.float32))
-                    U, _sv, Vt = np.linalg.svd(
-                        rs0.T @ np.asarray(dec, dtype=np.float64))
-                    Rm = U @ Vt
-                self._pq_R = np.ascontiguousarray(Rm)
-                books = _fit_books(rs0 @ Rm)
-            elif pq_rotation == "opq_local" and fit_rows >= 2:
-                # LOPQ-style local OPQ (VERDICT r10 #8; Kalantidis &
-                # Avrithis 2014's locally-optimized posture, shared
-                # codebooks variant): the r10 autopsy showed the global
-                # rotation improves pooled MSE while REGRESSING 107/151
-                # individual cells — factor-k refined recall lives in
-                # within-cell rank fidelity, so rotations must be
-                # per-cell.  Alternation: rotate each cell's residuals
-                # by ITS R_c -> fit SHARED codebooks -> per-cell
-                # orthogonal Procrustes against the decoded rows.
-                # Cells with fewer fit rows than `dim` keep identity (an
-                # underdetermined Procrustes memorizes the sample); the
-                # whole SAMPLE (not the 16384 cap) feeds this mode
-                # because per-cell counts are ~sample/nlist.
-                rs_all = np.ascontiguousarray(res_s, dtype=np.float64)
-                assign_all = d2.argmin(axis=1)
-                R_cells = np.tile(np.eye(self.dim),
-                                  (self.nlist, 1, 1))
-                counts = np.bincount(assign_all, minlength=self.nlist)
-                fit_cells = np.flatnonzero(counts >= self.dim)
-                for _ in range(8):
-                    rr = _rotate_per_cell(rs_all, assign_all, R_cells)
-                    books = _fit_books(rr)
-                    _c, dec = _pq_encode(
-                        rr.astype(np.float32),
-                        np.ascontiguousarray(books, dtype=np.float32))
-                    dec64 = np.asarray(dec, dtype=np.float64)
-                    for cell in fit_cells:
-                        m = assign_all == cell
-                        U, _sv, Vt = np.linalg.svd(
-                            rs_all[m].T @ dec64[m])
-                        R_cells[cell] = U @ Vt
-                books = _fit_books(
-                    _rotate_per_cell(rs_all, assign_all, R_cells))
-                self._pq_R_cells = np.ascontiguousarray(
-                    R_cells, dtype=np.float32)
-            else:
-                if self._pq_R is not None:
-                    rs = rs @ self._pq_R
-                books = _fit_books(rs)
+            # codebooks over the UNROTATED residuals: every pre-rotation
+            # tried before the subspace split (PCA eigen-allocation, a
+            # random rotation, OPQ, per-cell OPQ) was measured worse than
+            # none at every probe depth on the 1M grid and deleted
+            # (PLANS.md "PQ pre-rotation", round-11 autopsy;
+            # ANN_RECALL.json rows tagged with a rotation)
+            fit_rows = min(len(res), 16384)
+            Rr = np.ascontiguousarray(res[:fit_rows], dtype=np.float64) \
+                .reshape(fit_rows, m_sub, sub)
+            books = np.empty((m_sub, 256, sub), dtype=np.float64)
+            for j in range(m_sub):
+                bj = _kmeans_fit(np.ascontiguousarray(Rr[:, j, :]),
+                                 256, seed + j, 4)
+                if len(bj) < 256:
+                    # _kmeans_fit returns min(256, sample) centroids;
+                    # tile so small-sample builds still produce a full
+                    # 256-entry codebook (extra entries are harmless —
+                    # encode only ever picks the nearest).
+                    reps = -(-256 // len(bj))
+                    bj = np.tile(bj, (reps, 1))[:256]
+                books[j] = bj
             self._pq = np.ascontiguousarray(books)
             self._code_width = m_sub
             self.mn = np.zeros(self.dim, dtype=np.float64)
@@ -828,14 +689,6 @@ class IvfBatchKnnIndex:
         flat_codes = self.code_dtype == "float32"
         pq_books = (np.ascontiguousarray(self._pq, dtype=np.float32)
                     if self._pq is not None else None)
-        pq_R = (np.ascontiguousarray(self._pq_R, dtype=np.float32)
-                if self._pq_R is not None else None)
-        # broadcast, never closure-capture: the per-cell tensor is
-        # nlist x dim x dim (~600 MB at nlist=1024, dim=384) and a
-        # closure copy would serialize into EVERY task binary
-        pq_R_cells_bc = (
-            docs.sparkSession.sparkContext.broadcast(self._pq_R_cells)
-            if self._pq_R_cells is not None else None)
         byte_w = self._code_width
 
         meta_cols = self.meta_cols
@@ -873,14 +726,7 @@ class IvfBatchKnnIndex:
                 if flat_codes:
                     codes = res.astype(np.float32)
                 elif pq_books is not None:
-                    if pq_R_cells_bc is not None:
-                        res_r = _rotate_per_cell(
-                            res, assign, pq_R_cells_bc.value)
-                    elif pq_R is not None:
-                        res_r = res @ pq_R
-                    else:
-                        res_r = res
-                    codes, dec_pq = _pq_encode(res_r, pq_books)
+                    codes, dec = _pq_encode(res, pq_books)
                 elif mn32.ndim == 2:  # per-cell quantizer (sq8_cell)
                     codes = np.clip(
                         np.rint((res - mn32[assign]) * inv_step[assign]),
@@ -899,20 +745,10 @@ class IvfBatchKnnIndex:
                     # 784-d) and 0.855 -> 0.978 (cosine, unit-norm
                     # 128-d) at identical bytes (asymmetric-distance
                     # consistency; PLANS.md round 8)
-                    if pq_books is not None:
-                        if pq_R_cells_bc is not None:
-                            dec = _rotate_per_cell(
-                                dec_pq, assign, pq_R_cells_bc.value,
-                                inverse=True)
-                        elif pq_R is not None:
-                            dec = dec_pq @ pq_R.T
-                        else:
-                            dec = dec_pq
-                    elif mn32.ndim == 2:
-                        dec = codes.astype(np.float32) * step32[assign] \
-                            + mn32[assign]
-                    else:
-                        dec = codes.astype(np.float32) * step32 + mn32
+                    if pq_books is None:  # PQ's dec came with its codes
+                        dec = (codes.astype(np.float32) * step32[assign]
+                               + mn32[assign] if mn32.ndim == 2 else
+                               codes.astype(np.float32) * step32 + mn32)
                     dec = dec + C32[assign]
                     nsq = (dec.astype(np.float64) ** 2).sum(axis=1)
                 n = codes.shape[0]
@@ -1235,7 +1071,7 @@ class IvfBatchKnnIndex:
                             else np.asarray(codes[s:e])
                         out = _score_cell_block(
                             block, ids[s:e], nsq[s:e], qidx,
-                            _sq_for_cell(SQ, step2, QT, int(cell), qidx),
+                            _sq_for_cell(SQ, step2, QT, int(cell)),
                             base[int(cell)], qsq, metric, kk,
                             return_sel=use_refine)
                         if use_refine:
@@ -1291,18 +1127,7 @@ class IvfBatchKnnIndex:
         if self._pq is not None:
             books = self._pq  # (m, 256, sub)
             m_sub, _, sub = books.shape
-            if self._pq_R_cells is not None:
-                # opq_local: codes live in each CELL's rotated basis —
-                # the LUT is per-cell, built lazily in _sq_for_cell
-                # from the cell-rotated queries
-                return ("pq_local",
-                        np.ascontiguousarray(Q, dtype=np.float32),
-                        np.ascontiguousarray(books, dtype=np.float32),
-                        self._pq_R_cells), None, QT, base
-            # rotated-space consistency: codes live in the _pq_R basis,
-            # and dot(res, q) == dot(res @ R, q @ R) for orthogonal R
-            Qr = Q @ self._pq_R if self._pq_R is not None else Q
-            Qs = np.ascontiguousarray(Qr, dtype=np.float32) \
+            Qs = np.ascontiguousarray(Q, dtype=np.float32) \
                 .reshape(len(Q), m_sub, sub)
             # LUT[q, j, c] = q_j . codebook[j, c]
             LUT = np.ascontiguousarray(np.einsum(
@@ -1428,7 +1253,7 @@ class IvfBatchKnnIndex:
                 s, e = starts[ci], starts[ci + 1]
                 out = _score_cell_block(
                     codes[s:e], ids[s:e], nsq[s:e], qidx,
-                    _sq_for_cell(SQ, step2, QT, int(cell), qidx),
+                    _sq_for_cell(SQ, step2, QT, int(cell)),
                     base[int(cell)], qsq, metric, kk,
                     return_sel=use_vec)
                 if use_vec:
@@ -1752,7 +1577,7 @@ class IvfBatchKnnIndex:
             for block, ids_cell, nsq_cell, cell, qidx, refmap in cell_iter:
                 out = _score_cell_block(
                     block, ids_cell, nsq_cell, qidx,
-                    _sq_for_cell(SQ, step2, QT, int(cell), qidx),
+                    _sq_for_cell(SQ, step2, QT, int(cell)),
                     base[int(cell)], qsq, self.metric, fetch,
                     return_sel=use_refine)
                 if use_refine:
@@ -1944,7 +1769,7 @@ class IvfBatchKnnIndex:
                         self._cellf32_bytes += Cf.nbytes
             out = _score_cell_block(
                 Cf, ids[s:e], nsq[s:e], qidx,
-                _sq_for_cell(SQ, step2, QT, int(cell), qidx),
+                _sq_for_cell(SQ, step2, QT, int(cell)),
                 base[int(cell)], qsq, self.metric, fetch,
                 return_sel=use_refine)
             if use_refine:
@@ -1976,7 +1801,7 @@ class IvfBatchKnnIndex:
                     m = sel & (d_cent == cell)
                     out = _score_cell_block(
                         d_codes[m], d_ids[m], d_nsq[m], qidx,
-                        _sq_for_cell(SQ, step2, QT, int(cell), qidx),
+                        _sq_for_cell(SQ, step2, QT, int(cell)),
                         base[int(cell)], qsq, self.metric,
                         fetch, return_sel=use_refine)
                     if use_refine:
@@ -2138,22 +1963,8 @@ class IvfBatchKnnIndex:
         if self.code_dtype == "float32":
             return assign, nsq.astype(np.float32), res.astype(np.float32), V
         if self._pq is not None:
-            R32 = (np.ascontiguousarray(self._pq_R, dtype=np.float32)
-                   if self._pq_R is not None else None)
-            if self._pq_R_cells is not None:
-                res_r = _rotate_per_cell(res, assign, self._pq_R_cells)
-            elif R32 is not None:
-                res_r = res @ R32
-            else:
-                res_r = res
             codes, dec = _pq_encode(
-                res_r,
-                np.ascontiguousarray(self._pq, dtype=np.float32))
-            if self._pq_R_cells is not None:
-                dec = _rotate_per_cell(dec, assign, self._pq_R_cells,
-                                       inverse=True)
-            elif R32 is not None:
-                dec = dec @ R32.T
+                res, np.ascontiguousarray(self._pq, dtype=np.float32))
             dec = dec + C32[assign]
             nsq = (dec.astype(np.float64) ** 2).sum(axis=1)
             return assign, nsq.astype(np.float32), codes, V
@@ -2330,18 +2141,9 @@ class IvfBatchKnnIndex:
             _ids, assign, _nsq, codes, _m, _v = rec
             if self._pq is not None:
                 books = np.ascontiguousarray(self._pq, dtype=np.float32)
-                m_sub, _, sub = books.shape
                 ci = np.asarray(codes, dtype=np.int64)
-                dec_r = books[np.arange(m_sub)[None, :], ci] \
-                    .reshape(len(ci), self.dim)
-                if self._pq_R_cells is not None:
-                    dec_r = _rotate_per_cell(
-                        dec_r, np.asarray(assign), self._pq_R_cells,
-                        inverse=True)
-                elif self._pq_R is not None:
-                    dec_r = dec_r @ np.ascontiguousarray(
-                        self._pq_R, dtype=np.float32).T
-                dec = (dec_r
+                dec = (books[np.arange(len(books))[None, :], ci]
+                       .reshape(len(ci), self.dim)
                        + self.centroids[assign]).astype(np.float32)
             else:
                 mn, step = self.mn, self.step

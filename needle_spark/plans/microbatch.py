@@ -59,7 +59,8 @@ class MicroBatchSearcher:
         Any tier exposing ``search_many_local((ids, Q), k, path=...)``
         returning the (query_id, id, distance, rank) frame.
     k : default top-k per query (per-submit override allowed).
-    path : forwarded to the index (e.g. "exact", "f16", "coarse").
+    path : forwarded to the index ("exact", "f16" or "vnni" on the
+        flat tier).
     max_batch : cap per batch call — bounds worst-case service time so
         one giant drain cannot starve the queue's tail.
     window_ms : optional collect window AFTER the first request of a

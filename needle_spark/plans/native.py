@@ -12,7 +12,16 @@ streams the f16 matrix at memory bandwidth; ctypes releases the GIL
 around the call, so the flat tier's existing thread pool fans blocks
 across cores exactly like the f32 path.
 
-This module compiles that kernel ON DEMAND with the host gcc into a
+The library holds exactly the kernels plans/flat.py serves with:
+``gemv_f16`` and the fused 8-query ``gemm8_f16`` (path="f16"), and the
+AVX512-VNNI pair ``gemm8vnni_u8`` / ``gemm8vnni_thr`` behind
+``has_vnni`` (path="vnni").  The uint8-convert GEMV/gemm8 kernels of
+the SQ8 coarse path and the 1-bit Hamming kernels of the sign-code
+path were measured, declined and deleted with those paths (PLANS.md,
+BIN_RECALL_CURVE.json); tests/test_plan_guards.py fails on any kernel
+here that no program file calls.
+
+This module compiles the library ON DEMAND with the host gcc into a
 cached .so.  Everything degrades gracefully: no gcc, no F16C, or a
 failed compile -> ``gemv_f16_kernel()`` returns None and callers keep
 the numpy paths.  The C source carries preprocessor fallbacks
@@ -37,9 +46,11 @@ import threading
 
 _SRC = r"""
 #include <stdint.h>
+#if defined(__AVX512F__) || defined(__F16C__)
+#include <immintrin.h>
+#endif
 
 #if defined(__AVX512F__) && defined(__F16C__)
-#include <immintrin.h>
 /* out[j-r0] = sum_i half2float(X[j*d+i]) * q[i], AVX-512 + F16C */
 void gemv_f16(const uint16_t *X, const float *q, float *out,
               long r0, long r1, long d) {
@@ -62,7 +73,6 @@ void gemv_f16(const uint16_t *X, const float *q, float *out,
     }
 }
 #elif defined(__AVX2__) && defined(__F16C__)
-#include <immintrin.h>
 void gemv_f16(const uint16_t *X, const float *q, float *out,
               long r0, long r1, long d) {
     long dv = d & ~7L;
@@ -124,42 +134,8 @@ void gemv_f16(const uint16_t *X, const float *q, float *out,
 }
 #endif
 
-/* out[j-r0] = sum_i (float)X[j*d+i] * q[i] over uint8 codes: the SQ8
-   coarse pass streams 1 B/dim (the numpy .astype(float32) cast this
-   replaces measured ~5 GB/s pooled, GIL-bound) */
-#if defined(__AVX512F__)
-#include <immintrin.h>
-void gemv_u8(const uint8_t *X, const float *q, float *out,
-             long r0, long r1, long d) {
-    long dv = d & ~15L;
-    for (long j = r0; j < r1; j++) {
-        const uint8_t *row = X + j * d;
-        __m512 acc = _mm512_setzero_ps();
-        long i = 0;
-        for (; i < dv; i += 16) {
-            __m128i b = _mm_loadu_si128((const __m128i *)(row + i));
-            __m512 x = _mm512_cvtepi32_ps(_mm512_cvtepu8_epi32(b));
-            acc = _mm512_fmadd_ps(x, _mm512_loadu_ps(q + i), acc);
-        }
-        float s = _mm512_reduce_add_ps(acc);
-        for (; i < d; i++) s += (float)row[i] * q[i];
-        out[j - r0] = s;
-    }
-}
-#else
-void gemv_u8(const uint8_t *X, const float *q, float *out,
-             long r0, long r1, long d) {
-    for (long j = r0; j < r1; j++) {
-        const uint8_t *row = X + j * d;
-        float s = 0.0f;
-        for (long i = 0; i < d; i++) s += (float)row[i] * q[i];
-        out[j - r0] = s;
-    }
-}
-#endif
-
 /* ---- fused 8-query passes (round 10, micro-batch serving) --------
-   The GEMV kernels above re-stream the matrix once PER QUERY; under
+   The GEMV kernel above re-streams the matrix once PER QUERY; under
    sustained single-query load the micro-batch front collects several
    concurrent queries, and this variant converts each row chunk ONCE
    and FMAs it against 8 query vectors — one DRAM pass serves 8
@@ -267,66 +243,12 @@ void gemm8_f16(const uint16_t *X, const float *Q, float *out,
 }
 #endif
 
-#if defined(__AVX512F__)
-void gemm8_u8(const uint8_t *X, const float *Q, float *out,
-              long r0, long r1, long d, long B) {
-    long dv = d & ~15L;
-    for (long b0 = 0; b0 + 8 <= B; b0 += 8) {
-#define NS_QP(b) const float *q##b = Q + (b0 + b) * d;
-        NS_ACC8(NS_QP)
-#undef NS_QP
-        for (long j = r0; j < r1; j++) {
-            const uint8_t *row = X + j * d;
-#define NS_Z(b) __m512 a##b = _mm512_setzero_ps();
-            NS_ACC8(NS_Z)
-#undef NS_Z
-            long i = 0;
-            for (; i < dv; i += 16) {
-                __m128i bx = _mm_loadu_si128((const __m128i *)(row + i));
-                __m512 x = _mm512_cvtepi32_ps(_mm512_cvtepu8_epi32(bx));
-#define NS_F(b) a##b = _mm512_fmadd_ps(x, _mm512_loadu_ps(q##b + i), a##b);
-                NS_ACC8(NS_F)
-#undef NS_F
-            }
-#define NS_R(b) float s##b = _mm512_reduce_add_ps(a##b);
-            NS_ACC8(NS_R)
-#undef NS_R
-            for (; i < d; i++) {
-                float xv = (float)row[i];
-#define NS_T(b) s##b += xv * q##b[i];
-                NS_ACC8(NS_T)
-#undef NS_T
-            }
-            float *o = out + (j - r0) * B + b0;
-#define NS_W(b) o[b] = s##b;
-            NS_ACC8(NS_W)
-#undef NS_W
-        }
-    }
-}
-#else
-void gemm8_u8(const uint8_t *X, const float *Q, float *out,
-              long r0, long r1, long d, long B) {
-    for (long b0 = 0; b0 + 8 <= B; b0 += 8) {
-        for (long j = r0; j < r1; j++) {
-            const uint8_t *row = X + j * d;
-            for (int b = 0; b < 8; b++) {
-                const float *q = Q + (b0 + b) * d;
-                float s = 0.0f;
-                for (long i = 0; i < d; i++) s += (float)row[i] * q[i];
-                out[(j - r0) * B + b0 + b] = s;
-            }
-        }
-    }
-}
-#endif
-
 /* ---- VNNI integer 8-query pass (round 10) ------------------------
    u8 codes x s8 query codes -> s32 dots via VPDPBUSD (64 MACs per
    instruction, no int16 saturation — the reason to require VNNI
    rather than the PMADDUBSW pair).  This moves the coarse pass off
-   the float FMA units entirely: the f32/f16/u8-convert kernels above
-   all saturate the SAME ~2 flops/lane/cycle FMA throughput, which is
+   the float FMA units entirely: the f32 sgemv and the f16-convert
+   kernels above all saturate the SAME ~2 flops/lane/cycle FMA throughput, which is
    the measured per-pass floor on a shared host; integer dot-product
    arithmetic is 4x denser.  Epilogue (affine de-quantization) happens
    in numpy.  Q rows are s8, d-padded like X; out is (r1-r0, B) s32;
@@ -488,117 +410,6 @@ void gemm8vnni_thr(const uint8_t *X, const int8_t *Qc,
 #endif
 """
 
-_SRC_HAM = r"""
-#include <stdint.h>
-
-/* ---- 1-bit sign-code Hamming kernels (round 11) -------------------
-   The angular single-query cell's floor is MEMORY TRAFFIC: every
-   coarse pass above still streams >= 1 B/dim (200 MB at 1M x 200).
-   Sign codes are 1 BIT/dim — 25 MB — and xor+popcount is denser than
-   any FMA.  ham8_* score a row block against 8 query codes per pass:
-   the 8 queries' words are pre-transposed so each row word broadcasts
-   once and lands on all 8 lanes of one VPOPCNTQ accumulator; the
-   threshold variant emits the per-(row,8q) survivor byte straight
-   from the unsigned-compare mask (no score matrix, same epilogue as
-   gemm8vnni_thr).  w = u64 words per row (d <= 64*NS_HAM_MAX_W). */
-#define NS_HAM_MAX_W 32
-
-#if defined(__AVX512VPOPCNTDQ__) && defined(__AVX512F__)
-#include <immintrin.h>
-void ham8_u64(const uint64_t *X, const uint64_t *Qb, int32_t *out,
-              long r0, long r1, long w, long B) {
-    uint64_t qt[NS_HAM_MAX_W * 8] __attribute__((aligned(64)));
-    for (long b0 = 0; b0 + 8 <= B; b0 += 8) {
-        for (long i = 0; i < w; i++)
-            for (int b = 0; b < 8; b++)
-                qt[i * 8 + b] = Qb[(b0 + b) * w + i];
-        for (long j = r0; j < r1; j++) {
-            const uint64_t *row = X + j * w;
-            __m512i acc = _mm512_setzero_si512();
-            for (long i = 0; i < w; i++) {
-                __m512i q = _mm512_load_si512((const void *)(qt + i * 8));
-                __m512i x = _mm512_set1_epi64((long long)row[i]);
-                acc = _mm512_add_epi64(
-                    acc, _mm512_popcnt_epi64(_mm512_xor_si512(x, q)));
-            }
-            _mm256_storeu_si256(
-                (__m256i *)(out + (j - r0) * B + b0),
-                _mm512_cvtepi64_epi32(acc));
-        }
-    }
-}
-
-/* bit b of byte (j-r0)*(B/8)+(b0>>3) = hamming(row_j, q_{b0+b}) <=
-   thr[b0+b]; pad lanes use thr = -1 (hamming >= 0 never passes) */
-void ham8_thr(const uint64_t *X, const uint64_t *Qb, const int32_t *thr,
-              uint8_t *out_bits, long r0, long r1, long w, long B) {
-    uint64_t qt[NS_HAM_MAX_W * 8] __attribute__((aligned(64)));
-    long gb_ = B / 8;
-    for (long b0 = 0; b0 + 8 <= B; b0 += 8) {
-        for (long i = 0; i < w; i++)
-            for (int b = 0; b < 8; b++)
-                qt[i * 8 + b] = Qb[(b0 + b) * w + i];
-        __m512i t = _mm512_set_epi64(
-            (long long)thr[b0 + 7], (long long)thr[b0 + 6],
-            (long long)thr[b0 + 5], (long long)thr[b0 + 4],
-            (long long)thr[b0 + 3], (long long)thr[b0 + 2],
-            (long long)thr[b0 + 1], (long long)thr[b0 + 0]);
-        for (long j = r0; j < r1; j++) {
-            const uint64_t *row = X + j * w;
-            __m512i acc = _mm512_setzero_si512();
-            for (long i = 0; i < w; i++) {
-                __m512i q = _mm512_load_si512((const void *)(qt + i * 8));
-                __m512i x = _mm512_set1_epi64((long long)row[i]);
-                acc = _mm512_add_epi64(
-                    acc, _mm512_popcnt_epi64(_mm512_xor_si512(x, q)));
-            }
-            /* thr lanes are sign-extended i32: -1 pad lanes become
-               huge under epu64, so compare SIGNED (both sides small
-               non-negative except the pad sentinel) */
-            __mmask8 m = _mm512_cmple_epi64_mask(acc, t);
-            out_bits[(j - r0) * gb_ + (b0 >> 3)] = (uint8_t)m;
-        }
-    }
-}
-int has_popcnt512(void) { return 1; }
-#else
-void ham8_u64(const uint64_t *X, const uint64_t *Qb, int32_t *out,
-              long r0, long r1, long w, long B) {
-    for (long b0 = 0; b0 + 8 <= B; b0 += 8) {
-        for (long j = r0; j < r1; j++) {
-            const uint64_t *row = X + j * w;
-            for (int b = 0; b < 8; b++) {
-                const uint64_t *q = Qb + (b0 + b) * w;
-                int32_t s = 0;
-                for (long i = 0; i < w; i++)
-                    s += (int32_t)__builtin_popcountll(row[i] ^ q[i]);
-                out[(j - r0) * B + b0 + b] = s;
-            }
-        }
-    }
-}
-void ham8_thr(const uint64_t *X, const uint64_t *Qb, const int32_t *thr,
-              uint8_t *out_bits, long r0, long r1, long w, long B) {
-    long gb_ = B / 8;
-    for (long b0 = 0; b0 + 8 <= B; b0 += 8) {
-        for (long j = r0; j < r1; j++) {
-            const uint64_t *row = X + j * w;
-            uint8_t bits = 0;
-            for (int b = 0; b < 8; b++) {
-                const uint64_t *q = Qb + (b0 + b) * w;
-                int32_t s = 0;
-                for (long i = 0; i < w; i++)
-                    s += (int32_t)__builtin_popcountll(row[i] ^ q[i]);
-                bits |= (uint8_t)(s <= thr[b0 + b]) << b;
-            }
-            out_bits[(j - r0) * gb_ + (b0 >> 3)] = bits;
-        }
-    }
-}
-int has_popcnt512(void) { return 0; }
-#endif
-"""
-
 _lock = threading.Lock()
 _cache: dict[str, object] = {}
 
@@ -628,8 +439,7 @@ def _compile() -> "ctypes.CDLL | None":
                     break
     except OSError:
         pass
-    src_all = _SRC + _SRC_HAM
-    tag = hashlib.sha256((src_all + cpu_id).encode()).hexdigest()[:16]
+    tag = hashlib.sha256((_SRC + cpu_id).encode()).hexdigest()[:16]
     # per-uid 0700 cache dir, never a world-writable shared path: a
     # predictable .so name in /tmp would let any local user plant a
     # library that ctypes.CDLL then executes in this process
@@ -650,7 +460,7 @@ def _compile() -> "ctypes.CDLL | None":
         tmp = so_path + f".tmp{os.getpid()}"
         try:
             with open(src_path, "w") as f:
-                f.write(src_all)
+                f.write(_SRC)
             subprocess.run(
                 [gcc, "-O3", "-march=native", "-shared", "-fPIC",
                  "-o", tmp, src_path],
@@ -664,12 +474,11 @@ def _compile() -> "ctypes.CDLL | None":
             return None
     try:
         lib = ctypes.CDLL(so_path)
-        for fn in (lib.gemv_f16, lib.gemv_u8):
-            fn.argtypes = [ctypes.c_void_p, ctypes.c_void_p,
-                           ctypes.c_void_p, ctypes.c_long,
-                           ctypes.c_long, ctypes.c_long]
-            fn.restype = None
-        for fn in (lib.gemm8_f16, lib.gemm8_u8, lib.gemm8vnni_u8):
+        lib.gemv_f16.argtypes = [ctypes.c_void_p, ctypes.c_void_p,
+                                 ctypes.c_void_p, ctypes.c_long,
+                                 ctypes.c_long, ctypes.c_long]
+        lib.gemv_f16.restype = None
+        for fn in (lib.gemm8_f16, lib.gemm8vnni_u8):
             fn.argtypes = [ctypes.c_void_p, ctypes.c_void_p,
                            ctypes.c_void_p, ctypes.c_long,
                            ctypes.c_long, ctypes.c_long, ctypes.c_long]
@@ -681,17 +490,6 @@ def _compile() -> "ctypes.CDLL | None":
         lib.gemm8vnni_thr.restype = None
         lib.has_vnni.argtypes = []
         lib.has_vnni.restype = ctypes.c_int
-        lib.ham8_u64.argtypes = [
-            ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,
-            ctypes.c_long, ctypes.c_long, ctypes.c_long, ctypes.c_long]
-        lib.ham8_u64.restype = None
-        lib.ham8_thr.argtypes = [
-            ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,
-            ctypes.c_void_p, ctypes.c_long, ctypes.c_long,
-            ctypes.c_long, ctypes.c_long]
-        lib.ham8_thr.restype = None
-        lib.has_popcnt512.argtypes = []
-        lib.has_popcnt512.restype = ctypes.c_int
         return lib
     except (OSError, AttributeError):
         return None

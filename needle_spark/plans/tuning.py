@@ -469,11 +469,11 @@ def recommend_ann_codes(train_sample, query_sample,
         sub = dim // m_sub
         mu = t.mean(axis=0)
         res = (t - mu).astype(np.float32)
-        # NO pre-rotation, matching the built index's default
-        # (plans/ivf.py pq_rotation='none'): PCA eigen-allocation was
-        # measured on the real 1M grid and REGRESSES the coarse cut
-        # (factor-4 recall 0.507 -> 0.350 — PLANS.md round 9), so the
-        # sim must not simulate a transform the build won't apply
+        # NO pre-rotation, matching the built index (plans/ivf.py
+        # fits PQ codebooks on unrotated residuals: every rotation was
+        # measured worse on the real 1M grid — PCA factor-4 recall
+        # 0.507 -> 0.350, PLANS.md round 9 — and deleted), so the sim
+        # must not simulate a transform the build won't apply
         R = res.reshape(len(t), m_sub, sub)
         books = np.stack([
             np.asarray(_kmeans_fit(np.ascontiguousarray(R[:, j, :]),

@@ -34,6 +34,10 @@ from needle_spark.plans.ivf import IvfBatchKnnIndex  # noqa: E402
 
 NLIST_VALUES = [256, 512, 1024]
 NPROBE_VALUES = [1, 2, 4, 8, 16, 32, 64]
+#: keys an IVF grid row of this script carries; any other key on a
+#: prior row is a tag of a retired option (e.g. a deleted PQ rotation)
+_IVF_ROW_KEYS = {"nlist", "nprobe", "codes", "refine", "refine_factor",
+                 "recall_at_10", "qps", "ms_per_query", "build_s"}
 
 
 def _artifact_path(dataset: str) -> str:
@@ -49,15 +53,10 @@ def _write_artifact(args, rows, n, dims, metric, note=None):
     so one file holds the full recall/QPS picture per dataset."""
     path = _artifact_path(args.dataset)
     merged = list(rows)
-    # family key INCLUDES pq_rotation (memory/judge gotcha: without it
-    # a rotation run clobbered the canonical same-codes rows)
-    cur_rot = getattr(args, "pq_rotation", "none")
     cur_fam = "flat" if args.index == "flat" else (
         f"ivf:{args.codes}"
         + (f"+refine{getattr(args, 'refine_factor', 4)}"
-           if getattr(args, "refine", False) else "")
-        + (f"+rot-{cur_rot}"
-           if args.codes == "pq" and cur_rot != "none" else ""))
+           if getattr(args, "refine", False) else ""))
     if os.path.exists(path):
         try:
             with open(path) as f:
@@ -66,11 +65,15 @@ def _write_artifact(args, rows, n, dims, metric, note=None):
                 def fam(r):
                     if r.get("tier") == "flat":
                         return "flat"
-                    rot = r.get("pq_rotation", "none")
+                    # a retired option's tag (other than its "none"
+                    # default) keeps its rows in their own family, so
+                    # a re-run never drops the recorded evidence
+                    tags = "".join(f"+{k}-{v}" for k, v in sorted(r.items())
+                                   if k not in _IVF_ROW_KEYS
+                                   and v != "none")
                     return (f"ivf:{r.get('codes', prior.get('codes'))}"
                             + (f"+refine{r.get('refine_factor', 4)}"
-                               if r.get("refine") else "")
-                            + (f"+rot-{rot}" if rot != "none" else ""))
+                               if r.get("refine") else "") + tags)
                 merged = [r for r in prior.get("grid", [])
                           if fam(r) != cur_fam] + merged
             else:
@@ -127,10 +130,7 @@ def run_flat(args, train, queries, thr, metric) -> None:
                 V.astype(np.float64) - qf[i].astype(np.float64), axis=1)
         hits.append(min(args.k, int((d <= thr[i]).sum())) / args.k)
     # single-query serving: default path is the exact scan (recall 1.0
-    # by construction — the floor is one DRAM pass over the matrix);
-    # the opt-in SQ8-coarse path is measured alongside for the record
-    # (slower on this stack: GIL-bound uint8->f32 cast, see PLANS.md
-    # 'Flat single-query floor')
+    # by construction — the floor is one DRAM pass over the matrix)
     def single_hit(i, vids):
         if not vids:
             return 0.0
@@ -150,17 +150,10 @@ def run_flat(args, train, queries, thr, metric) -> None:
         t0 = time.perf_counter()
         idx.search_one(queries[i], k=args.k)
         lats.append(time.perf_counter() - t0)
-    idx.search_one(queries[0], k=args.k, path="coarse")  # build sidecar
-    lats_c, c_hits = [], []
-    for i in range(min(100, len(queries))):
-        t0 = time.perf_counter()
-        r1 = idx.search_one(queries[i], k=args.k, path="coarse")
-        lats_c.append(time.perf_counter() - t0)
-        c_hits.append(single_hit(i, [p[0] for p in r1]))
     # f16 coarse pass (compiled F16C kernel, plans/native.py): halves
     # the single-query DRAM floor; distances exact-reranked, membership
-    # recall measured like the coarse row.  Only emitted when the
-    # routing actually engages (rows above THRESHOLD_MIN_ROWS) — below
+    # recall measured against the exact ground truth.  Only emitted
+    # when the routing actually engages (rows above THRESHOLD_MIN_ROWS) — below
     # it path="f16" silently serves the exact scan and the row would
     # mislabel exact-scan latencies as the f16 path's (review r9)
     f16_row = {}
@@ -188,17 +181,12 @@ def run_flat(args, train, queries, thr, metric) -> None:
         "single_p99_ms": round(float(np.percentile(lats, 99)) * 1000, 2),
         "single_path": "exact_scan",
         "single_min_ms": round(float(np.min(lats)) * 1000, 2),
-        "single_coarse_p50_ms": round(
-            float(np.percentile(lats_c, 50)) * 1000, 2),
-        "single_coarse_recall_at_10": round(float(np.mean(c_hits)), 4),
         **f16_row,
         "build_s": round(build_s, 1),
     }
     print(f"flat: recall@10={row['recall_at_10']} {row['qps']} qps "
           f"(exact single p50 {row['single_p50_ms']} ms min "
-          f"{row['single_min_ms']}; coarse single p50 "
-          f"{row['single_coarse_p50_ms']} ms recall "
-          f"{row['single_coarse_recall_at_10']})", flush=True)
+          f"{row['single_min_ms']})", flush=True)
     _write_artifact(
         args, [row], n, dims, metric,
         note="flat = exact driver-serving tier (plans/flat.py): the "
@@ -229,16 +217,6 @@ def main() -> None:
     ap.add_argument("--pq-m", dest="pq_m", type=int, default=None,
                     help="PQ subspace count (codes=pq): 1 byte per "
                          "subspace; must divide dim (default dim/8)")
-    ap.add_argument("--pq-rotation", dest="pq_rotation", default="none",
-                    choices=["none", "pca", "random", "opq",
-                             "opq_local"],
-                    help="OPQ-lite orthogonal pre-transform before the "
-                         "subspace split (codes=pq).  Default none: "
-                         "both pca eigen-allocation (1M grid factor-4 "
-                         "recall 0.507 -> 0.350) and random rotation "
-                         "were measured WORSE on the per-cell IVF "
-                         "residuals; selectable for corpora with "
-                         "genuinely global residual covariance")
     ap.add_argument("--refine-factor", dest="refine_factor", type=int,
                     default=4,
                     help="quantized overfetch multiple per cell before "
@@ -345,8 +323,7 @@ def main() -> None:
                                kmeans_max_iter=6, sample_rows=65536,
                                code_dtype=args.codes, refine=args.refine,
                                refine_factor=args.refine_factor,
-                               pq_m=args.pq_m,
-                               pq_rotation=args.pq_rotation)
+                               pq_m=args.pq_m)
         idx.pin_segments(decoded=True)
         build_s = time.perf_counter() - t0
         print(f"# built nlist={nlist} in {build_s:.1f}s", flush=True)
@@ -388,8 +365,6 @@ def main() -> None:
             rows.append({
                 "nlist": nlist, "nprobe": nprobe,
                 "codes": args.codes,
-                **({"pq_rotation": args.pq_rotation}
-                   if args.codes == "pq" else {}),
                 **({"refine": True,
                     "refine_factor": args.refine_factor}
                    if args.refine else {}),

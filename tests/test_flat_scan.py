@@ -97,58 +97,79 @@ def test_threshold_fallback_under_k(monkeypatch):
     idx.unpersist()
 
 
+def _coarse_paths():
+    """The compiled coarse paths this host serves, with the sidecar
+    attribute each one builds; skips without a C toolchain."""
+    from needle_spark.plans.native import gemv_f16_kernel
+
+    lib = gemv_f16_kernel()
+    if lib is None:
+        pytest.skip("no C toolchain in this environment")
+    return [("f16", "_f16")] + ([("vnni", "_sq8")] if lib.has_vnni() else [])
+
+
 @pytest.mark.parametrize("metric", ["cosine", "dot", "euclidean"])
 def test_coarse_opt_in_path_parity(metric, monkeypatch):
-    """path='coarse' routes low-q searches through the SQ8 sidecar +
-    exact re-rank; with fetch covering most of this small corpus the
-    result must match brute force exactly, and distances are exact
-    by construction (float32 re-rank)."""
+    """path='f16' / path='vnni' route low-q searches through a compiled
+    coarse cut + exact re-rank; with fetch covering most of this small
+    corpus the result must match brute force exactly, filtered too, and
+    distances are exact by construction (float32 re-rank).  The default
+    path never builds either sidecar."""
     monkeypatch.setattr(FlatKnnIndex, "THRESHOLD_MIN_ROWS", 100)
     idx = FlatKnnIndex(IDS, X, metric=metric, metas=METAS)
     exp = brute(metric)
-    for qi in (0, 3):
-        res = idx.search_many_local(([0], QUERIES[qi:qi + 1]), k=K,
-                                    path="coarse")
-        assert list(res["id"]) == exp[qi][0], (metric, qi)
-        assert np.allclose(res["distance"], exp[qi][1], atol=1e-4)
-    # default path never builds the sidecar
-    assert idx._sq8 is not None
-    idx._sq8 = None
-    res = idx.search_many_local(([0], QUERIES[:1]), k=K)
-    assert list(res["id"]) == exp[0][0]
-    assert idx._sq8 is None
-    # filtered coarse
-    wm = METAS["grp"] == 2
-    expf = brute(metric, wm)
-    res = idx.search_many_local(([0], QUERIES[:1]), k=K,
-                                where={"grp": 2}, path="coarse")
-    assert list(res["id"]) == expf[0][0]
+    expf = brute(metric, METAS["grp"] == 2)
+    for path, sidecar in _coarse_paths():
+        for qi in (0, 3):
+            res = idx.search_many_local(([0], QUERIES[qi:qi + 1]), k=K,
+                                        path=path)
+            assert list(res["id"]) == exp[qi][0], (metric, path, qi)
+            assert np.allclose(res["distance"], exp[qi][1], atol=1e-4)
+        # default path never builds the sidecar
+        assert getattr(idx, sidecar) is not None
+        setattr(idx, sidecar, None)
+        res = idx.search_many_local(([0], QUERIES[:1]), k=K)
+        assert list(res["id"]) == exp[0][0]
+        assert getattr(idx, sidecar) is None
+        # filtered coarse
+        res = idx.search_many_local(([0], QUERIES[:1]), k=K,
+                                    where={"grp": 2}, path=path)
+        assert list(res["id"]) == expf[0][0], (metric, path)
     idx.unpersist()
 
 
 def test_coarse_under_k_fallback(monkeypatch):
-    """A filter so selective the coarse threshold keeps < k survivors
-    must fall back to the exact per-query column scan."""
-    monkeypatch.setattr(FlatKnnIndex, "THRESHOLD_MIN_ROWS", 100)
+    """A filter so selective the coarse threshold keeps fewer than k
+    survivors must fall back to the exact per-query column scan
+    (_rerank_exact): 12 matching rows and k=12, while the cut always
+    drops at least the lowest-scoring one."""
+    monkeypatch.setattr(FlatKnnIndex, "THRESHOLD_MIN_ROWS", 5)
+    calls = []
+    rerank = FlatKnnIndex._rerank_exact
+    monkeypatch.setattr(FlatKnnIndex, "_rerank_exact",
+                        lambda self, *a: calls.append(1) or rerank(self, *a))
     metas = {"grp": np.where(np.arange(N) % 417 == 0, 9, 0)}
     idx = FlatKnnIndex(IDS, X, metric="cosine", metas=metas)
-    res = idx.search_many_local(([0], QUERIES[:1]), k=K,
-                                where={"grp": 9}, path="coarse")
-    exp = brute("cosine", metas["grp"] == 9)
-    assert list(res["id"]) == exp[0][0]
+    exp = brute("cosine", metas["grp"] == 9, k=12)
+    for path, _sidecar in _coarse_paths():
+        res = idx.search_many_local(([0], QUERIES[:1]), k=12,
+                                    where={"grp": 9}, path=path)
+        assert calls, path  # the coarse path ran, not the exact scan
+        calls.clear()
+        assert list(res["id"]) == exp[0][0], path
+        assert np.allclose(res["distance"], exp[0][1], atol=1e-4)
     idx.unpersist()
 
 
-def test_coarse_batch_stays_exact(monkeypatch):
-    """Calls above COARSE_MAX_Q never touch the sidecar even when
-    coarse is requested — the batch tier's recall-1.0-by-construction
-    claim is structural."""
-    monkeypatch.setattr(FlatKnnIndex, "THRESHOLD_MIN_ROWS", 100)
+@pytest.mark.parametrize("path", ["coarse", "bin", "bogus"])
+def test_unknown_path_rejected(path):
+    """Only exact/f16/vnni are served; any other path raises rather
+    than silently serving the exact scan."""
     idx = FlatKnnIndex(IDS, X, metric="cosine")
-    idx.search_many_local((list(range(Q)), QUERIES), k=K,
-                          path="coarse")
-    assert idx._sq8 is None  # 17-query batch: sidecar untouched
-    idx.unpersist()
+    with pytest.raises(ValueError, match="path must be one of"):
+        idx.search_many_local(([0], QUERIES[:1]), k=K, path=path)
+    with pytest.raises(ValueError, match="path must be one of"):
+        idx.search_one(QUERIES[0], k=K, path=path)
 
 
 def test_k_larger_than_corpus():
@@ -476,60 +497,3 @@ def test_vnni_path_matches_exact():
         got = idx2.search_one(X[5].astype(np.float64), k=10,
                               path="vnni")
         assert len(got) == 10
-
-
-def test_bin_path_exact_distances_and_high_recall_on_clusters():
-    """path='bin' (VERDICT r10 Next #3): 1-bit sign-code coarse cut +
-    exact f32 rerank.  Distances for returned ids are EXACT; on a
-    tight-cluster corpus (where sign codes separate clusters cleanly)
-    recall@10 vs the exact scan stays high.  The glove-twin recall
-    curve (BIN_RECALL_CURVE.json) is the measured-decline evidence for
-    serving; this pins the machinery itself."""
-    from needle_spark.plans.flat import FlatKnnIndex
-
-    rng = np.random.default_rng(45)
-    n, d = 260_000, 64
-    centers = rng.standard_normal((64, d)).astype(np.float32)
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    Xb = (centers[rng.integers(0, 64, n)]
-          + 0.05 * rng.standard_normal((n, d))).astype(np.float32)
-    idx = FlatKnnIndex(np.arange(n, dtype=np.int64), Xb, metric="cosine")
-    if not idx.enable_bin():
-        pytest.skip("no C toolchain in this environment")
-    hits = tot = 0
-    for qi in (3, 17, 111):
-        q = Xb[qi * 29].astype(np.float64)
-        exact = idx.search_one(q, k=10)
-        binr = idx.search_one(q, k=10, path="bin")
-        # every returned (id, distance) is the TRUE distance
-        by_id = dict(exact)
-        full = {int(i): 1 - float(
-            (Xb[i] / np.linalg.norm(Xb[i])) @ (q / np.linalg.norm(q)))
-            for i, _ in binr}
-        for i, dd in binr:
-            assert abs(dd - full[int(i)]) < 1e-5
-        hits += len(set(i for i, _ in binr) & set(by_id)) / 10
-        tot += 1
-    assert hits / tot >= 0.9
-
-
-def test_bin_path_gating():
-    """bin is cosine-only and falls back to exact elsewhere; the
-    sidecar drops on writes like the other sidecars."""
-    from needle_spark.plans.flat import FlatKnnIndex
-
-    rng = np.random.default_rng(46)
-    Xe = rng.standard_normal((1000, 16)).astype(np.float32)
-    for metric in ("dot", "euclidean"):
-        idx = FlatKnnIndex(np.arange(1000, dtype=np.int64), Xe,
-                           metric=metric)
-        assert idx.enable_bin() is False
-        got = idx.search_one(Xe[3].astype(np.float64), k=5, path="bin")
-        assert len(got) == 5  # exact fallback, no crash
-    idx = FlatKnnIndex(np.arange(1000, dtype=np.int64), Xe,
-                       metric="cosine")
-    if not idx.enable_bin():
-        pytest.skip("no C toolchain")
-    assert idx._bin is not None
-    idx.add_local([9999], Xe[:1])
-    assert idx._bin is None  # stale sidecar dropped

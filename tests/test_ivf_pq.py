@@ -188,103 +188,28 @@ def test_pq_small_sample_codebook_pads(spark):
         idx.unpersist()
 
 
-def test_pq_rotation_options(spark):
-    """OPQ-lite pre-transform (VERDICT r8 #7): pq_rotation='none' is
-    the measured default (PCA regressed the real 1M grid's coarse cut,
-    factor-4 0.507 -> 0.350 — plans/ivf.py comment); 'pca' and
-    'random' stay selectable.  The transform must be orthogonal
-    (scores are basis-invariant) and the full-probe refine invariant
-    must hold in every basis."""
-    V, rng = _corpus()
-    q = rng.standard_normal(DIM) * 2
-    want = [w[0] for w in _brute(V, q, "euclidean", k=10)]
-    for rot in ("pca", "random", "none"):
-        idx = IvfBatchKnnIndex(_df(spark, V), nlist=8, vector_col="vector",
-                               id_col="id", metric="euclidean", seed=1,
-                               code_dtype="pq", pq_m=8, pq_rotation=rot,
-                               refine=True, refine_factor=N)
-        idx.pin_segments()
-        try:
-            if rot == "none":
-                assert idx._pq_R is None
-            else:
-                R = idx._pq_R
-                assert R.shape == (DIM, DIM)
-                assert np.allclose(R @ R.T, np.eye(DIM), atol=1e-8)
-            got = [g[0] for g in idx.search_one(q, k=10, nprobe=idx.nlist)]
-            assert got == want, rot
-        finally:
-            idx.unpersist()
-    with pytest.raises(ValueError, match="pq_rotation"):
-        IvfBatchKnnIndex(_df(spark, V[:300]), nlist=4, vector_col="vector",
-                         id_col="id", code_dtype="pq", pq_m=8,
-                         pq_rotation="bogus")
-
-
-def test_pq_rotation_coarse_recall_not_worse(spark):
-    """The pca transform's point is a better COARSE (unrefined)
-    ordering; at minimum it must not materially regress vs the
-    unrotated split on the clustered corpus."""
-    V, rng = _corpus()
-    Q = rng.standard_normal((20, DIM)) * 2
-    q_ids = list(range(20))
-
-    def coarse_recall(rot):
-        idx = IvfBatchKnnIndex(_df(spark, V), nlist=8, vector_col="vector",
-                               id_col="id", metric="euclidean", seed=1,
-                               code_dtype="pq", pq_m=8, pq_rotation=rot)
-        idx.pin_segments()
-        try:
-            got = idx.search_many_local((q_ids, Q), k=10, nprobe=idx.nlist)
-            hits = 0
-            for qi in q_ids:
-                want = {w[0] for w in _brute(V, Q[qi], "euclidean", k=10)}
-                hits += len(want & set(got[got.query_id == qi].id))
-            return hits / (10 * len(q_ids))
-        finally:
-            idx.unpersist()
-
-    assert coarse_recall("pca") >= coarse_recall("none") - 0.05
-
-
-def test_pq_rotation_opq_local(spark):
-    """Per-cell rotations (VERDICT r10 #8, LOPQ shared-codebook
-    variant): orthogonality per fitted cell, identity fallback for
-    thin cells, the full-probe refine invariant in the per-cell
-    bases, and encode/decode consistency between the Arrow build
-    kernel and the driver-local _encode_np (add_local path)."""
-    V, rng = _corpus()
-    q = rng.standard_normal(DIM) * 2
-    want = [w[0] for w in _brute(V, q, "euclidean", k=10)]
+def test_pq_encode_np_matches_build_kernel(spark):
+    """The driver-local encode (_encode_np, the add_local path) and the
+    Arrow build kernel agree row for row on the PQ codes: same cell,
+    same code bytes, same stored norm.  The stored nsq is the DECODED
+    row's norm (asymmetric-distance consistency), and the decoded
+    residual is closer to the true one than zero is."""
+    V, _ = _corpus()
     idx = IvfBatchKnnIndex(_df(spark, V), nlist=8, vector_col="vector",
                            id_col="id", metric="euclidean", seed=1,
-                           code_dtype="pq", pq_m=8,
-                           pq_rotation="opq_local",
-                           refine=True, refine_factor=N)
-    idx.pin_segments()
+                           code_dtype="pq", pq_m=8)
     try:
-        R = idx._pq_R_cells
-        assert R is not None and R.shape == (8, DIM, DIM)
-        assert idx._pq_R is None
-        for c in range(8):
-            assert np.allclose(R[c] @ R[c].T, np.eye(DIM), atol=1e-5)
-        got = [g[0] for g in idx.search_one(q, k=10, nprobe=idx.nlist)]
-        assert got == want
-        # driver-local encode agrees with the build-side decode shape:
-        # roundtrip reconstruction error stays bounded by the residual
-        # norm (a basis mix-up would blow it up)
-        assign, nsq, codes, Vn = idx._encode_np(V[:64].astype(np.float32))
+        built = idx.codes.filter("id < 64").toPandas().sort_values("id")
+        assign, nsq, codes, Vn = idx._encode_np(V[:64])
+        assert (built["centroid_id"].to_numpy() == assign).all()
+        assert [bytes(b) for b in built[idx.CODE_COL]] \
+            == [c.tobytes() for c in codes]
+        assert np.array_equal(built["norm_sq"].to_numpy(np.float32), nsq)
         books = np.ascontiguousarray(idx._pq, dtype=np.float32)
-        m_sub = books.shape[0]
         ci = np.asarray(codes, dtype=np.int64)
-        dec_r = books[np.arange(m_sub)[None, :], ci].reshape(len(ci), DIM)
-        from needle_spark.plans.ivf import _rotate_per_cell
-        dec = _rotate_per_cell(dec_r, assign, R, inverse=True)
+        dec = books[np.arange(len(books))[None, :], ci].reshape(len(ci), DIM)
         res = Vn - idx.centroids[assign].astype(np.float32)
-        rel = np.linalg.norm(res - dec) / np.linalg.norm(res)
-        assert rel < 0.9  # quantization reduces, never inflates
-        # stored nsq is the DECODED norm (asymmetric-distance
-        # consistency) — must match the decoded rows
+        assert np.linalg.norm(res - dec) / np.linalg.norm(res) < 0.9
         full = dec + idx.centroids[assign].astype(np.float32)
         assert np.allclose(nsq, (full.astype(np.float64) ** 2).sum(1),
                            rtol=1e-3)

@@ -127,7 +127,7 @@ def test_poisson_load_run_shape(flat_idx):
 
 
 def test_gemm8_kernels_match_numpy():
-    """Fused 8-query kernels (round 10): f16/u8/vnni gemm8 variants and
+    """Fused 8-query kernels (round 10): f16/vnni gemm8 variants and
     the threshold-bit variant reproduce the numpy reference on padded
     and remainder dims; skipped when no toolchain."""
     import pytest as _pytest
@@ -151,10 +151,6 @@ def test_gemm8_kernels_match_numpy():
                       0, n, d, B)
         assert np.allclose(out, X16.astype(np.float32) @ Qf.T,
                            rtol=1e-4, atol=1e-3)
-        lib.gemm8_u8(U8.ctypes.data, Qf.ctypes.data, out.ctypes.data,
-                     0, n, d, B)
-        want = U8.astype(np.float32) @ Qf.T
-        assert np.allclose(out, want, rtol=1e-4, atol=1e-2)
         outi = np.empty((n, B), dtype=np.int32)
         lib.gemm8vnni_u8(U8.ctypes.data, Qc.ctypes.data,
                          outi.ctypes.data, 0, n, d, B)

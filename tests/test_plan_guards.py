@@ -24,6 +24,7 @@ regress them:
 
 import ast
 import collections
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -643,3 +644,54 @@ def test_no_dead_private_helpers():
             sources[str(path.relative_to(repo))] = path.read_text()
     dead = _dead_private_helpers(sources)
     assert not dead, f"module-level private helpers with no caller: {dead}"
+
+
+#: a C function definition at the start of a line (static ones are
+#: file-local helpers, not exported kernels)
+_C_EXPORT = re.compile(r"^(?!static\b)[A-Za-z_][\w \t]*?\**\b(\w+)\s*\(",
+                       re.M)
+
+
+def _dead_kernels(c_source: str, sources: dict) -> list:
+    """Exported functions of `c_source` that no Python source in
+    `sources` (repo-relative path -> text) names."""
+    used = collections.Counter()
+    for text in sources.values():
+        used.update(_names_in(ast.parse(text)))
+    return sorted({n for n in _C_EXPORT.findall(c_source) if not used[n]})
+
+
+def test_dead_kernel_scan_catches_an_unused_kernel():
+    c_source = (
+        "#include <stdint.h>\n"
+        "static float helper(uint16_t h) { return h; }\n"
+        "void used_kernel(const float *x, long n) {}\n"
+        "void probed_kernel(void) {}\n"
+        "int dead_kernel(void) { return 0; }\n")
+    sources = {"needle_spark/m.py": (
+        "def f(lib):\n"
+        "    lib.used_kernel(0, 1)\n"
+        "    return hasattr(lib, 'probed_kernel')\n")}
+    assert _dead_kernels(c_source, sources) == ["dead_kernel"]
+
+
+def test_no_dead_native_kernels():
+    """Every kernel compiled by plans/native.py has a caller in a
+    program file other than native.py itself (tests do not count)."""
+    import pathlib
+
+    import needle_spark
+    from needle_spark.plans import native
+
+    repo = pathlib.Path(needle_spark.__file__).parent.parent
+    sources = {}
+    for name in _PROGRAM_PATHS + ("scripts",):
+        p = repo / name
+        for path in sorted(p.rglob("*.py")) if p.is_dir() else [p]:
+            rel = str(path.relative_to(repo))
+            if rel != "needle_spark/plans/native.py":
+                sources[rel] = path.read_text()
+    c_source = "".join(v for k, v in vars(native).items()
+                       if k.startswith("_SRC") and isinstance(v, str))
+    dead = _dead_kernels(c_source, sources)
+    assert not dead, f"native kernels with no caller: {dead}"

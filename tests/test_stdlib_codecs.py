@@ -75,6 +75,7 @@ def encode_png(img: np.ndarray, filters: list[int] | None = None) -> bytes:
 @pytest.mark.parametrize("filters", [[0, 0, 0, 0], [1, 1, 1, 1],
                                      [2, 2, 2, 2], [3, 3, 3, 3],
                                      [4, 4, 4, 4], [0, 1, 2, 3]])
+@pytest.mark.filterwarnings("error::RuntimeWarning")
 def test_png_roundtrip_gray_filters(filters):
     rng = np.random.default_rng(42)
     img = rng.integers(0, 256, size=(4, 6), dtype=np.uint8)
@@ -83,6 +84,7 @@ def test_png_roundtrip_gray_filters(filters):
 
 
 @pytest.mark.parametrize("channels", [2, 3, 4])
+@pytest.mark.filterwarnings("error::RuntimeWarning")
 def test_png_roundtrip_multichannel(channels):
     rng = np.random.default_rng(7)
     img = rng.integers(0, 256, size=(5, 3, channels), dtype=np.uint8)
