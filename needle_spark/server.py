@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from needle_spark.catalog import Collection, CollectionError, Database
 from needle_spark.filters import compile_filter
+from needle_spark.observe import MetricsRegistry, generate_dashboard_html
 
 DEFAULT_K = 10  # server/types.rs:222 default_k
 
@@ -193,8 +194,7 @@ class RestServer:
         # reference's per-request preview)
         self._caches: dict[str, Any] = {}
         self._webhook_service = None  # lazy WebhookService
-        self._dash = None             # lazy MetricsAggregator
-        self._metrics = None          # lazy MetricsRegistry
+        self._metrics = MetricsRegistry()  # /metrics and /dashboard
         self._mcp_registry = None     # lazy ToolRegistry (MCP tools)
         self._mem_seq = 0             # memory-id uniqueness counter
         self._routes: list[tuple[str, re.Pattern, Callable]] = []
@@ -413,45 +413,18 @@ class RestServer:
         return 404, {"error": f"no route: {method} {path}"}
 
     def _observed(self, fn: Callable, m, b, q):
-        """Central observability: every dispatched handler is timed
-        into the embedded dashboard aggregator + Prometheus registry
-        (middleware.rs metrics_middleware analogue, but per-operation
-        rather than per-route-string)."""
-        import time as _time
-
-        t0 = _time.perf_counter()
-        out = fn(m, b, q)
-        us = int((_time.perf_counter() - t0) * 1e6)
-        try:
-            name = fn.__name__ if hasattr(fn, "__name__") else "op"
-            coll = m.group(1) if m.groups() else "_db"
-            dash, metrics = self._observe_state()
+        """Central observability: every dispatched handler, failed or
+        not, is recorded once into the registry behind /metrics and
+        /dashboard (middleware.rs metrics_middleware analogue, but
+        per-operation rather than per-route-string)."""
+        name = getattr(fn, "__name__", "op")
+        coll = m.group(1) if m.groups() else "_db"
+        with self._metrics.operation(coll, name) as op:
+            out = fn(m, b, q)
             if name in _QUERY_OPS:
-                n = len(out.get("results", ())) if isinstance(out, dict) \
-                    else 0
-                dash.record_query(coll, us, n)
-                metrics.record_search_results(coll, n)
-            elif name in _INSERT_OPS:
-                dash.record_insert(coll)
-            elif name in _DELETE_OPS:
-                dash.record_delete(coll)
-            metrics.inc("needle_operations_total",
-                        {"collection": coll, "operation": name})
-            metrics.observe("needle_operation_duration_seconds",
-                            {"collection": coll, "operation": name},
-                            us / 1e6)
-        except Exception:  # noqa: BLE001 — observability must not 500
-            pass
+                op.results = (len(out.get("results", ()))
+                              if isinstance(out, dict) else 0)
         return out
-
-    def _observe_state(self):
-        if self._dash is None:
-            from needle_spark.observe import (MetricsAggregator,
-                                             MetricsRegistry)
-
-            self._dash = MetricsAggregator()
-            self._metrics = MetricsRegistry()
-        return self._dash, self._metrics
 
     # -- helpers --
 
@@ -2272,20 +2245,16 @@ class RestServer:
                 "paths": paths}
 
     def dashboard(self, m, b, q) -> Raw:
-        from needle_spark.observe import generate_dashboard_html
-
-        dash, _ = self._observe_state()
-        return Raw(generate_dashboard_html(dash.snapshot()),
+        return Raw(generate_dashboard_html(self._metrics.dashboard()),
                    "text/html; charset=utf-8")
 
     def playground(self, m, b, q) -> Raw:
         return Raw(_PLAYGROUND_HTML, "text/html; charset=utf-8")
 
     def prometheus_metrics(self, m, b, q) -> Raw:
-        _, metrics = self._observe_state()
         for name in self.db.list_collections():
-            metrics.update_from_collection(self.db.collection(name))
-        return Raw(metrics.export(),
+            self._metrics.update_from_collection(self.db.collection(name))
+        return Raw(self._metrics.export(),
                    "text/plain; version=0.0.4; charset=utf-8")
 
     # -- http plumbing --

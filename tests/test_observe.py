@@ -1,17 +1,25 @@
 """Operational metrics — metrics.rs parity: registry + timers +
-Prometheus export, Grafana/alerting generation, anomaly detection."""
+Prometheus export, the embedded dashboard's window (dashboard.rs),
+Grafana/alerting generation, anomaly detection."""
 
 import json
+import sys
+import threading
 
 import pytest
 
 from needle_spark.catalog import Collection
 from needle_spark.observe import (
+    DASHBOARD_WINDOW,
+    MAX_SLOW_QUERIES,
+    QPS_INTERVAL_S,
+    SLOW_QUERY_US,
     AlertingConfig,
     AnomalyDetector,
     GrafanaDashboardConfig,
     MetricsRegistry,
     generate_alerting_rules,
+    generate_dashboard_html,
     generate_grafana_dashboard,
 )
 
@@ -116,92 +124,6 @@ def test_anomaly_zero_variance():
     assert r.std_dev == 0.0 and r.z_score == 0.0 and not r.is_anomaly
 
 
-# -------------------------------------------------- observability suite
-
-
-def test_latency_histogram_percentiles():
-    from needle_spark.observe import LatencyHistogram
-    h = LatencyHistogram()
-    for v in (100, 200, 400, 800, 2000, 4000, 40000, 90000):
-        h.observe(v)
-    assert h.total_count == 8 and h.min_us == 100 and h.max_us == 90000
-    assert h.mean() == pytest.approx(sum((100, 200, 400, 800, 2000, 4000,
-                                          40000, 90000)) / 8)
-    p50 = h.percentile(0.5)
-    assert 400 <= p50 <= 2500  # interpolated inside the mid buckets
-    assert h.percentile(0.99) <= 100000
-    assert h.percentile(0.0) == 0.0 or h.percentile(0.0) >= 0
-    # beyond the last bucket returns max observed
-    h2 = LatencyHistogram()
-    h2.observe(500000)
-    assert h2.percentile(0.99) == 500000
-    h.reset()
-    assert h.total_count == 0 and h.percentile(0.5) == 0.0
-
-
-def test_recall_estimator_semantics():
-    from needle_spark.observe import RecallEstimator
-    r = RecallEstimator(sample_size=4)
-    # observability.rs:142-160 edge cases
-    assert r.estimate([], [], now=0) == 1.0
-    assert r.estimate(["a"], [], now=0) == 0.0
-    assert r.estimate([], ["a"], now=0) == 0.0
-    got = r.estimate(["a", "b", "c"], ["a", "b", "d"], now=0)
-    assert got == pytest.approx(2 / 4)  # Jaccard |∩|/|∪|
-    assert r.confidence == pytest.approx(3 / 4)
-    assert r.is_stale(10.0, now=20.0) and not r.is_stale(30.0, now=20.0)
-
-
-def test_suite_alert_rules_cooldown():
-    from needle_spark.observe import AlertRule, ObservabilitySuite
-    s = ObservabilitySuite()
-    s.record_query_latency("docs", 90_000)
-    s.record_query_latency("docs", 95_000)
-    s.record_error("docs", "timeout")
-    s.add_alert_rule(AlertRule("slow-p99", "query_latency_p99",
-                               ("gt", 50_000.0), "critical",
-                               cooldown_seconds=100))
-    s.add_alert_rule(AlertRule("errors", "error_rate", ("gt", 0.5)))
-    s.add_alert_rule(AlertRule("recall", "recall_estimate", ("lt", 0.9)))
-    s.estimate_recall(["a"], ["a"], now=0)  # recall 1.0 — no fire
-    fired = s.check_alerts(now=0)
-    names = sorted(a["alert_id"].rsplit("-", 1)[0] for a in fired)
-    assert names == ["errors", "slow-p99"]
-    assert all(not a["acknowledged"] for a in fired)
-    # cooldown suppresses slow-p99; errors (no cooldown) refires
-    again = s.check_alerts(now=50)
-    assert [a["alert_id"].rsplit("-", 1)[0] for a in again] == ["errors"]
-    # after cooldown it fires again
-    later = s.check_alerts(now=200)
-    assert "slow-p99" in [a["alert_id"].rsplit("-", 1)[0] for a in later]
-    s.acknowledge_alert(fired[0]["alert_id"])
-    assert any(a["acknowledged"] for a in s.alerts)
-
-
-def test_suite_range_condition_and_drift():
-    from needle_spark.observe import AlertRule, ObservabilitySuite
-    s = ObservabilitySuite()
-    s.add_alert_rule(AlertRule("drift", "drift_score", ("range", 0.1, 0.9)))
-    assert s.check_alerts(now=0) == []  # no drift score yet -> skipped
-    s.set_drift_score(0.95)
-    fired = s.check_alerts(now=1)
-    assert fired[0]["threshold"] == 0.9 and fired[0]["current_value"] == 0.95
-
-
-def test_health_from_real_collection(spark, tmp_path):
-    from needle_spark.observe import ObservabilitySuite
-    from needle_spark.catalog import Collection
-    coll = Collection.create(spark, str(tmp_path / "hc"), dims=2)
-    for i in range(3):  # three mutations -> fragmented deltas
-        coll.insert(spark.createDataFrame(
-            [(f"v{i}", [1.0, 0.0])], "id string, vector array<float>"))
-    s = ObservabilitySuite()
-    h = s.health_from_collection(coll)
-    assert h.vector_count == 3
-    assert h.fragmentation_ratio > 0.0  # multiple delta segments
-    assert coll.path in s.index_health
-
-
 def test_export_single_type_line_and_escaping():
     m = MetricsRegistry()
     m.inc("needle_operations_total", {"collection": "a", "operation": "x"})
@@ -213,15 +135,90 @@ def test_export_single_type_line_and_escaping():
 
 
 def test_fragmentation_counts_tombstones(spark, tmp_path):
-    from needle_spark.observe import ObservabilitySuite
+    """needle_collection_deleted_vectors is the row count of the current
+    version's tombstones: the deletes awaiting compaction."""
     coll = Collection.create(spark, str(tmp_path / "tf"), dims=2)
     coll.insert(spark.createDataFrame(
         [("a", [1.0, 0.0]), ("b", [0.0, 1.0])],
         "id string, vector array<float>"))
     coll.compact()
     coll.delete(ids=["a"])  # tombstone-only mutation
-    h = ObservabilitySuite().health_from_collection(coll)
-    assert h.fragmentation_ratio > 0.0  # delete churn is visible
+    m = MetricsRegistry()
+    m.update_from_collection(coll)
+    text = m.export()
+    assert 'needle_collection_deleted_vectors{collection="tf"} 1' in text
+    assert 'needle_collection_vectors_total{collection="tf"} 1' in text
+    coll.compact()
+    m.update_from_collection(coll)
+    assert ('needle_collection_deleted_vectors{collection="tf"} 0'
+            in m.export())
+
+
+def test_concurrent_recording_keeps_every_increment():
+    """The REST server records from many handler threads: no counter
+    increment, histogram sample or dashboard search may be lost."""
+    m = MetricsRegistry()
+    threads, n = 8, 20_000
+    labels = {"collection": "c", "operation": "x"}
+
+    def work():
+        for _ in range(n):
+            m.inc("needle_operations_total", labels)
+        for _ in range(n // 10):
+            with m.operation("c", "search") as op:
+                op.results = 1
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        pool = [threading.Thread(target=work) for _ in range(threads)]
+        for t in pool:
+            t.start()
+        for t in pool:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in pool)
+    assert m.counters[("needle_operations_total",
+                       tuple(sorted(labels.items())))] == threads * n
+    text = m.export()
+    ops = threads * n // 10
+    assert (f'needle_operations_total{{collection="c",operation="search"}}'
+            f' {ops}') in text
+    assert (f'needle_operation_duration_seconds_count{{collection="c",'
+            f'operation="search"}} {ops}') in text
+    assert f'needle_search_result_count_count{{collection="c"}} {ops}' in text
+    assert m.dashboard()["queries"] == ops
+
+
+def test_operation_counts_errors_and_reraises():
+    m = MetricsRegistry()
+    with pytest.raises(KeyError):
+        with m.operation("docs", "search") as op:
+            raise KeyError("vector")
+    assert op.results is None
+    text = m.export()
+    assert 'needle_operations_total{collection="docs",operation="search"} 1' \
+        in text
+    assert ('needle_errors_total{collection="docs",error_type="KeyError",'
+            'operation="search"} 1') in text
+    assert ('needle_operation_duration_seconds_count{collection="docs",'
+            'operation="search"} 1') in text
+    assert m.dashboard()["queries"] == 0  # failed searches stay out
+
+
+def test_operation_recording_failure_keeps_outcome(monkeypatch):
+    m = MetricsRegistry()
+
+    def boom(*a, **k):
+        raise RuntimeError("metrics bug")
+
+    monkeypatch.setattr(m, "observe", boom)
+    with m.operation("docs", "search") as op:
+        op.results = 3
+    with pytest.raises(ValueError, match="bad body"):
+        with m.operation("docs", "search"):
+            raise ValueError("bad body")
 
 
 def test_dashboard_queries_reference_real_series():
@@ -233,61 +230,70 @@ def test_dashboard_queries_reference_real_series():
 # ------------------------------------------------- embedded dashboard
 
 
+def _search(reg, us, *, at, coll="docs", results=0):
+    """Record one search of `us` microseconds that ends at clock `at`."""
+    ticks = iter((at - us / 1e6, at))
+    reg.clock = lambda: next(ticks)
+    with reg.operation(coll, "search") as op:
+        op.results = results
+
+
+def _dashboard(reg, now):
+    reg.clock = lambda: now
+    return reg.dashboard()
+
+
 def test_metrics_aggregator_window_and_slow_log():
-    from needle_spark.observe import DashboardConfig, MetricsAggregator
-    agg = MetricsAggregator(DashboardConfig(
-        window_size=3, slow_query_threshold_us=1000, max_slow_queries=2))
+    reg = MetricsRegistry()
     for i, us in enumerate((100, 200, 5000, 9000, 7000)):
-        agg.record_query("docs", us, result_count=i, now=float(i))
-    assert len(agg._latencies) == 3  # bounded window
-    assert agg.query_count == 5
-    # slow log bounded to 2, oldest dropped
-    assert [q["duration_us"] for q in agg.slow_queries] == [9000, 7000]
-    p = agg.latency_percentiles()
-    assert p["count"] == 3 and p["min_us"] == 5000 and p["max_us"] == 9000
+        _search(reg, us, at=float(i), results=i)
+    d = _dashboard(reg, 10.0)
+    # exact window percentiles, the reference's index formulas
+    assert d["p50_us"] == 5000 and d["p99_us"] == 9000
+    assert d["queries"] == 5 and d["slow_queries"] == []
+
+    # the slow log keeps the newest MAX_SLOW_QUERIES searches strictly
+    # above SLOW_QUERY_US; the window keeps the newest DASHBOARD_WINDOW
+    reg = MetricsRegistry()
+    _search(reg, SLOW_QUERY_US, at=0.0)  # at the threshold: not slow
+    slow = [SLOW_QUERY_US + 1 + i for i in range(MAX_SLOW_QUERIES + 2)]
+    for us in slow:
+        _search(reg, us, at=1.0, results=us % 7)
+    for _ in range(DASHBOARD_WINDOW):
+        _search(reg, 100, at=2.0)
+    d = _dashboard(reg, 2.0)
+    assert d["queries"] == 1 + len(slow) + DASHBOARD_WINDOW
+    assert [q["duration_us"] for q in d["slow_queries"]] == slow[2:]
+    assert d["slow_queries"][-1] == {
+        "timestamp": 1.0, "collection": "docs",
+        "duration_us": slow[-1], "result_count": slow[-1] % 7}
+    # every slow search has left the window
+    assert d["p50_us"] == 100 and d["p99_us"] == 100
 
 
 def test_qps_over_interval():
-    from needle_spark.observe import DashboardConfig, MetricsAggregator
-    agg = MetricsAggregator(DashboardConfig(aggregation_interval_secs=5))
+    reg = MetricsRegistry()
     for t in (0.0, 1.0, 2.0, 100.0, 101.0):
-        agg.record_query("c", 10, now=t)
-    agg.record_insert("c")
-    q = agg.current_qps(now=102.0)
-    assert q["qps"] == pytest.approx(2 / 5)  # only the last two in window
-    assert q["insert_rate"] == pytest.approx(1 / 5)
+        _search(reg, 10, at=t, coll="c")
+    d = _dashboard(reg, 102.0)
+    assert d["qps"] == pytest.approx(2 / QPS_INTERVAL_S)  # the last two
 
 
 def test_snapshot_and_html():
-    from needle_spark.observe import (
-        DashboardConfig, MetricsAggregator, generate_dashboard_html)
-    agg = MetricsAggregator(DashboardConfig(slow_query_threshold_us=50))
-    agg.record_query("docs", 90_000, result_count=7, now=1.0)
-    agg.record_explain({"stage": "scan"})
-    snap = agg.snapshot(now=2.0)
-    assert snap["totals"]["queries"] == 1
-    assert snap["explains"] == [{"stage": "scan"}]
+    reg = MetricsRegistry()
+    _search(reg, 90_000, at=1.0, results=7)
+    snap = _dashboard(reg, 2.0)
+    assert snap["queries"] == 1
+    assert snap["slow_queries"][0]["result_count"] == 7
     html = generate_dashboard_html(snap)
     assert html.startswith("<!DOCTYPE html>")
     assert "needle-spark" in html and "90000" in html
     assert "http://" not in html and "https://" not in html  # no CDN
 
 
-def test_rates_are_windowed_not_lifetime():
-    from needle_spark.observe import DashboardConfig, MetricsAggregator
-    agg = MetricsAggregator(DashboardConfig(aggregation_interval_secs=5))
-    for t in range(100):  # long steady history
-        agg.record_insert("c", now=float(t))
-    q = agg.current_qps(now=100.0)
-    assert q["insert_rate"] == pytest.approx(5 / 5)  # ~1/s, not 20/s
-    assert agg.insert_count == 100  # lifetime total still tracked
-
-
 def test_dashboard_html_escapes_names():
-    from needle_spark.observe import (
-        DashboardConfig, MetricsAggregator, generate_dashboard_html)
-    agg = MetricsAggregator(DashboardConfig(slow_query_threshold_us=1))
-    agg.record_query("<script>evil()</script>", 999, now=1.0)
-    html = generate_dashboard_html(agg.snapshot(now=2.0))
+    reg = MetricsRegistry()
+    _search(reg, SLOW_QUERY_US + 1, at=1.0, coll="<script>evil()</script>")
+    html = generate_dashboard_html(_dashboard(reg, 2.0))
     assert "<script>evil" not in html
     assert "&lt;script&gt;" in html

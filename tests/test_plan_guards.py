@@ -695,3 +695,18 @@ def test_no_dead_native_kernels():
                        if k.startswith("_SRC") and isinstance(v, str))
     dead = _dead_kernels(c_source, sources)
     assert not dead, f"native kernels with no caller: {dead}"
+
+
+def test_lazy_exports_resolve():
+    """Every name in needle_spark's lazy export table and `__all__`
+    resolves: a deleted module or attribute must not leave a public
+    name that fails only when someone accesses it."""
+    import needle_spark
+
+    broken = {}
+    for name in sorted({*needle_spark._LAZY, *needle_spark.__all__}):
+        try:
+            getattr(needle_spark, name)
+        except (ImportError, AttributeError) as e:
+            broken[name] = repr(e)
+    assert not broken, f"stale public names: {broken}"

@@ -846,6 +846,37 @@ def test_openapi_and_raw_surfaces(srv, seeded):
     assert ctype.startswith("text/html") and "/ql" in html
 
 
+def test_failed_requests_are_counted(srv, monkeypatch):
+    """A 4xx is counted and timed like any operation, with its
+    needle_errors_total line, and a failure inside the metrics code
+    changes no response."""
+    call(srv, "POST", "/collections",
+         {"name": "merr", "dimensions": 2}, expect=201)
+    bad = ("POST", "/collections/merr/search", {"k": 5})
+    missing = ("GET", "/collections/merr_missing", None)
+    got_bad = call(srv, *bad, expect=400)
+    got_missing = call(srv, *missing, expect=404)
+    _, text = raw_call(srv, "/metrics")
+    for coll, op in (("merr", "search"), ("merr_missing", "get_collection")):
+        lbl = f'collection="{coll}",operation="{op}"'
+        assert f"needle_operations_total{{{lbl}}} 1" in text
+        assert f"needle_operation_duration_seconds_count{{{lbl}}} 1" in text
+    assert ('needle_errors_total{collection="merr",error_type="ApiError",'
+            'operation="search"} 1') in text
+    assert ('needle_errors_total{collection="merr_missing",'
+            'error_type="CollectionError",operation="get_collection"} 1'
+            ) in text
+
+    def boom(*a, **k):
+        raise RuntimeError("metrics bug")
+
+    monkeypatch.setattr(srv._metrics, "observe", boom)
+    assert call(srv, *bad, expect=400) == got_bad
+    assert call(srv, *missing, expect=404) == got_missing
+    assert call(srv, "GET", "/collections/merr", expect=200) == {
+        "name": "merr", "dimensions": 2, "count": 0}
+
+
 def test_micro_batch_serving_front(srv):
     """VERDICT r10 ask #4: the micro-batch dispatcher mounts behind
     the single-search route — N concurrent HTTP clients batch through

@@ -653,32 +653,6 @@ def test_error_rate_alert_label_sets_match():
     assert "needle_index_health" not in rules  # never-emitted series
 
 
-def test_profiler_counts_joins_once(spark):
-    from needle_spark.plans.profiler import analyze_plan
-
-    a = spark.range(100).withColumnRenamed("id", "k")
-    b = spark.range(100).withColumnRenamed("id", "k")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        hints = analyze_plan(a.join(b, "k"))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                       str(10 * 1024 * 1024))
-    smj = [h for h in hints if "SortMergeJoin" in h.message]
-    assert smj and smj[0].message.startswith("1 SortMergeJoin")
-
-
-def test_profiler_detects_wide_scans(spark, tmp_path, sf_dir):
-    from needle_spark.plans.profiler import analyze_plan
-
-    wide = spark.range(5).selectExpr(
-        *[f"id AS c{i}" for i in range(30)])
-    path = str(tmp_path / "wide.parquet")
-    wide.write.parquet(path)
-    hints = analyze_plan(spark.read.parquet(path))
-    assert any(h.category == "pruning" for h in hints)
-
-
 def test_dashboard_error_rate_survives_flush(spark, tmp_path):
     from needle_spark.plans.analytics_dashboard import AnalyticsDashboard
 

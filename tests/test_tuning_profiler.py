@@ -1,6 +1,6 @@
-"""Auto-tuning, data profiling, what-if previews, compression advisor,
-and the query profiler / plan-hint analyzer (reference: src/tuning.rs,
-src/indexing/compression_advisor.rs, src/observe/profiler.rs)."""
+"""Auto-tuning, data profiling, what-if previews and the compression
+advisor (reference: src/tuning.rs,
+src/indexing/compression_advisor.rs)."""
 
 import math
 
@@ -8,7 +8,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from needle_spark.plans.profiler import QueryProfiler, analyze_plan
 from needle_spark.plans.tuning import (
     DataProfile,
     TuningConstraints,
@@ -219,61 +218,6 @@ def test_advise_compression_measures_and_recommends(spark, embeddings):
     assert "sq8" in s and "target recall" in s
     proj = report.project_memory_savings(1_000_000)
     assert any(p["saved_bytes"] > 0 for p in proj)
-
-
-# ===================================================================
-# plan hints + profiler
-# ===================================================================
-
-def test_analyze_plan_flags_smj_and_python(spark, embeddings):
-    a = embeddings.select(F.col("vec_id").alias("id"), "label")
-    b = embeddings.select(F.col("vec_id").alias("id"), "embedding")
-    smj = a.join(b.hint("merge"), "id")
-    cats = {h.category: h for h in analyze_plan(smj)}
-    assert "join" in cats and "SortMergeJoin" in cats["join"].message
-
-    from pyspark.sql.functions import udf
-    slow = embeddings.withColumn("x", udf(lambda v: len(v))("embedding"))
-    hints = analyze_plan(slow)
-    assert any(h.severity == "critical" and h.category == "python"
-               for h in hints)
-
-    clean = embeddings.filter(F.col("label") == 1).select("vec_id")
-    clean_hints = analyze_plan(clean)
-    assert not any(h.severity == "critical" for h in clean_hints)
-
-
-def test_analyze_plan_flags_cartesian(spark):
-    a = spark.range(10)
-    b = spark.range(10).withColumnRenamed("id", "id2")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        hints = analyze_plan(a.crossJoin(b))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert any(h.severity == "critical" and h.category == "join"
-               for h in hints)
-
-
-def test_query_profiler_end_to_end(spark, embeddings):
-    prof = QueryProfiler(max_profiles=2)
-    p = prof.profile(
-        embeddings.groupBy("label").count(), query_id="agg1",
-        query_desc="label histogram")
-    assert p.result_count > 0
-    assert p.total_time_us > 0
-    assert p.stages and sum(s.num_tasks for s in p.stages) > 0
-    assert "Execution Plan" in p.explain()
-    assert "Detailed Metrics" in p.explain_analyze()
-    assert p.metrics["wall_ms"] > 0
-
-    # bounded history
-    prof.profile(embeddings.limit(1), query_id="q2")
-    prof.profile(embeddings.limit(2), query_id="q3")
-    assert len(prof.history) == 2
-    assert prof.slowest(1)[0].total_time_us >= prof.history[-1].total_time_us \
-        or len(prof.slowest(1)) == 1
 
 
 # ===================================================================
