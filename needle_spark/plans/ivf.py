@@ -241,6 +241,88 @@ def _pq_encode(res, books):
     return codes, dec.reshape(n, dim)
 
 
+def _assign_cells(V, C32, csq, normalize: bool):
+    """The cell assignment every encode path runs (the `_encode` Arrow
+    kernel, `_encode_np` and the sq8_cell range fit), in float32, so a
+    row near a cell boundary lands in the same cell at fit and at
+    encode time.  V: raw float32 rows.  Returns (V in scoring space —
+    l2-normalized for cosine —, squared norms of the input, int32
+    cell ids)."""
+    nsq = (V * V).sum(axis=1)
+    if normalize:
+        norms = np.sqrt(nsq)
+        V = V / np.where(norms == 0.0, 1.0, norms)[:, None]
+        nsq = np.ones_like(nsq)
+    d = ((V * V).sum(axis=1, keepdims=True)
+         - 2.0 * (V @ C32.T) + csq[None, :])
+    return V, nsq, d.argmin(axis=1).astype(np.int32)
+
+
+def _cell_ranges(V, C32, csq, normalize: bool):
+    """Per-cell member count and per-dimension min/max of the float32
+    residuals `_encode` quantizes, over the raw float32 rows V: the
+    sq8_cell range fit.  Returns (count (nlist,), lo (nlist, d),
+    hi (nlist, d)); an empty cell has lo = +inf and hi = -inf, so
+    partial results merge with np.minimum / np.maximum."""
+    V, _, assign = _assign_cells(V, C32, csq, normalize)
+    res = V - C32[assign]
+    nlist, d = C32.shape
+    cnt = np.bincount(assign, minlength=nlist)
+    lo = np.full((nlist, d), np.inf, dtype=np.float32)
+    hi = np.full((nlist, d), -np.inf, dtype=np.float32)
+    cells = np.flatnonzero(cnt)
+    if cells.size:
+        res = res[np.argsort(assign, kind="stable")]
+        starts = np.concatenate(([0], np.cumsum(cnt[cells])[:-1]))
+        lo[cells] = np.minimum.reduceat(res, starts, axis=0)
+        hi[cells] = np.maximum.reduceat(res, starts, axis=0)
+    return cnt, lo, hi
+
+
+def _cell_ranges_spark(docs: DataFrame, vector_col: str, C32, normalize: bool):
+    """`_cell_ranges` over every row of `docs`: one map-only job whose
+    partitions each return one (cell, n, lo, hi) row per cell they hold,
+    merged on the driver (partitions x nlist rows at most)."""
+    import pyarrow as pa
+
+    csq = (C32 * C32).sum(axis=1)
+    nlist, d = C32.shape
+
+    def kernel(batches) -> Iterator:
+        cnt = np.zeros(nlist, dtype=np.int64)
+        lo = np.full((nlist, d), np.inf, dtype=np.float32)
+        hi = np.full((nlist, d), -np.inf, dtype=np.float32)
+        for batch in batches:
+            V = vector_matrix(batch.column(0), np.float32, vector_col)
+            if V.size == 0:
+                continue
+            c, l, h = _cell_ranges(V, C32, csq, normalize)
+            cnt += c
+            np.minimum(lo, l, out=lo)
+            np.maximum(hi, h, out=hi)
+        cells = np.flatnonzero(cnt)
+        if cells.size:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(cells, type=pa.int32()),
+                 pa.array(cnt[cells], type=pa.int64()),
+                 pa.array([r.tobytes() for r in lo[cells]], type=pa.binary()),
+                 pa.array([r.tobytes() for r in hi[cells]], type=pa.binary())],
+                names=["cell", "n", "lo", "hi"])
+
+    part = docs.select(vector_col).mapInArrow(
+        kernel, "cell int, n long, lo binary, hi binary").toArrow()
+    cnt = np.zeros(nlist, dtype=np.int64)
+    lo = np.full((nlist, d), np.inf, dtype=np.float32)
+    hi = np.full((nlist, d), -np.inf, dtype=np.float32)
+    cells = part.column("cell").to_numpy()
+    np.add.at(cnt, cells, part.column("n").to_numpy())
+    for col, out, op in (("lo", lo, np.minimum), ("hi", hi, np.maximum)):
+        rows = _bytes_matrix_from_arrow(part.column(col).combine_chunks(),
+                                        4 * d).view(np.float32)
+        op.at(out, cells, rows)
+    return cnt, lo, hi
+
+
 def _sq_for_cell(SQ, step2, QT, cell):
     """Per-cell step-scaled query block: the global (dim, nq) SQ when
     the quantizer is global (sq8/float32) — or the ('pq', LUT) marker,
@@ -403,7 +485,9 @@ class IvfBatchKnnIndex:
     (see `to_partitioned_parquet`), so low-fanout query sets prune the
     scan to nprobe/nlist of the files — proven by plan test
     (tests/test_ivf_batch.py).  Build (KMeans fit + encode) is one
-    sample collect plus one map-only pass.
+    sample collect plus one map-only pass; `sq8_cell` codes over a
+    table larger than the sample add one map-only per-cell min/max
+    pass.
     """
 
     CODE_COL = "__sq8"
@@ -494,6 +578,7 @@ class IvfBatchKnnIndex:
             vector_col)
         if sample.size == 0:
             raise ValueError("cannot build an IVF index over an empty table")
+        raw = sample
         if m == "cosine":
             sample = _l2_normalize(sample)
         self.dim = sample.shape[1]
@@ -578,26 +663,35 @@ class IvfBatchKnnIndex:
         elif code_dtype == "sq8_cell":
             # per-CELL quantizer ranges (mn/step shaped (nlist, dim)):
             # residual spread WITHIN a cell is much tighter than the
-            # global residual envelope, so the same 8 bits buy ~3x less
-            # reconstruction error (measured: mean |err| 0.43 -> 0.14,
-            # full-scan recall@10 0.94 -> 0.98 on the SIFT-like corpus)
-            # at identical code bytes.  Wider pad than the global fit:
-            # per-cell sample counts are ~sample_rows/nlist, so tails
-            # are under-observed and clipping is the failure mode.
-            assign_s = d2.argmin(axis=1)
-            res_s = sample - C[assign_s]
+            # global residual envelope, so the same 8 bits buy a finer
+            # step at identical code bytes (tests/test_ivf_batch.py's
+            # clustered corpus, seed 3: mean step 0.0026 against 0.0037;
+            # full-probe hits 198-200 of 200 against 196-198 for global
+            # SQ8 over seeds 1-5).  Each cell's range is fit from the
+            # cell's FULL membership, with the float32 assignment
+            # `_encode` runs, so no build row clips: from the sample
+            # when the sample is the whole table (no Spark job), else
+            # from one map-only min/max pass.  The pad is the global
+            # fit's 10%: it is left only for rows add() encodes later
+            # with the frozen quantizer.  Cells under 8 members keep the
+            # global row — their range says little of later adds.
+            C32 = np.ascontiguousarray(C, dtype=np.float32)
+            if len(sample) < sample_rows:
+                cnt, lo_c, hi_c = _cell_ranges(
+                    raw.astype(np.float32), C32, (C32 * C32).sum(axis=1),
+                    m == "cosine")
+            else:
+                cnt, lo_c, hi_c = _cell_ranges_spark(
+                    docs, vector_col, C32, m == "cosine")
+            fit = cnt >= 8
+            lo_c = lo_c[fit].astype(np.float64)
+            hi_c = hi_c[fit].astype(np.float64)
+            pad_c = 0.10 * (hi_c - lo_c) + 1e-9
             mn_c = np.tile(self.mn, (self.nlist, 1))
             step_c = np.tile(self.step, (self.nlist, 1))
-            for cell in range(self.nlist):
-                m = assign_s == cell
-                if int(m.sum()) < 8:
-                    continue  # keep the global fallback row
-                lo_c, hi_c = res_s[m].min(axis=0), res_s[m].max(axis=0)
-                pad_c = 0.25 * (hi_c - lo_c) + 1e-9
-                mn_c[cell] = lo_c - pad_c
-                step_c[cell] = (hi_c + pad_c - mn_c[cell]) / 255.0
-            self.mn = mn_c.astype(np.float64)
-            self.step = step_c.astype(np.float64)
+            mn_c[fit] = lo_c - pad_c
+            step_c[fit] = (hi_c + pad_c - mn_c[fit]) / 255.0
+            self.mn, self.step = mn_c, step_c
 
         # cluster the codes by cell: each cell lands whole in one
         # partition, contiguous after the sort — the serving kernel
@@ -714,14 +808,7 @@ class IvfBatchKnnIndex:
                                   np.float32, vector_col)
                 if V.size == 0:
                     continue
-                nsq = (V * V).sum(axis=1)
-                if normalize:
-                    norms = np.sqrt(nsq)
-                    V = V / np.where(norms == 0.0, 1.0, norms)[:, None]
-                    nsq = np.ones_like(nsq)
-                d = ((V * V).sum(axis=1, keepdims=True)
-                     - 2.0 * (V @ C32.T) + csq[None, :])
-                assign = d.argmin(axis=1).astype(np.int32)
+                V, nsq, assign = _assign_cells(V, C32, csq, normalize)
                 res = V - C32[assign]
                 if flat_codes:
                     codes = res.astype(np.float32)
@@ -1951,14 +2038,8 @@ class IvfBatchKnnIndex:
         rows the refine sidecar stores."""
         C32 = np.ascontiguousarray(self.centroids, dtype=np.float32)
         V = np.ascontiguousarray(np.atleast_2d(V), dtype=np.float32)
-        nsq = (V * V).sum(axis=1)
-        if self.metric == "cosine":
-            norms = np.sqrt(nsq)
-            V = V / np.where(norms == 0.0, 1.0, norms)[:, None]
-            nsq = np.ones_like(nsq)
-        d = ((V * V).sum(axis=1, keepdims=True)
-             - 2.0 * (V @ C32.T) + (C32 * C32).sum(axis=1)[None, :])
-        assign = d.argmin(axis=1).astype(np.int32)
+        V, nsq, assign = _assign_cells(V, C32, (C32 * C32).sum(axis=1),
+                                       self.metric == "cosine")
         res = V - C32[assign]
         if self.code_dtype == "float32":
             return assign, nsq.astype(np.float32), res.astype(np.float32), V

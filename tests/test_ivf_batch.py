@@ -12,6 +12,8 @@ src/recall_benchmark.rs).  Here the contract under test is:
   partition pruning (the 100 TB claim).
 """
 
+from fractions import Fraction
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -43,12 +45,14 @@ def clustered(spark):
 
 
 def _recall(exact_pdf, approx_pdf, q_ids, k=10):
-    total = 0.0
+    """Recall@k as an exact rational: hits are counted as integers, so
+    196 of 200 compares >= 0.98 without float summation error."""
+    hits = 0
     for qid in q_ids:
         e = set(exact_pdf[exact_pdf.query_id == qid].id)
         a = set(approx_pdf[approx_pdf.query_id == qid].id)
-        total += len(e & a) / k
-    return total / len(q_ids)
+        hits += len(e & a)
+    return Fraction(hits, k * len(q_ids))
 
 
 @pytest.fixture(scope="module")
@@ -89,7 +93,7 @@ def test_metrics_against_numpy(spark, clustered, metric):
                            id_col="id", metric=metric, seed=3)
     approx = idx.search_local((q_ids, queries), k=10, nprobe=idx.nlist)
     P = pts.astype(np.float32).astype(np.float64)
-    hits = 0.0
+    hits = 0
     for qi in q_ids:
         q = queries[qi]
         if metric == "euclidean":
@@ -98,8 +102,8 @@ def test_metrics_against_numpy(spark, clustered, metric):
             d = -(P @ q)
         true10 = set(np.argsort(d, kind="stable")[:10].tolist())
         got = set(approx[approx.query_id == qi].id)
-        hits += len(true10 & got) / 10
-    assert hits / len(q_ids) >= 0.95
+        hits += len(true10 & got)
+    assert Fraction(hits, 10 * len(q_ids)) >= 0.95
     idx.unpersist()
 
 
@@ -925,6 +929,50 @@ def test_sq8_cell_codes_tighter_than_global(spark, clustered, exact_top10):
                           suffixes=("_q", "_e"))
     assert (merged["distance_q"] - merged["distance_e"]).abs().max() < 5e-3
     cell.unpersist()
+
+
+def test_sq8_cell_ranges_cover_every_build_row(spark, clustered):
+    """A table larger than the fit sample (2,000 rows, sample_rows=500):
+    the per-cell ranges still come from each cell's full membership, so
+    no build row's code clips to 0 or 255 and every decoded residual is
+    within step/2 of the true residual."""
+    df, _, _ = clustered
+    idx = IvfBatchKnnIndex(df, nlist=N_CLUSTERS, vector_col="vector",
+                           id_col="id", metric="cosine", seed=3,
+                           code_dtype="sq8_cell", sample_rows=500)
+    try:
+        got = idx.codes.select("id", "centroid_id", idx.CODE_COL).toPandas()
+        vecs = df.toPandas().set_index("id").loc[got["id"], "vector"]
+        V = np.stack(vecs.to_numpy()).astype(np.float32)
+        V = V / np.sqrt((V * V).sum(axis=1))[:, None]
+        cell = got["centroid_id"].to_numpy()
+        res = V - idx.centroids.astype(np.float32)[cell]
+        codes = np.frombuffer(b"".join(got[idx.CODE_COL]),
+                              dtype=np.uint8).reshape(len(got), DIM)
+        mn = idx.mn.astype(np.float32)[cell]
+        step = idx.step.astype(np.float32)[cell]
+        assert codes.min() > 0 and codes.max() < 255
+        err = np.abs(codes.astype(np.float32) * step + mn - res)
+        assert (err <= 0.5 * step * (1 + 1e-3) + 1e-7).all()
+    finally:
+        idx.unpersist()
+
+
+def test_sq8_cell_fit_from_whole_table_sample_starts_no_job(
+        spark, clustered, spark_jobs):
+    """When the fit sample is the whole table the per-cell ranges come
+    from it: an sq8_cell build runs the same Spark jobs as a global sq8
+    build."""
+    df, _, _ = clustered
+    counts = {}
+    for cd in ("sq8", "sq8_cell"):
+        with spark_jobs() as jobs:
+            idx = IvfBatchKnnIndex(df, nlist=N_CLUSTERS, vector_col="vector",
+                                   id_col="id", metric="cosine", seed=3,
+                                   code_dtype=cd)
+        idx.unpersist()
+        counts[cd] = jobs.n
+    assert counts["sq8_cell"] == counts["sq8"]
 
 
 def test_sq8_cell_full_serving_stack(spark, clustered, tmp_path):
