@@ -10,7 +10,8 @@ snapshots.rs) onto a log-structured directory-of-Parquet layout:
         manifest.json        {version, cdc_seq, versions: {...}, ...}
         seg-<k>/part-*.parquet   immutable data segments
         del-<k>/part-*.parquet   tombstone id sets
-        _cdc/seq=<S>/            append-only change events
+        _cdc/part-*.parquet      append-only change events (one flat
+                                 directory, one or more files per commit)
 
 A version is a MANIFEST ENTRY — an ordered list of segments plus
 tombstones, each tombstone tagged with the segment count at creation so
@@ -26,7 +27,8 @@ delete vectors).  Mutations are therefore INCREMENTAL:
 
 Deleting 10 rows from a 100 TB collection writes a 10-row tombstone
 file, not a 100 TB rewrite, and nothing row-shaped ever lands on the
-driver: CDC payload events are written as a DataFrame (mutations.rs:
+driver: a DataFrame mutation's CDC payload events are written as a
+DataFrame (mutations.rs:
 27-115 incremental semantics; VERDICT r1 'What's wrong #2').
 
 Immutable segments give MVCC for free: `AS OF` a version replays an
@@ -42,12 +44,16 @@ Write batches come in two forms.  A pyarrow.Table (every REST write)
 is checked in-process with pyarrow.compute (dimension, NaN/Inf,
 duplicate-in-batch, metadata schema, row count); its existing-id check
 runs under the commit lock against the id columns of the segments
-(_live_ids, no Spark job), and it reaches Spark once, as a JVM
-LocalRelation feeding the segment and CDC writes.  A DataFrame batch is
-checked and counted in ONE Spark action under the commit lock, its
-existing-id check an inner join against the whole live view.  df()
-starts no job either way (each object's schema comes from its Parquet
-footer).
+(_live_ids), and its segment, tombstone and CDC objects are written
+in-process with pyarrow.parquet (_write_parquet), so a Table commit
+starts no Spark job.  Its CDC metadata JSON is rendered exactly as
+Spark's to_json renders it, which holds for string and integer payload
+columns; a Table with any other id or payload type is committed as a
+DataFrame.  A DataFrame batch is checked and counted in ONE Spark
+action under the commit lock, its existing-id check an inner join
+against the whole live view, and its objects are written by Spark.
+Either way each part file's footer carries Spark's schema, so df()
+starts no job.
 """
 
 from __future__ import annotations
@@ -63,11 +69,14 @@ import uuid
 from functools import reduce
 from typing import Any
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import ArrayType, StructField, StructType
 
 from needle_spark.filters import compile_filter
 from needle_spark.functions.sequence import (
@@ -90,11 +99,10 @@ _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 def _footer_schema(path: str) -> StructType | None:
     """Spark's schema of a Parquet directory, read on the driver from
-    one part file's footer (Spark writes it there, already nullable,
-    which is what inference returns).  None when there is no part file
-    or the footer has no Spark schema (e.g. written by pyarrow)."""
-    import pyarrow.parquet as pq
-
+    one part file's footer (Spark and _write_parquet write it there; a
+    read with it makes every field nullable, which is what inference
+    returns).  None when there is no part file or the footer has no
+    Spark schema (e.g. written by plain pyarrow)."""
     parts = sorted(glob.glob(os.path.join(path, "part-*.parquet")))
     if not parts:
         return None
@@ -102,6 +110,71 @@ def _footer_schema(path: str) -> StructType | None:
     if raw is None:
         return None
     return StructType.fromJson(json.loads(raw))
+
+
+def _write_parquet(table: pa.Table, path: str, append: bool = False) -> None:
+    """Write `table` as one Parquet part file of the directory `path`,
+    in-process: the pyarrow twin of DataFrameWriter.parquet for the
+    catalog's objects.  Without `append` the directory is cleared first
+    (mode("overwrite"): a stale object left by a crashed commit is
+    replaced, not merged).  The file is written under a hidden name,
+    which Spark, pyarrow.dataset and _footer_schema all skip, and
+    renamed to part-<uuid>.snappy.parquet once complete.  Its footer
+    carries the table's Spark schema, every field nullable (as every
+    read returns it), so reads start no inference job."""
+    fields = []
+    for f in table.schema:
+        t = from_arrow_type(f.type)
+        if isinstance(t, ArrayType):
+            t = ArrayType(t.elementType, True)
+        fields.append(StructField(f.name, t, True))
+    meta = {_SPARK_ROW_METADATA: StructType(fields).json().encode()}
+    if not append:
+        shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4()}.snappy.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    try:
+        pq.write_table(table.replace_schema_metadata(meta), tmp,
+                       compression="snappy")
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+    os.replace(tmp, os.path.join(path, name))
+
+
+# Spark's to_json string escapes (Jackson's defaults): two-character
+# forms for " \ \b \t \n \f \r, every other control character as
+# \u00XX in uppercase hex, and nothing else (non-ASCII stays as is)
+_JSON_ESCAPES = {i: f"\\u{i:04X}" for i in range(0x20)}
+_JSON_ESCAPES.update({ord('"'): '\\"', ord("\\"): "\\\\", 0x08: "\\b",
+                      0x09: "\\t", 0x0A: "\\n", 0x0C: "\\f", 0x0D: "\\r"})
+
+
+def _json_text(value: str | int | None) -> str:
+    """One string, integer or null as Spark's to_json writes it."""
+    if value is None:
+        return "null"
+    if isinstance(value, str):
+        return '"' + value.translate(_JSON_ESCAPES) + '"'
+    return str(value)
+
+
+def _sequence_table(ev: pa.Table, base: int, ts: int) -> pa.Table:
+    """Arrow twin of Collection._sequence_events: one op's events
+    ordered by vector_id (bytewise, like Spark's string order) and
+    numbered base, base+1, ... in the CDC column order."""
+    ev = ev.take(pc.sort_indices(ev, [("vector_id", "ascending")],
+                                 null_placement="at_start"))
+    n = ev.num_rows
+    return pa.table({
+        "sequence": np.arange(base, base + n, dtype=np.int64),
+        "timestamp_ms": np.full(n, ts, dtype=np.int64),
+        "event_type": ev.column("event_type"),
+        "vector_id": ev.column("vector_id"),
+        "metadata": ev.column("metadata"),
+    })
 
 
 def _utcnow_ms() -> int:
@@ -189,6 +262,46 @@ class Collection:
         self._manifest["obj_seq"] = k + 1
         return f"{prefix}-{k}"
 
+    def _arrow_batch(self, rows: pa.Table) -> DataFrame | pa.Table:
+        """A Table batch whose objects and CDC events the pyarrow writer
+        reproduces exactly (id and payload columns strings or signed
+        integers, vectors a list of floats) stays a Table; any other
+        Table becomes a DataFrame and takes the Spark writers."""
+        def plain(t):
+            return pa.types.is_string(t) or pa.types.is_signed_integer(t)
+
+        vc = self.vector_col
+        ok = all(
+            (pa.types.is_list(f.type)
+             and pa.types.is_floating(f.type.value_type)
+             and not pa.types.is_float16(f.type.value_type))
+            if f.name == vc else plain(f.type)
+            for f in rows.schema)
+        return rows if ok else self.spark.createDataFrame(rows)
+
+    def _event_table(self, rows: pa.Table, event_type: str) -> pa.Table:
+        """Arrow twin of _event_df for a batch _arrow_batch kept as a
+        Table: the same vector_id (the id cast to string) and metadata
+        JSON byte-identical to Spark's to_json(..., ignoreNullFields=
+        false) of the payload columns, built in-process."""
+        ic, vc = self.id_col, self.vector_col
+        meta_cols = [c for c in rows.column_names if c not in (vc, ic)]
+        n = rows.num_rows
+        if meta_cols:
+            keys = [_json_text(c) + ":" for c in meta_cols]
+            meta = [
+                "{" + ",".join(k + _json_text(v) for k, v in zip(keys, row))
+                + "}"
+                for row in zip(*(rows.column(c).to_pylist()
+                                 for c in meta_cols))]
+        else:
+            meta = [None] * n
+        return pa.table({
+            "vector_id": rows.column(ic).cast(pa.string()),
+            "metadata": pa.array(meta, pa.string()),
+            "event_type": pa.array([event_type] * n, pa.string()),
+        })
+
     def _event_df(self, rows: DataFrame, event_type: str) -> DataFrame:
         """CDC events carrying the non-vector row payload as JSON (the
         reference's ChangeEvent metadata snapshot, streaming/core.rs:
@@ -233,11 +346,15 @@ class Collection:
         seq = (F.lit(base) - 1 + F.col("__rn")).cast("long")
         return numbered.select(seq.alias("sequence"), *stamp), cached
 
-    def _literal_event(self, event_type: str, vector_id: str) -> DataFrame:
-        return self.spark.createDataFrame(
-            [(vector_id, None, event_type)],
-            "vector_id string, metadata string, event_type string",
-        )
+    @staticmethod
+    def _literal_event(event_type: str, vector_id: str) -> pa.Table:
+        """One event with no payload (clear, restore, import), appended
+        in-process like every Table batch's events."""
+        return pa.table({
+            "vector_id": pa.array([vector_id], pa.string()),
+            "metadata": pa.nulls(1, pa.string()),
+            "event_type": pa.array([event_type], pa.string()),
+        })
 
     def _commit(
         self,
@@ -251,10 +368,13 @@ class Collection:
     ) -> int:
         """Apply staged ops as one new version; returns n_events.
 
-        ops: ordered ("add", rows) / ("del", id_df) — adds become
+        ops: ordered ("add", rows) / ("del", ids) — adds become
         segments, dels become tombstones masking every EARLIER segment.
-        events: per-op CDC event DataFrames, sequenced in op order.
-        event_counts: per-event-DF row counts (defaults to [n_events]
+        Each is a DataFrame (written by Spark) or a pyarrow.Table
+        (written in-process by _write_parquet).
+        events: per-op CDC events (_event_df DataFrames or _event_table
+        / _literal_event Tables), sequenced in op order.
+        event_counts: per-event row counts (defaults to [n_events]
         for the single-event common case).
         precommit: optional check run under the lock against the
         refreshed manifest; when n_events is None its return value is
@@ -272,7 +392,8 @@ class Collection:
         sort exists anywhere in the event path — a 1-billion-row bulk
         insert sequences its events at full parallelism.  Batches under
         _SEQ_PARALLEL_THRESHOLD keep the one-window plan (fewer jobs
-        beats parallelism at that size).
+        beats parallelism at that size).  Table events are numbered
+        in-process in vector_id order (_sequence_table), with no job.
         """
         with self._commit_lock():
             # adopt the latest on-disk manifest: another instance may
@@ -347,17 +468,23 @@ class Collection:
         cur = dict(m["versions"][str(m["version"])])
         segments = list(cur["segments"])
         tombstones = [list(t) for t in cur["tombstones"]]
+
+        def write(data, name: str) -> None:
+            path = os.path.join(self.path, name)
+            if isinstance(data, pa.Table):
+                _write_parquet(data, path)
+            else:
+                data.write.mode("overwrite").parquet(path)
+
         if new_entry is None:
             for kind, data in ops:
                 if kind == "add":
                     name = self._new_obj("seg")
-                    data.write.mode("overwrite").parquet(os.path.join(self.path, name))
+                    write(data, name)
                     segments.append(name)
                 elif kind == "del":
                     name = self._new_obj("del")
-                    data.select(F.col(self.id_col)).write.mode("overwrite").parquet(
-                        os.path.join(self.path, name)
-                    )
+                    write(data.select([self.id_col]), name)
                     tombstones.append([name, len(segments)])
                 else:
                     raise CollectionError(f"unknown commit op {kind!r}")
@@ -365,26 +492,27 @@ class Collection:
         else:
             entry = new_entry
 
+        arrow_out, spark_out, pinned = [], [], []
         if events and n_events:
             seq0 = m["cdc_seq"]
             ts = now_ms if now_ms is not None else _utcnow_ms()
             counts = event_counts
             if counts is None:
                 counts = [n_events] if len(events) == 1 else [
-                    ev.count() for ev in events
+                    ev.num_rows if isinstance(ev, pa.Table) else ev.count()
+                    for ev in events
                 ]
             base = seq0
-            outs, pinned = [], []
             for ev, cnt in zip(events, counts):
-                seq_df, cached = self._sequence_events(ev, cnt, base, ts)
-                outs.append(seq_df)
-                if cached is not None:
-                    pinned.append(cached)
+                if isinstance(ev, pa.Table):
+                    arrow_out.append(_sequence_table(ev, base, ts))
+                else:
+                    seq_df, cached = self._sequence_events(ev, cnt, base, ts)
+                    spark_out.append(seq_df)
+                    if cached is not None:
+                        pinned.append(cached)
                 base += cnt
-            ev_out = reduce(lambda a, b: a.unionByName(b), outs)
             m["cdc_seq"] = seq0 + n_events
-        else:
-            ev_out, pinned = None, []
 
         new_v = m["version"] + 1
         entry["committed_ms"] = now_ms if now_ms is not None else _utcnow_ms()
@@ -396,8 +524,12 @@ class Collection:
         # one commit's events) instead of phantom events whose sequence
         # range the next commit would re-allocate to DIFFERENT
         # mutations — duplicated sequences corrupt every replay
-        if ev_out is not None:
-            ev_out.write.mode("append").parquet(os.path.join(self.path, "_cdc"))
+        cdc = os.path.join(self.path, "_cdc")
+        if arrow_out:
+            _write_parquet(pa.concat_tables(arrow_out), cdc, append=True)
+        if spark_out:
+            reduce(lambda a, b: a.unionByName(b), spark_out) \
+                .write.mode("append").parquet(cdc)
         for c in pinned:
             c.unpersist()
         return entry
@@ -830,12 +962,14 @@ class Collection:
         enabled (set_semantic_dedup), routes through the policy gate
         (insert.rs:147) and returns the number of rows actually
         appended.  A pyarrow.Table batch is checked in-process (see
-        _validate_new) and its existing ids are looked up under the
-        commit lock in the segments' id columns (_live_ids): no Spark
-        job runs before the segment write."""
-        if self._manifest.get("semantic_dedup", {}).get("enabled"):
-            if isinstance(rows, pa.Table):
-                rows = self.spark.createDataFrame(rows)
+        _validate_new), its existing ids are looked up under the commit
+        lock in the segments' id columns (_live_ids), and its segment
+        and CDC events are written in-process: no Spark job runs."""
+        dedup = self._manifest.get("semantic_dedup", {}).get("enabled")
+        if isinstance(rows, pa.Table):
+            rows = (self.spark.createDataFrame(rows) if dedup
+                    else self._arrow_batch(rows))
+        if dedup:
             out = self.insert_dedup(rows, now_ms=now_ms)
             return out["inserted"] + out["versioned"]
         if isinstance(rows, pa.Table):
@@ -850,9 +984,8 @@ class Collection:
                 if existing:
                     raise CollectionError(f"{existing} ids already exist")
 
-            batch = self.spark.createDataFrame(rows)
             return self._commit(
-                [("add", batch)], [self._event_df(batch, "insert")], n,
+                [("add", rows)], [self._event_table(rows, "insert")], n,
                 now_ms, precommit=no_existing_ids)
         rows = self._stamp_ttl(rows, now_ms).persist()
         try:
@@ -876,20 +1009,23 @@ class Collection:
         """MERGE semantics (mutations.rs upsert): tombstone matching ids
         in earlier segments, append the batch as a new segment — no
         rewrite of existing data.  A pyarrow.Table batch is checked
-        in-process and written from one LocalRelation."""
-        def commit(batch: DataFrame, n: int) -> int:
+        and written in-process, with no Spark job."""
+        def commit(batch: DataFrame | pa.Table, n: int) -> int:
+            events = (self._event_table if isinstance(batch, pa.Table)
+                      else self._event_df)(batch, "upsert")
             self._commit(
-                [("del", batch.select(self.id_col)), ("add", batch)],
-                [self._event_df(batch, "upsert")],
+                [("del", batch.select([self.id_col])), ("add", batch)],
+                [events],
                 n,
                 now_ms,
             )
             return n
 
+        if isinstance(rows, pa.Table):
+            rows = self._arrow_batch(rows)
         rows = self._stamp_ttl(rows, now_ms)
         if isinstance(rows, pa.Table):
-            return commit(self.spark.createDataFrame(rows),
-                          self._validate_new(rows))
+            return commit(rows, self._validate_new(rows))
         rows = rows.persist()
         try:
             return commit(rows, self._validate_new(rows))
@@ -902,18 +1038,19 @@ class Collection:
         (mutations.rs:27-115); returns the number of deleted rows.
         Writes only a tombstone of the victim ids — victims never land
         on the driver, except for an id list: its victims are the
-        listed ids live now, looked up in-process (_live_ids) with no
-        Spark job before the tombstone write."""
+        listed ids live now, looked up in-process (_live_ids), and its
+        tombstone and CDC events are written in-process, with no Spark
+        job."""
         if pred is None and ids is not None \
                 and not isinstance(ids, DataFrame):
             live = sorted(self._live_ids(ids))
             if not live:
                 return 0
-            victims = self.spark.createDataFrame(
+            victims = self._arrow_batch(
                 pa.table({self.id_col: pa.array(live)}))
-            self._commit([("del", victims)],
-                         [self._event_df(victims, "delete")], len(live),
-                         now_ms)
+            events = (self._event_table if isinstance(victims, pa.Table)
+                      else self._event_df)(victims, "delete")
+            self._commit([("del", victims)], [events], len(live), now_ms)
             return len(live)
         cur = self.df()
         if pred is not None:

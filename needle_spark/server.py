@@ -59,8 +59,7 @@ def _rows_table(vectors: list[dict]) -> pa.Table:
     """A REST write batch as one pyarrow.Table with META_SCHEMA's Arrow
     schema: float32 vectors (1e39 overflows to Inf, which the insert
     check rejects) and the metadata as sorted-key JSON text.  The
-    catalog checks it in-process; spark.createDataFrame(table) makes it
-    a JVM LocalRelation."""
+    catalog checks and commits it in-process, with no Spark job."""
     ids, vecs, metas = [], [], []
     for v in vectors:
         if "id" not in v or "vector" not in v:
@@ -957,9 +956,13 @@ class RestServer:
         if tier == "auto" or codes == "auto":
             import numpy as np
 
-            samp = [list(r[c.vector_col]) for r in c.df().limit(
-                self.TIER_SAMPLE_ROWS + self.TIER_SAMPLE_QUERIES)
-                .collect()]
+            # the sample is the lowest ids, not the first rows read:
+            # read order follows the objects' file layout and the
+            # session's parallelism, and the decision must not
+            samp = [list(r[c.vector_col]) for r in c.df()
+                    .orderBy(c.id_col).limit(
+                        self.TIER_SAMPLE_ROWS + self.TIER_SAMPLE_QUERIES)
+                    .collect()]
             nq = min(self.TIER_SAMPLE_QUERIES, max(1, len(samp) // 4))
             samp = (np.asarray(samp[nq:], dtype=np.float64),
                     np.asarray(samp[:nq], dtype=np.float64))

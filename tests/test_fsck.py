@@ -175,3 +175,32 @@ def test_empty_cdc_log_with_claimed_events(spark, coll):
     rep = validate_collection(spark, coll.path, check_data=False)
     assert rep.valid
     assert any("empty" in w for w in rep.warnings)
+
+
+def test_table_commit_crash_before_cdc_leaves_tail_gap(spark, coll,
+                                                       monkeypatch):
+    """A pyarrow.Table commit keeps the manifest-before-CDC order: a
+    crash in its CDC append leaves the committed version and a short
+    CDC tail (a warning), never events for an uncommitted version."""
+    import pyarrow as pa
+
+    import needle_spark.catalog as catalog
+
+    orig = catalog._write_parquet
+
+    def crash_on_cdc(table, path, append=False):
+        if os.path.basename(path) == "_cdc":
+            raise OSError("crash before the CDC append")
+        orig(table, path, append)
+
+    monkeypatch.setattr(catalog, "_write_parquet", crash_on_cdc)
+    version = coll.version
+    batch = pa.table({"id": ["z"],
+                      "vector": pa.array([[0.5, 0.5]], pa.list_(pa.float32()))})
+    with pytest.raises(OSError, match="crash before the CDC append"):
+        coll.insert(batch)
+    assert Collection(spark, coll.path).version == version + 1
+    rep = validate_collection(spark, coll.path)
+    assert rep.valid, rep.errors
+    assert any("tail gap" in w for w in rep.warnings)
+    assert rep.stats["cdc_events"] == 3

@@ -250,3 +250,31 @@ def test_insert_after_chain_recover_keeps_restored_rows(spark, tmp_path):
         now_ms=4000)
     ids = {r["id"] for r in c.df().select("id").collect()}
     assert ids == {"a", "b", "c"}
+
+
+def test_restore_appends_its_event_in_process(spark, tmp_path, db,
+                                              monkeypatch):
+    """Both restore commits append their CDC event through the pyarrow
+    writer: Spark writes the restored segment, never the event."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from needle_spark.pitr import IncrementalBackupService
+
+    svc = PitrService(db, PitrConfig(backup_dir=str(tmp_path / "b5")))
+    svc.create_snapshot("p", now_ms=10_000)
+    ibs = IncrementalBackupService(db, str(tmp_path / "b6"))
+    base = ibs.create_base("b0", now_ms=10_500)
+    spark_writes, orig = [], DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        spark_writes.append(os.path.basename(path))
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    svc.recover_to("p", now_ms=11_000)
+    ibs.recover(base.id, now_ms=12_000)
+    assert spark_writes and all(w.startswith("seg-") for w in spark_writes)
+    ev = db.collection("docs").cdc_events().orderBy("sequence").collect()
+    assert [(r["event_type"], r["timestamp_ms"]) for r in ev[-2:]] == [
+        ("restore", 11_000), ("restore", 12_000)]
+    assert ev[-1]["vector_id"] == base.id and ev[-1]["metadata"] is None

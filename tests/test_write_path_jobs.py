@@ -1,8 +1,11 @@
 """Spark jobs on the REST write path: serving-index adds for pinned meta
 fields run in-process, Collection.df() reads object schemas from the
-Parquet footers, and insert checks its batch in one action under the
-commit lock without losing any of its four rejections."""
+Parquet footers, insert checks its batch in one action under the
+commit lock without losing any of its four rejections, and a
+pyarrow.Table batch commits its objects in-process, indistinguishable
+from a Spark-written commit."""
 
+import glob
 import json
 import math
 import os
@@ -278,56 +281,211 @@ def test_insert_rejections_keep_message_and_version(spark, tmp_path):
         "table")) == 2
 
 
-def test_table_and_dataframe_batches_write_the_same(spark, tmp_path):
-    rows = [(f"r{i}", [float(i), 1.5], json.dumps({"i": i, "t": "x"}))
-            for i in range(7)] + [("none", [0.25, -1.0], None)]
+# payload strings that Spark's to_json escapes or keeps in ways Python's
+# json module does not (uppercase \u00XX hex, short escapes, raw
+# non-ASCII, U+007F and U+2028 unescaped)
+_TRICKY = ['say "hi"', "back\\slash \\u00e9", "unit\x1fsep\x00nul\x7fdel",
+           "tab\tnl\nbs\bff\fcr\r", "é☃\u2028😀\x85",
+           "".join(map(chr, range(0x80))), "", None]
+
+
+def _mixed_batch(spark, rows, form, id_type):
+    """(id, vector, metadata, g) rows as a DataFrame or a Table of the
+    same Spark types."""
+    schema = f"id {id_type}, vector array<float>, metadata string, g long"
+    if form == "df":
+        return spark.createDataFrame(rows, schema)
+    ids, vecs, metas, gs = zip(*rows)
+    return pa.table({
+        "id": pa.array(ids, pa.int64() if id_type == "long" else pa.string()),
+        "vector": pa.array(vecs, pa.list_(pa.float32())),
+        "metadata": pa.array(metas, pa.string()),
+        "g": pa.array(gs, pa.int64())})
+
+
+def _objects(c):
+    return sorted(d for d in os.listdir(c.path)
+                  if d.startswith(("seg-", "del-")) or d == "_cdc")
+
+
+def _pyarrow_written(path):
+    return [f for f in glob.glob(os.path.join(path, "part-*.parquet"))
+            if pq.ParquetFile(f).metadata.created_by.startswith(
+                "parquet-cpp-arrow")]
+
+
+def test_table_and_dataframe_batches_write_the_same(spark, tmp_path,
+                                                    spark_jobs):
+    for id_type in ("string", "long"):
+        _same_writes(spark, tmp_path / id_type, spark_jobs, id_type)
+
+
+def _same_writes(spark, tmp_path, spark_jobs, id_type):
+    key = (lambda i: 1000 - i) if id_type == "long" else (lambda i: f"r{i}")
+    meta = [json.dumps({"i": i, "t": "x"}) for i in range(5)] + _TRICKY
+    rows = [(key(i), [float(i), 1.5], m, None if i % 4 == 3 else i - 6)
+            for i, m in enumerate(meta)]
+    upsert = [(key(3), [9.0, 9.0], '{"u": "\\"q\\""}', -7),
+              (key(20), [2.0, 2.0], "new\x1f", None),
+              (key(9), [3.0, 3.0], None, 2 ** 40)]
     colls, t0 = {}, int(time.time()) * 1000
     for form in ("df", "table"):
-        c = Collection.create(spark, str(tmp_path / form), dims=2,
-                              schema=SCHEMA, default_ttl_seconds=3600)
-        assert c.insert(_batch(spark, rows, form), now_ms=t0) == 8
-        assert c.upsert(_batch(spark, [("r3", [9.0, 9.0], '{"u": 1}')],
-                               form), now_ms=t0 + 1) == 1
-        assert c.delete(ids=["r1", "r5", "missing"], now_ms=t0 + 2) == 2
+        c = Collection.create(
+            spark, str(tmp_path / form), dims=2, default_ttl_seconds=3600,
+            schema=f"id {id_type}, vector array<float>, metadata string, "
+                   "g long")
+        with spark_jobs() as jobs:
+            assert c.insert(_mixed_batch(spark, rows, form, id_type),
+                            now_ms=t0) == len(rows)
+            assert c.upsert(_mixed_batch(spark, upsert, form, id_type),
+                            now_ms=t0 + 1) == 3
+            assert c.delete(ids=[key(1), key(5), key(99)],
+                            now_ms=t0 + 2) == 2
+        if form == "table":
+            assert jobs.n == 0
         colls[form] = c
 
     def state(c):
         cdc = c.cdc_events().select("sequence", "timestamp_ms",
                                     "event_type", "vector_id", "metadata")
-        return (c.version, c.df(now=t0 // 1000).schema.simpleString(),
+        return (c.version, _objects(c), c.df(now=t0 // 1000).schema,
                 sorted(map(repr, c.df(now=t0 // 1000).collect())),
-                sorted(map(repr, cdc.collect())))
+                sorted(tuple(r) for r in cdc.collect()))
 
     assert state(colls["df"]) == state(colls["table"])
-    assert colls["table"].df(now=t0 // 1000).count() == 6
+    assert colls["table"].df(now=t0 // 1000).count() == len(rows) - 2 + 1
+    table = colls["table"]
+    written = [d for d in _objects(table) if d != "seg-0"]
+    assert written == ["_cdc", "del-2", "del-4", "seg-1", "seg-3"]
+    for name in written:
+        path = os.path.join(table.path, name)
+        assert _pyarrow_written(path)
+        assert catalog._footer_schema(path) is not None
+    with spark_jobs() as jobs:
+        table.df()
+    assert jobs.n == 0
+
+
+def test_table_with_other_payload_types_uses_spark(spark, tmp_path):
+    """A Table whose payload the pyarrow writer cannot render exactly
+    (here a double column) is committed by Spark, with the same result."""
+    c = Collection.create(spark, str(tmp_path / "d"), dims=2,
+                          schema="id string, vector array<float>, w double")
+    batch = pa.table({"id": ["a", "b"],
+                      "vector": pa.array([[1.0, 0.0], [0.0, 1.0]],
+                                         pa.list_(pa.float32())),
+                      "w": [0.1, 1e20]})
+    assert c.insert(batch) == 2
+    assert c.upsert(batch.slice(0, 1)) == 1
+    for name in ("seg-1", "del-2", "seg-3", "_cdc"):
+        assert not _pyarrow_written(os.path.join(c.path, name))
+    ev = c.cdc_events().orderBy("sequence").collect()
+    assert [r["metadata"] for r in ev] == [
+        '{"w":0.1}', '{"w":1.0E20}', '{"w":0.1}']
+
+
+# ------------------------------------------- pyarrow commit robustness --
+
+def _rest_table(ids, vec=(1.0, 0.0)):
+    return _rows_table([{"id": i, "vector": list(vec),
+                         "metadata": {"k": i}} for i in ids])
+
+
+def test_table_commit_replaces_stale_object(spark, tmp_path):
+    """obj_seq is persisted only with the manifest, so a crashed commit
+    can leave a partial seg-K/del-K that the next commit's names reuse:
+    the pyarrow writer replaces it, as mode("overwrite") does."""
+    path = str(tmp_path / "stale")
+    c = Collection.create(spark, path, dims=2, schema=SCHEMA)
+    c.insert(_rest_table(["a", "b"]))
+    k = c._read_manifest()["obj_seq"]
+    for name in (f"del-{k}", f"seg-{k + 1}"):
+        os.makedirs(os.path.join(path, name))
+        for stale in ("part-00000-stale.snappy.parquet", ".part-x.tmp"):
+            with open(os.path.join(path, name, stale), "wb") as f:
+                f.write(b"PAR1 truncated")
+    assert c.upsert(_rest_table(["b", "c"], (0.0, 1.0))) == 2
+    for name in (f"del-{k}", f"seg-{k + 1}"):
+        files = os.listdir(os.path.join(path, name))
+        assert len(files) == 1 and files[0].startswith("part-"), files
+    got = {r["id"]: list(r["vector"]) for r in c.df().collect()}
+    assert got == {"a": [1.0, 0.0], "b": [0.0, 1.0], "c": [0.0, 1.0]}
+    assert c._live_ids(["a", "b", "c", "d"]) == {"a", "b", "c"}
+
+
+def test_table_commit_shows_no_partial_part_file(spark, tmp_path,
+                                                 monkeypatch):
+    """Every pyarrow write lands under a hidden name and is renamed
+    only once complete, so no reader ever lists a partial part file."""
+    c = Collection.create(spark, str(tmp_path / "atomic"), dims=2,
+                          schema=SCHEMA)
+    c.insert(_rest_table(["a"]))
+    orig, seen = pq.write_table, []
+
+    def write_table(table, where, **kw):
+        folder = os.path.dirname(where)
+        before = set(glob.glob(os.path.join(folder, "part-*")))
+        orig(table, where, **kw)
+        assert os.path.basename(where).startswith(".")
+        assert set(glob.glob(os.path.join(folder, "part-*"))) == before
+        seen.append(os.path.basename(folder))
+
+    monkeypatch.setattr(catalog.pq, "write_table", write_table)
+    c.upsert(_rest_table(["a", "b"]))
+    c.delete(ids=["b"])
+    assert [s.split("-")[0] for s in seen] == ["del", "seg", "_cdc",
+                                               "del", "_cdc"]
+    assert not [f for d in _objects(c) for f in
+                os.listdir(os.path.join(c.path, d)) if f.endswith(".tmp")]
+    assert sorted(r["id"] for r in c.df().collect()) == ["a"]
+
+
+def test_mixed_commits_fsck_clean_and_cdc_readable(spark, tmp_path):
+    from needle_spark.fsck import validate_collection
+    from needle_spark.streaming.ingestion import change_stream
+
+    c = Collection.create(spark, str(tmp_path / "mix"), dims=2,
+                          schema=SCHEMA)
+    c.insert(_rest_table(["a", "b", "c"]), now_ms=1)
+    c.insert(spark.createDataFrame([("d", [1.0, 1.0], None)], SCHEMA),
+             now_ms=2)
+    c.upsert(_rest_table(["a"], (0.0, 1.0)), now_ms=3)
+    c.delete({"id": "d"}, now_ms=4)
+    c.delete(ids=["b"], now_ms=5)
+    c.upsert(spark.createDataFrame([("e", [2.0, 1.0], "{}")], SCHEMA),
+             now_ms=6)
+    rep = validate_collection(spark, c.path)
+    assert rep.valid and not rep.warnings, (rep.errors, rep.warnings)
+    assert rep.stats["cdc_events"] == 8
+
+    want = [(0, "insert", "a"), (1, "insert", "b"), (2, "insert", "c"),
+            (3, "insert", "d"), (4, "upsert", "a"), (5, "delete", "d"),
+            (6, "delete", "b"), (7, "upsert", "e")]
+    since = c.cdc_events_since(4).collect()
+    assert [(r["sequence"], r["event_type"], r["vector_id"])
+            for r in since] == want[4:]
+    assert since[0]["metadata"] == '{"metadata":"{\\"k\\": \\"a\\"}"}'
+    q = (change_stream(spark, c).writeStream.format("memory")
+         .queryName("pyarrow_cdc")
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = spark.sql("SELECT sequence, event_type, vector_id FROM "
+                    "pyarrow_cdc ORDER BY sequence").collect()
+    assert [tuple(r) for r in got] == want
 
 
 # ------------------------------------------------- jobs per REST write --
 
 @pytest.fixture
-def rest_write_jobs(srv, spark, spark_jobs, monkeypatch):
-    """Dispatches one REST write in this thread and returns (status,
-    total Spark jobs, jobs started before the first Parquet write)."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    sc = spark.sparkContext
-    orig = DataFrameWriter.parquet
-    before_write = []
-
-    def parquet(self, *args, **kwargs):
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        group = sc.getLocalProperty("spark.jobGroup.id")
-        before_write.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-        return orig(self, *args, **kwargs)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
-
+def rest_write_jobs(srv, spark_jobs):
+    """Dispatches one REST write in this thread and returns the Spark
+    jobs it started."""
     def run(path, body):
-        before_write.clear()
         with spark_jobs() as jobs:
             status, out = srv.dispatch("POST", path, body, {})
         assert status in (200, 201), out
-        return jobs.n, before_write[0]
+        return jobs.n
 
     return run
 
@@ -352,10 +510,9 @@ def test_rest_writes_start_no_job_before_first_write(srv, rest_write_jobs):
             base + "/delete-batch",
             {"ids": [b["id"] for b in batch] + ["p1", "gone"]}),
     }
-    # (total jobs, jobs before the first Parquet write): the segment or
-    # tombstone write, then the CDC append, and nothing before them
-    assert got == {"insert": (3, 0), "batch_insert": (3, 0),
-                   "upsert": (4, 0), "delete_batch": (3, 0)}
+    # segment, tombstone and CDC objects are all written in-process
+    assert got == {"insert": 0, "batch_insert": 0, "upsert": 0,
+                   "delete_batch": 0}
     c = srv.db.collection(name)
     assert c.count() == 80 - 2 + 1
     assert c.get("p2")["vector"] == pytest.approx(_vec(201))
