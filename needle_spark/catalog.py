@@ -631,47 +631,66 @@ class Collection:
             reader = reader.schema(schema)
         return reader.parquet(path)
 
-    def _live_ids(self, ids) -> set:
-        """The ids among `ids` that df() shows, read in-process with
-        pyarrow and no Spark job: only the id column (and `expires_at`)
-        of each seg-/del- object of the current version, under an `in`
+    def _live_id_columns(self, ids=None):
+        """Yield, per segment of the current version, the id column of
+        the rows df() shows, read in-process with pyarrow and no Spark
+        job: only the id column (and `expires_at`) of each seg-/del-
+        object.  `ids` restricts the read to those ids, under an `in`
         filter so row groups whose min/max miss every id are skipped.
-        Same merge-on-read rules as df(): a tombstone masks the segments
-        before its position, and a default-TTL collection hides rows
-        whose expiry has passed by the wall clock."""
+        Same merge-on-read rules as df(): a tombstone masks the
+        segments before its position, and a default-TTL collection
+        hides rows whose expiry has passed by the wall clock."""
+        import pyarrow.compute as pc
         import pyarrow.dataset as ds
 
         ic = self.id_col
-        ids = [i for i in ids if i is not None]
-        if not ids:
-            return set()
         now = (int(time.time())
                if self._manifest.get("default_ttl_seconds") is not None
                else None)
 
-        def read(name: str, ttl: bool) -> set:
+        def read(name: str, ttl: bool):
             obj = ds.dataset(os.path.join(self.path, name), format="parquet")
             names = obj.schema.names
             if ic not in names:  # an object with no part file
-                return set()
-            flt = ds.field(ic).isin(
-                pa.array(ids).cast(obj.schema.field(ic).type))
+                return None
+            flt = None
+            if ids is not None:
+                flt = ds.field(ic).isin(
+                    pa.array(ids).cast(obj.schema.field(ic).type))
             if ttl and "expires_at" in names:
                 exp = ds.field("expires_at")
-                flt &= exp.is_null() | (exp > now)
-            return set(obj.to_table(columns=[ic], filter=flt)
-                       .column(0).to_pylist())
+                alive = exp.is_null() | (exp > now)
+                flt = alive if flt is None else flt & alive
+            return obj.to_table(columns=[ic], filter=flt).column(0)
 
         entry = self._entry(self.version)
         masks = [(read(t, False), pos) for t, pos in entry["tombstones"]]
-        live = set()
         for i, seg in enumerate(entry["segments"]):
-            rows = read(seg, now is not None)
-            for mask, pos in masks:
-                if pos > i:
-                    rows -= mask
-            live |= rows
-        return live
+            col = read(seg, now is not None)
+            if col is None:
+                continue
+            cover = [c.cast(col.type) for c, pos in masks
+                     if pos > i and c is not None and len(c)]
+            if cover and len(col):
+                # a null id matches no tombstone (df()'s anti join)
+                dead = pc.is_in(col, value_set=pa.concat_arrays(
+                    [ch for c in cover for ch in c.chunks]),
+                    skip_nulls=True)
+                col = col.filter(pc.invert(dead))
+            yield col
+
+    def _live_ids(self, ids) -> set:
+        """The ids among `ids` that df() shows (_live_id_columns)."""
+        ids = [i for i in ids if i is not None]
+        if not ids:
+            return set()
+        return {i for col in self._live_id_columns(ids)
+                for i in col.to_pylist()}
+
+    def _live_count(self) -> int:
+        """df().count() without a Spark job: the rows of the current
+        version's segments that df() shows (_live_id_columns)."""
+        return sum(len(col) for col in self._live_id_columns())
 
     @property
     def version(self) -> int:

@@ -23,8 +23,9 @@ streaming/reliability.py.
 
 Altitude: metrics are O(metric-series), not O(data) — the registry is
 plain driver-side state.  The only data-touching helper,
-`update_from_collection`, derives the collection gauges from ONE count
-aggregation and the tombstones' Parquet footers."""
+`update_from_collection`, derives the collection gauges in-process, with
+no Spark job: the live count from the segments' id columns, the deleted
+count from the tombstones' Parquet footers."""
 
 from __future__ import annotations
 
@@ -173,20 +174,23 @@ class MetricsRegistry:
         self.set_gauge("needle_collection_deleted_vectors", lbl, deleted)
         self.set_gauge("needle_collection_dimensions", lbl, dims)
 
-    def update_memory(self, collection: str, vectors: int, metadata: int,
-                      index: int) -> None:
-        """metrics.rs:574-586."""
-        for kind, v in (("vectors", vectors), ("metadata", metadata),
-                        ("index", index)):
-            self.set_gauge("needle_collection_memory_bytes",
-                           {"collection": collection, "kind": kind}, v)
+    def update_memory(self, collection: str, index: int) -> None:
+        """metrics.rs:574-586, kind="index" only.  Deviation: the
+        reference also reports kind="vectors" and kind="metadata", the
+        bytes of its in-memory collection; here a collection's rows live
+        in Parquet segments, not in process memory, so only a serving
+        index's resident bytes are reported."""
+        self.set_gauge("needle_collection_memory_bytes",
+                       {"collection": collection, "kind": "index"}, index)
 
-    def update_from_collection(self, collection) -> None:
-        """Derive the collection gauges from the real catalog state —
-        one count aggregation, no data collected.  Deleted vectors are
-        the rows of the current version's tombstone objects, which
-        await compaction; their count comes from Parquet footers and
-        starts no Spark job."""
+    def update_from_collection(self, collection, index=None) -> None:
+        """Derive the collection gauges from the real catalog state,
+        in-process and with no Spark job: the live count reads the
+        segments' id columns (Collection._live_count), and deleted
+        vectors are the rows of the current version's tombstone
+        objects, which await compaction, counted from Parquet footers.
+        `index` is the collection's serving index, if any: its
+        memory_bytes() is the kind="index" memory gauge (0 without)."""
         import pyarrow.dataset as ds
 
         tombs = collection._entry(collection.version)["tombstones"]
@@ -194,10 +198,11 @@ class MetricsRegistry:
             ds.dataset(os.path.join(collection.path, t),
                        format="parquet").count_rows()
             for t, _ in tombs)
-        self.update_collection(
-            collection.path.rstrip("/").rsplit("/", 1)[-1],
-            vectors=collection.count(), deleted=deleted,
-            dims=collection.dims)
+        name = collection.path.rstrip("/").rsplit("/", 1)[-1]
+        self.update_collection(name, vectors=collection._live_count(),
+                               deleted=deleted, dims=collection.dims)
+        self.update_memory(
+            name, 0 if index is None else index.memory_bytes())
 
     # -- export --
 

@@ -870,6 +870,14 @@ class FlatKnnIndex:
         """No-op: the constructor already pinned the matrix (flat has
         no encode step). Present for tier-interchangeability."""
 
+    def memory_bytes(self) -> int:
+        """Resident serving bytes: the pinned matrix, ids, metadata and
+        whichever coarse sidecars (SQ8, float16) are built."""
+        return int(self._X.nbytes + self.ids.nbytes
+                   + sum(v.nbytes for v in self.metas.values())
+                   + (0 if self._sq8 is None else self._sq8[0].nbytes)
+                   + (0 if self._f16 is None else self._f16.nbytes))
+
     def unpersist(self) -> None:
         if self._pool is not None:
             self._pool.shutdown(wait=False)

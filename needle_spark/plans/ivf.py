@@ -333,6 +333,57 @@ def _sq_for_cell(SQ, step2, QT, cell):
     return np.ascontiguousarray(step2[cell][:, None] * QT)
 
 
+def _dist_from_dot(dot, nsq, qsq, metric: str):
+    """Distances from the (n_rows, n_queries) dot block, each row's
+    decoded norm nsq (n_rows,) and each query's qsq (n_queries,)."""
+    if metric == "cosine":
+        # renormalize by the DECODED vector's norm (stored in nsq for
+        # quantized code tiers; exactly 1.0 for float32 codes): the
+        # quantized x_hat is not unit-length, and cos = dot/|x_hat| —
+        # skipping the division biases ranking by each row's
+        # quantization norm drift (measured recall@10 0.855 -> 0.978
+        # on a unit-norm 128-d corpus, PLANS.md round 8)
+        return 1.0 - dot / np.sqrt(
+            np.maximum(np.asarray(nsq), 1e-24))[:, None]
+    if metric == "dot":
+        return -dot
+    return np.sqrt(np.clip(  # euclidean
+        np.asarray(nsq)[:, None] - 2.0 * dot + qsq[None, :], 0.0, None))
+
+
+#: rows scored per block by the filtered single-query pass: its float32
+#: working set is O(FILTERED_BLOCK_ROWS x dim) whatever the nprobe or
+#: the predicate's selectivity
+FILTERED_BLOCK_ROWS = 4096
+
+
+def _score_rows(codes, nsq, cells, SQ, step2, QT, base, qsq, metric: str):
+    """Score gathered rows of MANY cells (`cells` sorted, one per row)
+    against one query: each row takes its own cell's terms (base[cell],
+    and for the per-cell quantizer step2[cell]).  Same decomposition
+    as _score_cell_block, with the same float32 arithmetic: each run
+    of one cell's rows is one BLAS gemv against that cell's step-scaled
+    query, so every distance is bit-identical to the per-cell kernel's
+    (a row's gemv result does not depend on the rows beside it, but
+    an elementwise dot rounds differently and reorders near-ties).
+    Returns (n_rows,) distances."""
+    if isinstance(SQ, tuple):  # ('pq', LUT (1, m, 256) f32)
+        L = SQ[1][0]
+        dot = np.zeros(len(codes), dtype=np.float32)
+        for j in range(codes.shape[1]):
+            dot += L[j][codes[:, j]]
+    else:
+        Cf = codes if codes.dtype == np.float32 \
+            else codes.astype(np.float32)
+        dot = np.empty(len(Cf), dtype=np.float32)
+        cuts = np.flatnonzero(np.diff(cells)) + 1
+        for a, b in zip(np.r_[0, cuts], np.r_[cuts, len(cells)]):
+            dot[a:b] = Cf[a:b] @ (SQ[:, 0] if SQ is not None
+                                  else step2[cells[a]] * QT[:, 0])
+    dot += base[cells, 0]
+    return _dist_from_dot(dot[:, None], nsq, qsq, metric)[:, 0]
+
+
 def _score_cell_block(codes_u8, ids_cell, nsq_cell, qidx, SQ, base_row, qsq,
                       metric: str, k: int, return_sel: bool = False):
     """Score one cell's rows against the queries probing it.
@@ -367,21 +418,7 @@ def _score_cell_block(codes_u8, ids_cell, nsq_cell, qidx, SQ, base_row, qsq,
             else codes_u8.astype(np.float32)
         dot = Cf @ SQ[:, qidx]  # (n_cell, n_probing)
     dot += base_row[qidx][None, :]
-    if metric == "cosine":
-        # renormalize by the DECODED vector's norm (stored in nsq for
-        # quantized code tiers; exactly 1.0 for float32 codes): the
-        # quantized x_hat is not unit-length, and cos = dot/|x_hat| —
-        # skipping the division biases ranking by each row's
-        # quantization norm drift (measured recall@10 0.855 -> 0.978
-        # on a unit-norm 128-d corpus, PLANS.md round 8)
-        D = 1.0 - dot / np.sqrt(
-            np.maximum(np.asarray(nsq_cell), 1e-24))[:, None]
-    elif metric == "dot":
-        D = -dot
-    else:  # euclidean
-        D = np.sqrt(np.clip(
-            np.asarray(nsq_cell)[:, None] - 2.0 * dot + qsq[qidx][None, :],
-            0.0, None))
+    D = _dist_from_dot(dot, nsq_cell, qsq[qidx], metric)
     if D.shape[0] > k:
         sel = np.argpartition(D, k - 1, axis=0)[:k]
         if return_sel:
@@ -1492,7 +1529,7 @@ class IvfBatchKnnIndex:
         if getattr(self, "_drv", None) is not None \
                 and self._drv[0] == seg_dir:
             return self._drv[1], self._drv[2]
-        segs, cell_dir = [], {}
+        segs, cell_dir, spans = [], {}, []
         for pid in sorted(written):
             cells = np.load(f"{seg_dir}/cells_{pid}.npy")
             if cells.size == 0:
@@ -1519,10 +1556,30 @@ class IvfBatchKnnIndex:
             for ci, cell in enumerate(cells):
                 cell_dir[int(cell)] = (si, int(starts[ci]),
                                        int(starts[ci + 1]))
-        self._drv = (seg_dir, segs, cell_dir)
+            # the same directory as (nlist,) start/end arrays, so a
+            # filtered search gathers every probed cell's rows at once
+            start = np.zeros(self.nlist, dtype=np.int64)
+            end = np.zeros(self.nlist, dtype=np.int64)
+            start[cells], end[cells] = starts[:-1], starts[1:]
+            spans.append((start, end))
+        self._drv = (seg_dir, segs, cell_dir, spans)
         self._cellf32 = {}
         self._cellf32_bytes = 0
         return segs, cell_dir
+
+    def memory_bytes(self) -> int:
+        """Resident serving bytes: the pinned segment arrays the driver
+        maps (ids, norms, codes, metadata, refine sidecar) plus the
+        decoded-cell cache of search_one."""
+        if self._segments is None:
+            return 0
+        segs, _ = self._driver_cache()
+        pinned = sum(
+            ids.nbytes + nsq.nbytes + codes.nbytes
+            + sum(v.nbytes for v in metas.values())
+            + (0 if vecs is None else vecs.nbytes)
+            for ids, nsq, codes, metas, vecs in segs)
+        return int(pinned + self._cellf32_bytes)
 
     def _driver_delta(self):
         """Bounded driver mirror of the delta frame (adds since the
@@ -1585,10 +1642,10 @@ class IvfBatchKnnIndex:
         return out
 
     @staticmethod
-    def _where_mask(metas: dict, where: dict, s: int = None,
-                    e: int = None):
+    def _where_mask(metas: dict, where: dict, sel=None):
         """Evaluate a conjunctive predicate over pinned metadata
-        arrays (sliced [s:e] when given).  Per column: bare value or
+        arrays (indexed by `sel` — a slice or row indices — when
+        given).  Per column: bare value or
         {"$eq"}, {"$in"}, {"$gt"/"$gte"/"$lt"/"$lte"} — the shapes the
         reference's filtered ANN search evaluates during its walk."""
         mask = None
@@ -1597,7 +1654,8 @@ class IvfBatchKnnIndex:
                 raise ValueError(
                     f"column {col!r} is not pinned; build the index "
                     f"with meta_cols=[{col!r}] for filtered serving")
-            vals = np.asarray(metas[col] if s is None else metas[col][s:e])
+            vals = np.asarray(metas[col] if sel is None
+                              else metas[col][sel])
             if not isinstance(spec, dict):
                 m = vals == spec
             else:
@@ -1692,7 +1750,7 @@ class IvfBatchKnnIndex:
                     # filter DURING the scan: only matching rows are
                     # decoded/scored (10% selectivity -> ~10% of the
                     # sgemm), the reference's filtered-ANN shape
-                    wm = self._where_mask(metas, where, s, e)
+                    wm = self._where_mask(metas, where, slice(s, e))
                     if wm is not None and not wm.all():
                         if not wm.any():
                             continue
@@ -1794,17 +1852,12 @@ class IvfBatchKnnIndex:
         serving process colocated with shared segment storage; the
         DataFrame `search` path remains the cluster-wide variant.
 
+        `where` filters on pinned metadata columns (see _where_mask):
+        the probed rows that match are gathered and scored in one
+        vectorized pass (_filtered_candidates) instead of the per-cell
+        loop; the ids equal search_many_local's at the same nprobe.
+
         Returns [(id, distance), ...] sorted ascending, length <= k."""
-        if where:
-            # filtered serving shares the batch path's during-scan
-            # predicate evaluation over the pinned metadata arrays
-            pdf = self.search_many_local(
-                ([0], np.asarray(query_vector, dtype=np.float64)
-                 .reshape(1, -1)), k=k, nprobe=nprobe, where=where,
-                refine=refine)
-            return [(i if not hasattr(i, "item") else i.item(),
-                     float(d))
-                    for i, d in zip(pdf[self.id_col], pdf["distance"])]
         use_refine = self._resolve_refine(refine)
         segs, cell_dir = self._driver_cache()
         q = np.asarray(query_vector, dtype=np.float64).reshape(1, -1)
@@ -1820,53 +1873,58 @@ class IvfBatchKnnIndex:
         fetch = self._fetch_k(k)
         if use_refine:
             fetch = max(fetch, k * self.refine_factor)
-        cand_d, cand_i, cand_r = [], [], []
-        for cell in probes:
-            hit = cell_dir.get(int(cell))
-            if hit is None:
-                continue
-            si, s, e = hit
-            ids, nsq, codes, _metas, vecs = segs[si]
-            if self._pq is not None:
-                # PQ codes are LUT indices: the kernel reads the uint8
-                # rows directly (no float32 cast, no decoded cache)
-                Cf = np.asarray(codes[s:e])
-            elif codes.dtype == np.float32:
-                # decoded segment tier (pin_segments(decoded=True)):
-                # BLAS reads the page-cached mmap directly
-                Cf = codes[s:e]
-            else:
-                key = (si, s, e)
-                Cf = self._cellf32.get(key)
-                if Cf is not None:
-                    # LRU touch: re-insert so insertion order == recency
-                    self._cellf32[key] = self._cellf32.pop(key)
+        if where:
+            cand_d, cand_i, cand_r = self._filtered_candidates(
+                segs, probes, where, (SQ, step2, QT, base, qsq), fetch,
+                use_refine)
+        else:
+            cand_d, cand_i, cand_r = [], [], []
+            for cell in probes:
+                hit = cell_dir.get(int(cell))
+                if hit is None:
+                    continue
+                si, s, e = hit
+                ids, nsq, codes, _metas, vecs = segs[si]
+                if self._pq is not None:
+                    # PQ codes are LUT indices: the kernel reads the uint8
+                    # rows directly (no float32 cast, no decoded cache)
+                    Cf = np.asarray(codes[s:e])
+                elif codes.dtype == np.float32:
+                    # decoded segment tier (pin_segments(decoded=True)):
+                    # BLAS reads the page-cached mmap directly
+                    Cf = codes[s:e]
                 else:
-                    Cf = np.asarray(codes[s:e]).astype(np.float32)
-                    budget = self.serving_cache_mb * 1024 * 1024
-                    if Cf.nbytes <= budget:
-                        while self._cellf32_bytes + Cf.nbytes > budget \
-                                and self._cellf32:
-                            # evict LEAST-recently-used (front of the
-                            # insertion order), not the newest entry
-                            lru = next(iter(self._cellf32))
-                            self._cellf32_bytes -= \
-                                self._cellf32.pop(lru).nbytes
-                        self._cellf32[key] = Cf
-                        self._cellf32_bytes += Cf.nbytes
-            out = _score_cell_block(
-                Cf, ids[s:e], nsq[s:e], qidx,
-                _sq_for_cell(SQ, step2, QT, int(cell)),
-                base[int(cell)], qsq, self.metric, fetch,
-                return_sel=use_refine)
-            if use_refine:
-                Dk, Ik, SELk = out
-                cand_r.append((np.int64(si + 1) << np.int64(40))
-                              + s + SELk[:, 0].astype(np.int64))
-            else:
-                Dk, Ik = out
-            cand_d.append(Dk[:, 0])
-            cand_i.append(Ik[:, 0])
+                    key = (si, s, e)
+                    Cf = self._cellf32.get(key)
+                    if Cf is not None:
+                        # LRU touch: re-insert so insertion order == recency
+                        self._cellf32[key] = self._cellf32.pop(key)
+                    else:
+                        Cf = np.asarray(codes[s:e]).astype(np.float32)
+                        budget = self.serving_cache_mb * 1024 * 1024
+                        if Cf.nbytes <= budget:
+                            while self._cellf32_bytes + Cf.nbytes > budget \
+                                    and self._cellf32:
+                                # evict LEAST-recently-used (front of the
+                                # insertion order), not the newest entry
+                                lru = next(iter(self._cellf32))
+                                self._cellf32_bytes -= \
+                                    self._cellf32.pop(lru).nbytes
+                            self._cellf32[key] = Cf
+                            self._cellf32_bytes += Cf.nbytes
+                out = _score_cell_block(
+                    Cf, ids[s:e], nsq[s:e], qidx,
+                    _sq_for_cell(SQ, step2, QT, int(cell)),
+                    base[int(cell)], qsq, self.metric, fetch,
+                    return_sel=use_refine)
+                if use_refine:
+                    Dk, Ik, SELk = out
+                    cand_r.append((np.int64(si + 1) << np.int64(40))
+                                  + s + SELk[:, 0].astype(np.int64))
+                else:
+                    Dk, Ik = out
+                cand_d.append(Dk[:, 0])
+                cand_i.append(Ik[:, 0])
         main_mask = self._tombstones | self._superseded
         if cand_d and main_mask:
             di = np.concatenate(cand_d)
@@ -1878,10 +1936,12 @@ class IvfBatchKnnIndex:
         delta = self._driver_delta()
         d_vecs = delta[5] if delta is not None else None
         if delta is not None:
-            d_ids, d_cent, d_nsq, d_codes, _d_metas, d_vecs = delta
+            d_ids, d_cent, d_nsq, d_codes, d_metas, d_vecs = delta
             sel = np.isin(d_cent, probes)
             if self._tombstones:
                 sel &= ~np.isin(d_ids, list(self._tombstones))
+            if where:
+                sel &= self._where_mask(d_metas, where)
             if sel.any():
                 # delta rows scored per their own cell's base term
                 for cell in np.unique(d_cent[sel]):
@@ -1918,6 +1978,54 @@ class IvfBatchKnnIndex:
         order = np.lexsort((I, D))
         return [(I[j].item() if hasattr(I[j], "item") else I[j],
                  float(D[j])) for j in order[:k]]
+
+    def _filtered_candidates(self, segs, probes, where, terms,
+                             fetch: int, use_refine: bool):
+        """The main-segment scan of a filtered search_one: per segment,
+        the rows of every probed cell are gathered with one repeat +
+        arange, `where` is evaluated once over their pinned metadata,
+        and only the matching rows are cast and scored, in blocks of
+        FILTERED_BLOCK_ROWS (each row against its own cell's terms).
+        Returns search_one's (cand_d, cand_i, cand_r) lists holding
+        the quantized top-`fetch` across all segments — the cut
+        search_many_local takes before its tombstone mask and refine
+        pass; cand_r carries packed (seg+1) << 40 | row refs on a
+        refine pass."""
+        SQ, step2, QT, base, qsq = terms
+        probes = np.sort(probes)  # ascending rows: mmap locality
+        cand_d, cand_i, cand_r = [], [], []
+        for si, (start, end) in enumerate(self._drv[3]):
+            lens = end[probes] - start[probes]
+            n = int(lens.sum())
+            if n == 0:
+                continue
+            rows = np.repeat(start[probes] - (np.cumsum(lens) - lens),
+                             lens) + np.arange(n)
+            cells = np.repeat(probes, lens)
+            ids, nsq, codes, metas, _vecs = segs[si]
+            wm = self._where_mask(metas, where, rows)
+            rows, cells = rows[wm], cells[wm]
+            for b in range(0, len(rows), FILTERED_BLOCK_ROWS):
+                r = rows[b:b + FILTERED_BLOCK_ROWS]
+                D = _score_rows(codes[r], nsq[r],
+                                cells[b:b + FILTERED_BLOCK_ROWS], SQ,
+                                step2, QT, base, qsq, self.metric)
+                if len(D) > fetch:
+                    sel = np.argpartition(D, fetch - 1)[:fetch]
+                    D, r = D[sel], r[sel]
+                cand_d.append(D)
+                cand_i.append(ids[r])
+                if use_refine:
+                    cand_r.append((np.int64(si + 1) << np.int64(40)) + r)
+        if len(cand_d) <= 1:
+            return cand_d, cand_i, cand_r
+        D, I = np.concatenate(cand_d), np.concatenate(cand_i)
+        R = np.concatenate(cand_r) if use_refine else None
+        if len(D) > fetch:
+            sel = np.argpartition(D, fetch - 1)[:fetch]
+            D, I = D[sel], I[sel]
+            R = R[sel] if use_refine else None
+        return [D], [I], ([R] if use_refine else [])
 
     def _rerank_merged(self, q_vals, refs, Q64, qpos, segs, d_vecs):
         """Post-merge exact re-rank: one sidecar gather + one

@@ -421,7 +421,10 @@ def recommend_ann_codes(train_sample, query_sample,
     artifact plateau was the decoded-norm defect, and this rule's
     disagreement with it is what exposed the bug); an
     outlier-stretched corpus (step >> margin) measures ~0 and flips
-    to float32.  Returns {'codes', 'sq8_sample_recall', 'reason'}."""
+    to float32.  At target_recall 1.0 bare SQ8 is never returned: a
+    sample that shows no miss does not prove the codes lossless, so the
+    answer is an exact tier (refine, or float32 codes).  Returns
+    {'codes', 'sq8_sample_recall', 'reason'}."""
     import numpy as np
 
     t = np.asarray(train_sample, dtype=np.float64)
@@ -505,7 +508,9 @@ def recommend_ann_codes(train_sample, query_sample,
     recall = float(np.mean([
         len(set(exact[i]) & set(quant[i])) / exact.shape[1]
         for i in range(len(q))]))
-    if recall >= target_recall:
+    # a sample that shows no SQ8 miss does not prove bare SQ8 lossless:
+    # at target 1.0 the exact re-rank is required whatever it reads
+    if recall >= target_recall and target_recall < 1.0:
         return {"codes": "sq8_cell", "refine": False,
                 "sq8_sample_recall": round(recall, 4),
                 "reason": f"sample SQ8 recall {recall:.3f} >= "
@@ -524,8 +529,10 @@ def recommend_ann_codes(train_sample, query_sample,
         return {"codes": "sq8_cell", "refine": True,
                 "sq8_sample_recall": round(recall, 4),
                 "refined_sample_recall": round(ref_recall, 4),
-                "reason": f"sample SQ8 recall {recall:.3f} < "
-                          f"{target_recall} but a {refine_factor}x "
+                "reason": f"sample SQ8 recall {recall:.3f} "
+                          + ("< " if recall < target_recall
+                             else "cannot prove bare SQ8 lossless at ")
+                          + f"{target_recall} but a {refine_factor}x "
                           f"quantized cut + exact re-rank measures "
                           f"{ref_recall:.3f}: serve quantized codes "
                           "with the exact-refine sidecar (float32-tier "

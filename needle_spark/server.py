@@ -627,14 +627,25 @@ class RestServer:
         entry = self._indexes.get(m.group(1))
         flt = b.get("filter")
         where = self._index_where(m.group(1), flt) if entry else None
-        if (entry is not None and cursor is None
-                and (not flt or where is not None)
-                and not b.get("post_filter")
-                and not b.get("include_vectors")
-                and entry[0].metric == metric):
+        # why an indexed collection's search still runs the Spark knn
+        # path; every such fallback is counted
+        fallback = None if entry is None else (
+            "filter" if flt and where is None
+            else "search_after" if cursor is not None
+            else "post_filter" if b.get("post_filter")
+            else "include_vectors" if b.get("include_vectors")
+            else "metric" if entry[0].metric != metric
+            else None)
+        if fallback is not None:
+            self._metrics.inc("needle_search_fallbacks_total",
+                              {"collection": m.group(1),
+                               "reason": fallback})
+        if entry is not None and fallback is None:
             idx, nprobe = entry
-            # filtered searches probe wider: matching rows are sparse
-            # in each cell, so coverage needs more cells (bench-tuned)
+            # filtered searches probe wider than unfiltered ones: the
+            # matching rows are sparse in each cell, so covering k of
+            # them takes more cells (bench-tuned).  search_one scores
+            # only the matching rows of the probed cells, in one pass
             default_np = nprobe * 8 if where else nprobe
             req_np = int(b.get("nprobe", default_np))
             mb = self._dispatchers.get(m.group(1))
@@ -2256,7 +2267,10 @@ class RestServer:
 
     def prometheus_metrics(self, m, b, q) -> Raw:
         for name in self.db.list_collections():
-            self._metrics.update_from_collection(self.db.collection(name))
+            entry = self._indexes.get(name)
+            self._metrics.update_from_collection(
+                self.db.collection(name),
+                None if entry is None else entry[0])
         return Raw(self._metrics.export(),
                    "text/plain; version=0.0.4; charset=utf-8")
 

@@ -284,3 +284,23 @@ def test_budget_enforced_on_pinned_codes(srv, corpora):
                  expect=200)
     assert built["tier_decision"]["budget_bytes_per_row"] == dim
     call(srv, "DELETE", "/collections/sft/index", expect=200)
+
+
+def test_recall_target_one_never_returns_bare_sq8():
+    """A 64-query sample that shows no SQ8 miss proves nothing at a
+    recall target of 1.0: over 30 random samples of the sift-like
+    corpus, most of which read sample SQ8 recall 1.000, the code rule
+    returns the exact-refine tier every time."""
+    from needle_spark.plans.tuning import recommend_ann_codes
+
+    st, _ = sift_like(3000, n_queries=1)
+    s = st.astype(np.float64)
+    rng = np.random.default_rng(0)
+    perfect = 0
+    for _ in range(30):
+        p = s[rng.permutation(len(s))]
+        r = recommend_ann_codes(p[64:], p[:64], "euclidean",
+                                target_recall=1.0)
+        assert r["refine"] is True, r
+        perfect += r["sq8_sample_recall"] == 1.0
+    assert perfect > 0

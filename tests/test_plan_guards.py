@@ -710,3 +710,62 @@ def test_lazy_exports_resolve():
         except (ImportError, AttributeError) as e:
             broken[name] = repr(e)
     assert not broken, f"stale public names: {broken}"
+
+
+def _queried_series(exprs) -> set:
+    """Metric names the PromQL expressions in `exprs` query."""
+    return {n for e in exprs for n in re.findall(r"\bneedle_\w+", e)}
+
+
+def _unemitted_series(exprs, exported: str) -> list:
+    """Series that `exprs` query but the Prometheus text `exported`
+    carries no sample of."""
+    emitted = {re.split(r"[{ ]", line, maxsplit=1)[0]
+               for line in exported.splitlines()
+               if line and not line.startswith("#")}
+    return sorted(_queried_series(exprs) - emitted)
+
+
+def test_unemitted_series_scan_catches_a_missing_series():
+    exprs = ["sum(needle_a) > 1",
+             "rate(needle_b_bucket[5m]) / rate(needle_c{op=\"x\"}[5m])"]
+    exported = ('# TYPE needle_a gauge\nneedle_a{k="1"} 2\n'
+                'needle_b_bucket{le="+Inf"} 3\n')
+    assert _unemitted_series(exprs, exported) == ["needle_c"]
+
+
+def test_dashboard_and_alert_series_are_emitted(spark, tmp_path):
+    """Every series the generated Grafana panels and alerting rules
+    query is in a /metrics scrape of a server that holds a serving
+    index and has answered a search and failed a request: a panel or
+    alert over a series nothing emits stays empty or never fires."""
+    import json
+
+    from needle_spark.catalog import Database
+    from needle_spark.observe import (generate_alerting_rules,
+                                      generate_grafana_dashboard)
+    from needle_spark.server import RestServer
+
+    srv = RestServer(Database(spark, str(tmp_path / "db")))
+
+    def call(method, path, body=None):
+        return srv.dispatch(method, path, body, {})
+
+    assert call("POST", "/collections",
+                {"name": "g", "dimensions": 2})[0] == 201
+    assert call("POST", "/collections/g/vectors/batch", {"vectors": [
+        {"id": f"v{i}", "vector": [1.0, i / 8]} for i in range(8)]})[0] \
+        == 201
+    assert call("POST", "/collections/g/index",
+                {"tier": "ivf", "codes": "sq8", "nlist": 2})[0] == 200
+    assert call("POST", "/collections/g/search",
+                {"vector": [1.0, 0.5], "k": 2})[0] == 200
+    assert call("POST", "/collections/g/search", {"vector": "x"})[0] == 400
+    status, scrape = call("GET", "/metrics")
+    assert status == 200
+    panels = json.loads(generate_grafana_dashboard())["panels"]
+    exprs = [t["expr"] for p in panels for t in p["targets"]]
+    exprs += re.findall(r"expr: (.*)", generate_alerting_rules())
+    assert "needle_collection_memory_bytes" in _queried_series(exprs)
+    missing = _unemitted_series(exprs, scrape.body)
+    assert not missing, f"queried but never emitted: {missing}"
